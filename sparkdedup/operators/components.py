@@ -1,142 +1,152 @@
-"""Iterative hash-join connected components (min-label propagation).
+"""Connected components in one shuffle per round (min-label union-find).
 
-Relational formulation of the reference's union-merge seam generalized to a
-graph closure: each iteration is (a) a neighbor-min step — edges ⋈ labels,
-groupBy node, min — and (b) a pointer-jump step — labels ⋈ labels on
-label == file_id — which together converge in O(log diameter) rounds.
-Every iteration localCheckpoints to truncate lineage (Catalyst never does
-this for you — SURVEY.md §4), and the join keys are plain longs so AQE's
-skew-join splitting handles mega-cluster label skew; for the final
-assignment we additionally salt the hot-label aggregation.
+Each round replicates every edge (c = greatest, p = least) to both of its
+endpoints' keys and hash-repartitions on the key, so the task owning key
+v holds every edge incident to v. A numpy union-find over the task's
+edges (hook-to-min plus pointer jumping) emits (node, root) for every
+non-root node it touched; root is the minimum of the node's LOCAL
+component. The union of all tasks' pairs is the next round's edge set:
+it keeps connectivity, and every node's minimum neighbour never grows.
+
+Each task also reports two flags, and one aggregate over them decides
+whether to stop:
+  closed     every node the task touched is one of its keys, so each of
+             its local components is a whole component;
+  unchanged  the pairs it emitted equal its distinct input pairs.
+All closed: the labels are exact. All unchanged: every node has at most
+one parent and every parent is a root, i.e. the edges form a star forest
+rooted at each component's minimum. Either way the final label of a node
+is its minimum parent. When AQE coalesces a round's shuffle into one
+partition (every small graph), the first round is closed.
+
+A node's whole neighbourhood lands in one task, so a caller with
+unbounded-degree hubs (exact-copy stars) should fold them in afterwards
+instead of passing them here — DedupPipeline.run does.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
+
+_ROUND_SCHEMA = "c long, p long, closed boolean, unchanged boolean"
+
+
+def local_checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a bare localCheckpoint frame, else None (a
+    parquet scan, or a plan with operators above the checkpoint)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    rdd = plan.rdd()
+    return rdd if rdd.isLocallyCheckpointed() else None
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
     """Release a superseded localCheckpoint's storage blocks NOW.
 
     The JVM holds checkpointed RDDs strongly (they survive GC for the
-    session's lifetime — r6 verdict nit #1 generalized), so iterative
-    operators must drop their superseded rounds explicitly or a long
-    session accumulates one block set per iteration per run. Only call
-    once nothing will read the DataFrame again: a localCheckpoint has no
-    lineage to recompute from."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
-    except Exception:
-        pass  # not a bare LogicalRDD (not checkpoint-backed) — nothing to do
+    session's lifetime), so iterative operators must drop their
+    superseded rounds explicitly or a long session accumulates one block
+    set per iteration per run. Only call once nothing will read the
+    DataFrame again: a localCheckpoint has no lineage to recompute from.
+    A frame that is not checkpoint-backed is left alone."""
+    rdd = local_checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+
+
+def _union_find_round(batches):
+    """mapInArrow kernel: one task's edges (c, p, k) -> (c, p) = (node,
+    local root) for every non-root node, plus the task's closed and
+    unchanged flags on every row."""
+    cols = [(b.column("c").to_numpy(), b.column("p").to_numpy(),
+             b.column("k").to_numpy()) for b in batches if b.num_rows]
+    if not cols:
+        return
+    c, p, k = (np.concatenate(x) for x in zip(*cols))
+    nodes, inv = np.unique(np.concatenate([c, p]), return_inverse=True)
+    n = len(nodes)
+    ci, pi = inv[:len(c)], inv[len(c):]
+    # indices follow node order, so the min index of a tree is its min node
+    parent = np.arange(n)
+    while True:
+        rc, rp = parent[ci], parent[pi]
+        cross = rc != rp
+        if not cross.any():
+            break
+        # hook every root to the smallest root it shares an edge with,
+        # then jump pointers until each node points at its root
+        np.minimum.at(parent, np.maximum(rc, rp)[cross],
+                      np.minimum(rc, rp)[cross])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    child = np.flatnonzero(parent != np.arange(n))
+    # keys are a subset of the touched nodes
+    closed = len(np.unique(k)) == n
+    unchanged = np.array_equal(np.unique(ci * n + pi),
+                               child * n + parent[child])
+    rows = len(child)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes[child]), pa.array(nodes[parent[child]]),
+         pa.array(np.full(rows, closed)), pa.array(np.full(rows, unchanged))],
+        names=["c", "p", "closed", "unchanged"])
+
+
+def cc_round(edges: DataFrame) -> DataFrame:
+    """One round: edges(c, p) -> (c, p, closed, unchanged). One hash
+    exchange (edge replicated to both endpoint keys) and one mapInArrow."""
+    return (edges.select("c", "p", F.explode(F.array("c", "p")).alias("k"))
+            .repartition("k")
+            .mapInArrow(_union_find_round, _ROUND_SCHEMA))
 
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     cfg: DedupConfig,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, int]:
     """edges(src, dst) + nodes(file_id) -> clusters(file_id, cluster_id).
 
     cluster_id is the minimum file_id in the component. Returns
-    (clusters_df, iterations).
+    (clusters_df, iterations). Raises RuntimeError when the rounds do not
+    stop within cfg.max_cc_iters.
     """
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        # r7: partition the static edge table by the per-round join key
-        # ONCE, before the checkpoint pins it. The checkpointed RDD keeps
-        # this partitioning, so every iteration's edges-side exchange
-        # drops out of the round loop — at scale that is the largest
-        # per-round shuffle (edges >> labels).
-        .repartition("b")
-    )
-    if checkpoint:
-        # eager=False everywhere in this operator: the next action that
-        # touches the frame materializes the checkpoint as part of its own
-        # job, so each round costs ONE blocking job (the convergence sum)
-        # instead of two (checkpoint job + sum job) — pure driver-latency
-        # removal, the per-round dataflow is unchanged
-        sym = sym.localCheckpoint(eager=False)
-
-    # Iterate ONLY over edge-touched nodes: a node with no edges keeps
-    # label == file_id at every step (neighbor-min finds no neighbor,
-    # pointer-jump follows the identity), so singletons — the vast
-    # majority of a dedup corpus — pay zero iteration cost. They rejoin
-    # via one left join at the end. At 64k files / 10.5k edges this
-    # shrinks every per-iteration join, groupBy, checkpoint, and
-    # convergence scan ~4x; at 10^12 files with a few-percent dup rate
-    # it is the difference between iterating over 10^12 and 10^10 rows.
-    touched = sym.select(F.col("a").alias("file_id")).distinct()
-    labels = touched.select(F.col("file_id"), F.col("file_id").alias("label"))
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=False)
-    # computing the initial sum NOW also materializes the labels (and sym)
-    # checkpoints in the same job
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).first()["s"]
-
+    e = (edges.select(F.greatest("src", "dst").cast("long").alias("c"),
+                      F.least("src", "dst").cast("long").alias("p"))
+         .filter(F.col("c") != F.col("p")))
+    prev = None
     for it in range(1, cfg.max_cc_iters + 1):
-        # neighbor-min: smallest label among self + neighbors, as ONE
-        # union + aggregate — the join emits (a, neighbor label) rows,
-        # the labels branch contributes every node's own label, and a
-        # single groupBy(a) min covers both the no-neighbor case (old
-        # left-join + coalesce) and the neighbor min (old two-phase agg).
-        # r7: the former salted (a, salt) pre-aggregation is gone — min
-        # is a partial-aggregating HashAggregate, so the reduce side of
-        # the exchange receives at most one row per key PER MAP TASK
-        # regardless of how many rows share the key; the salt bounded
-        # exactly the same quantity a second time and cost one extra
-        # exchange + aggregate every round. Join-side skew (a hot label
-        # or a high-degree node) stays with AQE's skew-join splitting.
-        updated = (
-            sym.join(labels.withColumnRenamed("file_id", "b"), "b")
-            .select("a", "label")
-            .unionByName(labels.select(F.col("file_id").alias("a"), "label"))
-            .groupBy("a").agg(F.min("label").alias("label"))
-            .withColumnRenamed("a", "file_id")
-        )
-        # pointer jump: label <- label(label) (path halving)
-        jump = (
-            updated.alias("l")
-            .join(updated.select(F.col("file_id").alias("label"),
-                                 F.col("label").alias("parent")).alias("p"),
-                  "label", "left")
-            .select(F.col("file_id"),
-                    F.least("label", F.coalesce("parent", "label")).alias("label"))
-        )
-        if checkpoint:
-            jump = jump.localCheckpoint(eager=False)
-        # convergence: per-node labels are monotonically non-increasing
-        # (every step takes least(...)), so the label-sum strictly
-        # decreases until the fixpoint — one narrow aggregate per round
-        # instead of a self-join compare; this action also materializes
-        # the round's lazy checkpoint
-        new_sum = jump.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        # the .first() above materialized this round's checkpoint, so the
-        # previous round's blocks (and the initial labels') are now
-        # unreachable by any future plan — release them instead of letting
-        # them pile up one block set per iteration for the session's life
-        if checkpoint:
-            release_local_checkpoint(labels)
-        labels = jump
-        if new_sum == prev_sum:
+        # eager=False saves one job per round: the flags aggregate below
+        # computes the kernel into the checkpoint blocks in its own job.
+        # It is not lazy upstream: under AQE the call itself runs the
+        # round's shuffle map stage (and, in round 1, every shuffle stage
+        # of the input plan) before it returns.
+        rnd = cc_round(e).localCheckpoint(eager=False)
+        closed, unchanged = rnd.agg(F.min("closed"),
+                                    F.min("unchanged")).first()
+        # this round's blocks now hold everything the next round reads
+        if prev is not None:
+            release_local_checkpoint(prev)
+        prev = rnd
+        e = rnd.select("c", "p")
+        # closed is NULL when the round has no rows (no edges at all)
+        if closed is not False or unchanged:
             break
-        prev_sum = new_sum
     else:
-        it = cfg.max_cc_iters
-    out = _with_singletons(nodes, labels), it
-    if checkpoint:
-        release_local_checkpoint(sym)
-    return out
+        raise RuntimeError(
+            f"connected components did not converge in {cfg.max_cc_iters} "
+            "rounds")
+    labels = e.groupBy(F.col("c").alias("file_id")).agg(
+        F.min("p").alias("label"))
+    return _with_singletons(nodes, labels), it
 
 
 def cluster_representatives(

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
-from sparkdedup.operators.components import connected_components
+from sparkdedup.operators.components import (connected_components,
+                                              local_checkpoint_rdd)
 from sparkdedup.operators.containment import (anchor_containment_candidates,
                                               verify_containment)
 from sparkdedup.operators.lsh import candidate_pairs
@@ -133,11 +134,13 @@ class DedupPipeline:
         (mdir / f"{stage}.json").write_text(json.dumps(payload, indent=2))
 
     def _checkpoint(self, df: DataFrame, stage: str,
-                    partition_by: str | None = None) -> DataFrame:
+                    partition_by: str | None = None,
+                    t0: float | None = None) -> DataFrame:
         """Write stage output to parquet and read back (lineage cut + resume
-        point). Without a workdir, localCheckpoint instead."""
+        point). Without a workdir, localCheckpoint instead. The stage's
+        seconds run from t0 (default: now) to the end of the write."""
         d = self._stage_dir(stage)
-        t0 = time.time()
+        t0 = time.time() if t0 is None else t0
         if d is None:
             out = df.localCheckpoint()
             n = out.count()
@@ -171,13 +174,9 @@ class DedupPipeline:
         output has been materialized to parquet or its own checkpoint, so
         intermediates (CC rounds, containment candidates, LSH bucket
         sizes) are unreachable by any future plan."""
-        keep_ids = set()
-        for df in keep:
-            try:
-                keep_ids.add(
-                    df._jdf.queryExecution().analyzed().rdd().id())
-            except Exception:
-                pass  # parquet-backed stage output — nothing persisted
+        # a parquet-backed stage output has no persisted RDD to keep
+        keep_ids = {rdd.id() for rdd in map(local_checkpoint_rdd, keep)
+                    if rdd is not None}
         sc = self.spark.sparkContext._jsc.sc()
         for rid in self._persistent_ids() - before - keep_ids:
             sc.unpersistRDD(rid, False)
@@ -219,6 +218,10 @@ class DedupPipeline:
             edges = self._load("edges")
             self.metrics["stages"]["edges"] = {"resumed": True}
         else:
+            # candidate_pairs runs jobs at call time (its has_big probe
+            # and band checkpoints), so the stage clock starts here
+            t_edges = time.time()
+            cont_s = 0.0
             cands = candidate_pairs(rep_sigs, cfg)
             near = verify_candidates(cands, rep_sigs, cfg).withColumn(
                 "source", F.lit("lsh"))
@@ -239,8 +242,9 @@ class DedupPipeline:
                 t_cc0 = time.time()
                 cont_cand = anchor_containment_candidates(rep_sigs, cfg)
                 cont_cand = cont_cand.localCheckpoint()
+                cont_s = time.time() - t_cc0
                 self._write_metrics("containment_candidates", {
-                    "seconds": round(time.time() - t_cc0, 3)})
+                    "seconds": round(cont_s, 3)})
                 # content is re-joined ONLY for candidate ids: semi-join the
                 # (small) candidate id set against the signature keys and
                 # broadcast it into the files scan — the corpus content
@@ -267,7 +271,9 @@ class DedupPipeline:
                     F.lit("containment").alias("source"))
                 edges = edges.unionByName(cont_e)
 
-            edges = self._checkpoint(edges, "edges")
+            # shift the start by the containment-candidates seconds so
+            # the two stages do not count the same wall time twice
+            edges = self._checkpoint(edges, "edges", t0=t_edges + cont_s)
 
         # the edges checkpoint above was rep_sigs' last consumer; release
         # its storage now so long sessions don't accumulate stage caches
@@ -278,13 +284,26 @@ class DedupPipeline:
             clusters = self._load("clusters")
             self.metrics["stages"]["clusters"] = {"resumed": True}
         else:
-            # near-dup + exact edges define clusters; containment edges join
-            # clusters only if cluster_contained is set (default: they do)
+            # Exact copies fold in after CC. A sha group's edges form a
+            # star (rep -> every copy), and CC puts a node's whole
+            # neighbourhood in one task, so CC runs only over the lsh and
+            # containment edges, which touch reps alone. Each copy then
+            # takes its rep's cluster: the rep is its sha group's minimum
+            # file_id, so every component minimum (cluster_id) is the
+            # same as with the stars inside.
             nodes = sigs.select("file_id")
-            cluster_edges = edges.select("src", "dst")
+            is_sha = F.col("source") == "sha"
+            rep_of = edges.filter(is_sha).select(
+                F.col("dst").alias("file_id"), F.col("src").alias("rep"))
             t_cc = time.time()
-            clusters, iters = connected_components(cluster_edges, nodes, cfg)
+            rep_clusters, iters = connected_components(
+                edges.filter(~is_sha).select("src", "dst"), nodes, cfg)
             self.metrics["cc_seconds"] = round(time.time() - t_cc, 3)
+            clusters = (
+                nodes.join(rep_of, "file_id", "left")
+                .select("file_id", F.coalesce("rep", "file_id").alias("rep"))
+                .join(rep_clusters.withColumnRenamed("file_id", "rep"), "rep")
+                .select("file_id", "cluster_id"))
             clusters = self._checkpoint(clusters, "clusters")
             self.metrics["cc_iterations"] = iters
 

@@ -126,7 +126,11 @@ def _drain_memory_sink(spark, name: str):
     caller but lets the rows be GC'd as soon as the returned frame is
     released. Without this every invocation leaked one result-sized
     in-memory table until session end — the gate/bench run 4+ rounds of
-    4 streaming queries in one session (r7 storage hygiene)."""
+    4 streaming queries in one session (r7 storage hygiene).
+
+    Classic PySpark only: under Spark Connect spark.table() resolves
+    lazily, so the returned frame would fail with TABLE_OR_VIEW_NOT_FOUND
+    once the view is dropped."""
     df = spark.table(name)
     spark.catalog.dropTempView(name)
     return df
@@ -156,9 +160,9 @@ FROM documents GROUP BY 1
 
 
 def q_dedup_clusters_docs(spark, sf_dir):
-    """Exact-duplicate clusters via OUR iterative hash-join connected
-    components operator, oracle-checked against a window-min (the CC
-    fixpoint on star graphs equals min-per-group)."""
+    """Exact-duplicate clusters via OUR connected-components operator,
+    oracle-checked against a window-min (the CC fixpoint on star graphs
+    equals min-per-group)."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.components import connected_components
 
@@ -168,11 +172,8 @@ def q_dedup_clusters_docs(spark, sf_dir):
     edges = (docs.join(reps, "h")
              .filter(F.col("file_id") != F.col("rep"))
              .select(F.col("rep").alias("src"), F.col("file_id").alias("dst")))
-    # checkpoint=True: each CC round localCheckpoints, otherwise iteration
-    # i's plan re-executes iterations 1..i-1 (lineage grows quadratically —
-    # measured 9.6s -> 2.4s at sf0.1)
     clusters, _ = connected_components(
-        edges, docs.select("file_id"), DedupConfig(), checkpoint=True)
+        edges, docs.select("file_id"), DedupConfig())
     return clusters.select(F.col("file_id").alias("doc_id"),
                            F.col("cluster_id"))
 
@@ -657,7 +658,7 @@ WHERE round(inter * 1.0 / (na.n + nb.n - inter), 6) >= 0.5
 
 def q_neardup_clusters_docs(spark, sf_dir):
     """END-TO-END near-duplicate clustering: MinHash-LSH candidate pruning
-    -> exact 3-gram Jaccard verification (tau=0.5) -> OUR iterative
+    -> exact 3-gram Jaccard verification (tau=0.5) -> OUR
     connected-components operator -> a cluster id for every document
     (singletons map to themselves).
 
@@ -672,8 +673,7 @@ def q_neardup_clusters_docs(spark, sf_dir):
     pairs = q_minhash_lsh_docs(spark, sf_dir)  # (src, dst, jaccard) exact
     edges = pairs.select("src", "dst")
     nodes = docs.select(F.col("doc_id").alias("file_id"))
-    clusters, _ = connected_components(edges, nodes, DedupConfig(),
-                                       checkpoint=True)
+    clusters, _ = connected_components(edges, nodes, DedupConfig())
     return clusters.select(F.col("file_id").alias("doc_id"), "cluster_id")
 
 
@@ -2365,7 +2365,7 @@ WHERE a.vec_id < b.vec_id
 def q_embedding_dedup_docs(spark, sf_dir):
     """Embedding-cosine near-duplicate DEDUP (the semantic-dedup shape of
     a training-data pipeline): exact cosine pairs at tau=0.4 (blocked
-    GEMM tiles, same kernel as embedding_neardup_pairs) -> OUR iterative
+    GEMM tiles, same kernel as embedding_neardup_pairs) -> OUR
     connected-components operator -> one cluster id per vector, keep-min
     representative per component (singletons map to themselves). The
     oracle recomputes the exact pair set in SQL and closes it with a
@@ -2384,7 +2384,7 @@ def q_embedding_dedup_docs(spark, sf_dir):
     clusters, _ = connected_components(
         pairs.select("src", "dst"),
         emb.select(F.col("vec_id").alias("file_id")),
-        DedupConfig(), checkpoint=True)
+        DedupConfig())
     return clusters.select(F.col("file_id").alias("vec_id"), "cluster_id")
 
 

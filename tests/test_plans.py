@@ -27,6 +27,9 @@ def test_top_revenue_orders_plan(spark):
     # fact table against unfiltered orders once orders outgrew the
     # broadcast estimate
     assert "SortMergeJoin" not in plan
+    # the shuffle_hash hint fixes the strategy at every scale; without it
+    # this tiny fixture would broadcast and the line above would still pass
+    assert "ShuffledHashJoin" in plan
 
 
 def test_pricing_summary_scan_pruned(spark):
