@@ -1,7 +1,10 @@
 .PHONY: test bench dist scaling clean
 
+# Tier-1: the whole suite, one Spark core per CPU, shuffle spill in a
+# scratch dir, no .pytest_cache left in the tree
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

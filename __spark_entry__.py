@@ -12,38 +12,14 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
-import zipfile
 from collections.abc import Callable
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the sparkdedup package to python workers (the driver may run
-    from any cwd; workers don't inherit its sys.path). Equivalent to
-    spark-submit --py-files."""
-    key = id(spark.sparkContext)
-    if key in _SHIPPED_SESSIONS:
-        return
-    zpath = os.path.join(tempfile.gettempdir(), "sparkdedup_pkg.zip")
-    pkg = os.path.join(_REPO, "sparkdedup")
-    sources = [os.path.join(root, n)
-               for root, _dirs, names in os.walk(pkg)
-               for n in names if n.endswith(".py")]
-    newest = max(os.path.getmtime(f) for f in sources)
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
-        with zipfile.ZipFile(zpath, "w") as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_SESSIONS.add(key)
+from sparkdedup.session import _ship_package  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -52,14 +28,14 @@ def entry(spark: SparkSession) -> DataFrame:
     neardup_clusters_docs = the engine's full core shape in one query:
     MinHash signatures -> LSH banding -> exact-Jaccard verification ->
     iterative connected components -> a cluster id per document."""
-    _ensure_shipped(spark)
+    _ship_package(spark)
     from sparkdedup.queries import QUERIES
 
     return QUERIES["neardup_clusters_docs"](spark, "/root/testdata/sf0.001")
 
 
 def _wrapped(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_shipped(spark)
+    _ship_package(spark)
     from sparkdedup.queries import QUERIES
 
     return QUERIES[name](spark, sf_dir)

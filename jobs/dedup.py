@@ -8,7 +8,8 @@ Usage:
 Reads files(repo, path, commit, lang, content) — Iceberg when a catalog is
 on the classpath (spark.read.format("iceberg")), parquet otherwise — and
 writes signatures/edges/clusters parquet + metrics under
-<workdir>/<config_hash>/. Rerunning resumes from the last completed stage.
+<workdir>/<run_key>/ (config hash + --no-containment). Rerunning with the
+same options resumes from the last completed stage.
 """
 
 from __future__ import annotations

@@ -31,8 +31,7 @@ class DedupConfig:
     rows_per_band: int = 8           # rows per band (16*8 = 128)
     kmv_k: int = 128                 # k-minimum-values signature size
     jaccard_threshold: float = 0.70  # near-dup verification tau
-    containment_min_shared: int = 8  # min shared KMV hashes for containment cand.
-    containment_posting_cap: int = 32  # drop boilerplate-hot inverted-index hashes
+    containment_posting_cap: int = 32  # drop boilerplate-hot anchor postings
     # winnowed-anchor containment (the pipeline path; MOSS-style guarantee
     # on the positional shingle stream — see operators/containment.py)
     containment_anchor_window: int = 128  # w: window size over shingle stream

@@ -1,18 +1,17 @@
-"""Substring-containment pass: KMV inverted-index candidates + exact verify.
+"""Substring-containment pass: winnowed-anchor candidates + exact verify.
 
-A file A pasted verbatim inside a larger file B shares ALL of A's shingles,
-so A's k-minimum shingle hashes appear in B's shingle set, and in
-expectation k·|A|/|B| of them land inside B's own k-minimum signature.
-Candidate generation is therefore an inverted-index self-join on individual
-KMV hash values (explode -> join -> pair-count >= min_shared), with hot
-hashes (boilerplate shingles, huge posting lists) dropped by a posting cap —
-that is the skew guard, same reasoning as LSH bucket caps.
+A file A pasted verbatim inside a larger file B makes A's positional
+shingle-hash stream a run of B's, so every w-window minimum A probes with
+is also a window minimum B keeps at the occurrence offset (MOSS-style
+winnowing). Candidate generation is therefore one probe->index equi-join
+on anchor values, with hot anchors (boilerplate shingles, huge posting
+lists) dropped by a posting cap — that is the skew guard, same reasoning
+as LSH bucket caps. A containee needs >= containment_anchor_window
+shingles to be found.
 
 Verification is exact: join contents and check substring containment
 JVM-side (F.instr) — zero false positives, which makes this pass's output
-the ground truth for `contained` pairs at any scale. An optional deeper
-LCS verifier (suffix-array based, sparkdedup/functions/suffix.py) runs in
-applyInPandas per candidate when exact whole-file containment fails.
+the ground truth for `contained` pairs at any scale.
 """
 
 from __future__ import annotations
@@ -85,8 +84,7 @@ def winnowed_gram_index(docs: DataFrame, id_col: str, text_col: str,
 def anchor_containment_candidates(signatures: DataFrame,
                                   cfg: DedupConfig) -> DataFrame:
     """(src, dst, shared) candidates from the winnowed shingle-stream
-    anchor index (the pipeline's scale path; replaces the KMV inverted-
-    index SELF-join, r5 verdict perf item #4).
+    anchor index (the pipeline's containment candidate generator).
 
     Index side: explode(anchors) — ~2/(w+1) rows per shingle position,
     ~2·n/w per doc. Probe side: explode(probes) — <= containment_probe_
@@ -95,13 +93,13 @@ def anchor_containment_candidates(signatures: DataFrame,
     one of A's own w-blocks, and B keeps the identical window minimum at
     the occurrence offset (MOSS argument, _anchors_and_probes docstring).
 
-    Scale shape vs the KMV scheme: ONE probe->index equi-join with a tiny
-    probe side instead of a full inverted-index self-join, and NO
-    pair-count aggregation (the guarantee is per-probe, not count-based);
-    worst-case join output is n_probes * posting_cap per doc, bounded by
-    the same hot-posting cap that kills boilerplate-header buckets
-    (shared license headers make identical window minima across a whole
-    group — exactly the mega-bucket skew guard reasoning as LSH caps).
+    Scale shape: ONE probe->index equi-join with a tiny probe side, no
+    self-join and NO pair-count aggregation (the guarantee is per-probe,
+    not count-based); worst-case join output is n_probes * posting_cap
+    per doc, bounded by the same hot-posting cap that kills
+    boilerplate-header buckets (shared license headers make identical
+    window minima across a whole group — exactly the mega-bucket skew
+    guard reasoning as LSH caps).
     `shared` = number of distinct matching anchor values (diagnostic).
     """
     idx = signatures.select(
@@ -119,44 +117,6 @@ def anchor_containment_candidates(signatures: DataFrame,
         .filter((F.col("src") != F.col("dst")) & (F.col("na") <= F.col("nb")))
         .groupBy("src", "dst")
         .agg(F.countDistinct("gh").alias("shared"))
-    )
-
-
-def containment_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(src, dst, shared) pairs sharing >= min_shared KMV hash values.
-
-    src/dst ordered by n_shingles (src = smaller file = containee).
-
-    NOTE: the pipeline uses anchor_containment_candidates (above) — one
-    probe->index join instead of this inverted-index SELF-join with its
-    pair-count aggregation. This variant remains the SMALL-containee
-    fallback: the anchor scheme needs >= containment_anchor_window
-    shingles in the containee regardless of host size, while this one
-    detects containees of ANY size as long as n_host/n_containee <~
-    kmv_k/min_shared (= 16 at defaults) — complementary envelopes, pinned
-    in test_lsh_caps.py::test_containment_candidate_schemes_boundary.
-    """
-    inv = signatures.select(
-        "file_id", "n_shingles", F.explode("kmv").alias("h"))
-    hot = inv.groupBy("h").agg(F.count("*").alias("plen"))
-    inv = inv.join(hot, "h").filter(F.col("plen") <= cfg.containment_posting_cap)
-
-    a = inv.select(F.col("h"), F.col("file_id").alias("fa"),
-                   F.col("n_shingles").alias("na"))
-    b = inv.select(F.col("h"), F.col("file_id").alias("fb"),
-                   F.col("n_shingles").alias("nb"))
-    pairs = (
-        a.join(b, "h")
-        .filter(F.col("fa") < F.col("fb"))
-        .groupBy("fa", "fb", "na", "nb")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= cfg.containment_min_shared)
-    )
-    # containee = the side with fewer shingles
-    return pairs.select(
-        F.when(F.col("na") <= F.col("nb"), F.col("fa")).otherwise(F.col("fb")).alias("src"),
-        F.when(F.col("na") <= F.col("nb"), F.col("fb")).otherwise(F.col("fa")).alias("dst"),
-        "shared",
     )
 
 

@@ -91,34 +91,6 @@ def _topk_ranked(scored: DataFrame, k: int) -> DataFrame:
                     F.col("rank").cast("long").alias("rank")))
 
 
-def ann_lsh_topk(emb: DataFrame, dim: int, k: int = 5, n_tables: int = 8,
-                 n_bits: int = 10, seed: int = 9001,
-                 round_to: int = 4) -> DataFrame:
-    """Approximate top-k cosine neighbors for every vector via bucketed
-    candidate generation + exact GEMM-kernel rerank (score_pairs).
-    Returns (qid, nid, cosine, rank).
-
-    `dim` is REQUIRED: ArrayType carries no element count in the schema,
-    and a driver-side .first() probe would trigger a full scan job before
-    the real plan — the caller always knows its embedding width."""
-    buckets = hyperplane_buckets(emb, dim, n_tables, n_bits, seed)
-    # one packed join key (table/bucket ranges are disjoint powers of two,
-    # so the packing is bijective) and a shuffled-hash join: the bucket
-    # tables are opaque kernel outputs with no stats, so Catalyst defaults
-    # to sort-merge — two O(n_tables*N) sorts that a hash build skips
-    # (measured 4.7s -> 1.6s on the lookup variant at sf1.0)
-    pk = (F.col("table").cast("long") * (1 << n_bits) + F.col("bucket"))
-    a = buckets.select(pk.alias("k"), F.col("vid").alias("qid"))
-    b = buckets.select(pk.alias("k"), F.col("vid").alias("nid"))
-    cands = (a.join(b.hint("shuffle_hash"), "k")
-             .filter(F.col("qid") != F.col("nid"))
-             .select("qid", "nid").distinct())
-
-    e1 = emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    e2 = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nv"))
-    return _topk_ranked(score_pairs(cands, e1, e2, round_to), k)
-
-
 def ann_lsh_lookup(probes: DataFrame, index: DataFrame, dim: int,
                    k: int = 1, n_tables: int = 64, n_bits: int = 16,
                    seed: int = 9001, round_to: int = 4,
@@ -140,8 +112,11 @@ def ann_lsh_lookup(probes: DataFrame, index: DataFrame, dim: int,
                             id_col=id_col, vec_col=vec_col)
     ib = hyperplane_buckets(index, dim, n_tables, n_bits, seed,
                             id_col=id_col, vec_col=vec_col)
-    # packed key + shuffled-hash join — same candidate set, no sort pass
-    # over either O(n_tables*N) bucket table (see ann_lsh_topk)
+    # one packed join key (table/bucket ranges are disjoint powers of two,
+    # so the packing is bijective) and a shuffled-hash join: the bucket
+    # tables are opaque kernel outputs with no stats, so Catalyst defaults
+    # to sort-merge — two O(n_tables*N) sorts that a hash build skips
+    # (measured 4.7s -> 1.6s at sf1.0)
     pk = (F.col("table").cast("long") * (1 << n_bits) + F.col("bucket"))
     cands = (pb.select(pk.alias("k"), F.col("vid").alias("qid"))
              .join(ib.select(pk.alias("k"), F.col("vid").alias("nid"))
@@ -166,7 +141,7 @@ def cosine_pairs_blocked(emb: DataFrame, threshold: float,
     Arrow batch. Per-element expression trees (zip_with + aggregate) pay
     interpreter overhead per pair; a GEMM tile is ~100x faster at the
     same exactness. For high thresholds use the sub-quadratic LSH path
-    (ann_lsh_topk / the MinHash pipeline) instead.
+    (ann_lsh_lookup / the MinHash pipeline) instead.
 
     n_blocks: number of row blocks (grid has n_blocks*(n_blocks+1)/2
     tiles — size it so a tile's two blocks fit executor memory)."""
@@ -263,33 +238,13 @@ def _fit_codebook(df: DataFrame, n_centroids: int, seed: int,
     return cents
 
 
-def _cell_assign(df: DataFrame, cents: np.ndarray, n_cells: int,
-                 id_col: str, vec_col: str) -> DataFrame:
-    """(vid, cell) for each vector's n_cells nearest centroids, vectorized
-    per Arrow batch (one GEMM against the broadcast codebook)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True),
-                            1e-12)
-            sim = v @ cents.T
-            top = np.argsort(-sim, axis=1)[:, :n_cells]
-            yield pd.DataFrame({
-                "vid": np.repeat(pdf[id_col].to_numpy(), n_cells),
-                "cell": top.reshape(-1)})
-
-    return df.mapInPandas(run, schema="vid long, cell int")
-
-
 def _cell_vec_rows(df: DataFrame, cents: np.ndarray, n_cells: int,
                    id_col: str, vec_col: str, out_id: str,
                    out_vec: str) -> DataFrame:
     """(cell, id, vec-as-float64) for each vector's n_cells nearest
-    centroids — the SAME assignment as _cell_assign (identical stack /
-    normalize / argsort arithmetic), fused with a vector passthrough so no
-    join is ever needed to re-attach embeddings to cell entries.  The
+    centroids (one GEMM against the broadcast codebook per Arrow batch),
+    fused with a vector passthrough so no join is ever needed to
+    re-attach embeddings to cell entries.  The
     float32→float64 upcast is exact, so downstream cosine arithmetic is
     bit-identical to score_pairs' own upcast."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -312,8 +267,7 @@ def _cell_vec_rows(df: DataFrame, cents: np.ndarray, n_cells: int,
         run, schema=f"cell int, {out_id} long, {out_vec} array<double>")
 
 
-def _tile_topk_kernel(k: int, round_to: int, exclude_self: bool,
-                      chunk_cells: int = 4_000_000):
+def _tile_topk_kernel(k: int, round_to: int, chunk_cells: int = 4_000_000):
     """Per-tile GEMM + per-probe partial top-k.  Each input row is one
     (probe-group, index-block) tile: cosines for the whole tile come from
     one BLAS matmul, and only each probe's top-k rows (under the exact
@@ -323,8 +277,6 @@ def _tile_topk_kernel(k: int, round_to: int, exclude_self: bool,
     top-k is a subset of the union of tile top-ks.  Ordering uses an
     integer key (rounded cosine is exactly d/10^4) so ties break
     identically to the SQL window (cosine DESC, nid ASC)."""
-    i64min = np.iinfo(np.int64).min
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for prows, irows in zip(pdf["prows"], pdf["irows"]):
@@ -351,18 +303,12 @@ def _tile_topk_kernel(k: int, round_to: int, exclude_self: bool,
                     cos = np.round((q @ Xi.T) / np.outer(qn, ni), round_to)
                     ci = np.rint(cos * 10_000.0).astype(np.int64)
                     key = ci * n_i - tie
-                    if exclude_self:
-                        key = np.where(qid_c[:, None] == nids[None, :],
-                                       i64min, key)
                     top = np.argsort(-key, axis=1)[:, :kk]
                     out_q = np.repeat(qid_c, kk)
                     qidx = np.repeat(np.arange(len(qid_c)), kk)
                     cols = top.reshape(-1)
                     out_n = nids[cols]
                     out_c = cos[qidx, cols]
-                    if exclude_self:
-                        m = out_q != out_n
-                        out_q, out_n, out_c = out_q[m], out_n[m], out_c[m]
                     yield pd.DataFrame({"qid": out_q, "nid": out_n,
                                         "cosine": out_c})
 
@@ -371,10 +317,9 @@ def _tile_topk_kernel(k: int, round_to: int, exclude_self: bool,
 
 def _ivf_tiled_topk(pside_df: DataFrame, iside_df: DataFrame,
                     cents: np.ndarray, n_probe: int, index_assign: int,
-                    k: int, round_to: int, exclude_self: bool,
-                    id_col: str, vec_col: str,
+                    k: int, round_to: int, id_col: str, vec_col: str,
                     probe_salt: int = 8) -> DataFrame:
-    """Shared IVF execution: posting lists grouped per cell (index side),
+    """IVF execution: posting lists grouped per cell (index side),
     probe groups per (cell, salt), tiles joined on cell, per-tile GEMM
     top-k, exact global window over the tiny union.  Candidate SETS are
     identical to the old pair-join plan (same assignment arithmetic), but
@@ -393,39 +338,12 @@ def _ivf_tiled_topk(pside_df: DataFrame, iside_df: DataFrame,
              .groupBy("cell", "salt")
              .agg(F.collect_list(F.struct("qid", "qv")).alias("prows")))
     scored = (pside.join(iside, "cell")
-              .mapInPandas(_tile_topk_kernel(k, round_to, exclude_self),
+              .mapInPandas(_tile_topk_kernel(k, round_to),
                            schema="qid long, nid long, cosine double")
               # a pair probed via 2+ shared cells scores identically in
               # each — drop exact-duplicate rows before ranking
               .distinct())
     return _topk_ranked(scored, k)
-
-
-def ann_ivf_topk(emb: DataFrame, k: int = 5, n_centroids: int = 16,
-                 n_probe: int = 4, seed: int = 9001,
-                 sample_cap: int = 65536, round_to: int = 4,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 index_assign: int = 1,
-                 cache_key: str | None = None) -> DataFrame:
-    """IVF approximate top-k cosine neighbors: a k-means coarse quantizer
-    partitions vectors into cells (inverted lists); each query probes its
-    n_probe nearest cells and reranks candidates exactly.
-
-    The codebook is a small-model step (n_centroids x dim floats,
-    broadcast in the kernel closure; bounded trainer sample — see
-    _fit_codebook, memoized under cache_key); ALL per-vector work stays
-    distributed. index_assign > 1 multi-assigns each index vector to its
-    top index_assign cells — the standard IVF recall hedge for
-    cell-boundary vectors (the empirically observed miss mode), costing a
-    proportional increase in postings, not in rerank exactness.
-    Complements ann_lsh_topk: IVF adapts to the data distribution where
-    hyperplane LSH is oblivious."""
-    cents = _fit_codebook(emb, n_centroids, seed, sample_cap,
-                          id_col, vec_col, cache_key)
-    return _ivf_tiled_topk(emb, emb, cents, n_probe, index_assign, k,
-                           round_to, exclude_self=True,
-                           id_col=id_col, vec_col=vec_col)
 
 
 def ann_ivf_lookup(probes: DataFrame, index: DataFrame, k: int = 1,
@@ -450,8 +368,7 @@ def ann_ivf_lookup(probes: DataFrame, index: DataFrame, k: int = 1,
     cents = _fit_codebook(index, n_centroids, seed, sample_cap,
                           id_col, vec_col, cache_key)
     return _ivf_tiled_topk(probes, index, cents, n_probe, index_assign, k,
-                           round_to, exclude_self=False,
-                           id_col=id_col, vec_col=vec_col)
+                           round_to, id_col=id_col, vec_col=vec_col)
 
 
 def ann_brute_topk(emb: DataFrame, queries: DataFrame, k: int = 5,

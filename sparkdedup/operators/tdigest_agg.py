@@ -1,8 +1,8 @@
 """t-digest build / merge / quantile as a distributed Spark aggregation.
 
-Upgrades §2.4 t-digest from decoder-only (sketch_io/tdigest_decoder.py) to
-a full mergeable aggregation. Behavior spec: the reference's merging
-t-digest (tdigest/double.go:102-563 — behavior cited, no code copied);
+§2.4 t-digest as a full mergeable aggregation. Behavior spec: the
+reference's merging t-digest (tdigest/double.go:102-563 — behavior cited,
+no code copied);
 algorithm from the PUBLISHED merging-t-digest design (Dunning & Ertl,
 "Computing Extremely Accurate Quantiles Using t-Digests",
 arXiv:1902.04023): clusters kept small near the tails via the k1 (arcsine)

@@ -6,10 +6,12 @@ Stage graph (SURVEY.md §3.4):
         -> [connected components] -> clusters
 
 Checkpoint protocol: every stage writes parquet under
-  <workdir>/<config_hash>/<stage>/   with a _SUCCESS marker (Spark's own)
-  and a sidecar <workdir>/<config_hash>/_metrics/<stage>.json
-A rerun skips any stage whose _SUCCESS exists (resume mid-pipeline);
-reading back from parquet also truncates lineage between stages.
+  <workdir>/<run_key>/<stage>/   with a _SUCCESS marker (Spark's own)
+  and a sidecar <workdir>/<run_key>/_metrics/<stage>.json
+where run_key hashes the config and the pipeline options that change a
+stage's output (enable_containment). A rerun skips any stage whose
+_SUCCESS exists (resume mid-pipeline); reading back from parquet also
+truncates lineage between stages.
 
 Exact duplicates are collapsed BEFORE LSH (groupBy sha, keep min file_id):
 this removes the largest skew source (identical files all landing in the
@@ -18,6 +20,7 @@ same buckets) and shrinks every downstream shuffle.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from dataclasses import dataclass, field
@@ -116,10 +119,20 @@ class DedupPipeline:
 
     # -- checkpoint helpers --------------------------------------------------
 
+    @property
+    def run_key(self) -> str:
+        """Names this run's checkpoint directory: the config hash plus
+        every pipeline option that changes a stage's output, so a rerun
+        with a different option recomputes instead of resuming."""
+        blob = json.dumps({"config": self.cfg.config_hash(),
+                           "enable_containment": self.enable_containment},
+                          sort_keys=True).encode()
+        return hashlib.sha256(blob).hexdigest()[:16]
+
     def _stage_dir(self, stage: str) -> Path | None:
         if self.workdir is None:
             return None
-        return self.workdir / self.cfg.config_hash() / stage
+        return self.workdir / self.run_key / stage
 
     def _is_done(self, stage: str) -> bool:
         d = self._stage_dir(stage)
@@ -129,7 +142,7 @@ class DedupPipeline:
         self.metrics["stages"][stage] = payload
         if self.workdir is None:
             return
-        mdir = self.workdir / self.cfg.config_hash() / "_metrics"
+        mdir = self._stage_dir("_metrics")
         mdir.mkdir(parents=True, exist_ok=True)
         (mdir / f"{stage}.json").write_text(json.dumps(payload, indent=2))
 
@@ -310,6 +323,7 @@ class DedupPipeline:
         self._sweep_persisted(persisted_before, [sigs, edges, clusters])
         self.metrics["total_seconds"] = round(time.time() - t_start, 3)
         self.metrics["config_hash"] = self.cfg.config_hash()
+        self.metrics["run_key"] = self.run_key
         return PipelineResult(sigs, edges, clusters, self.metrics)
 
     def representatives(self, result: PipelineResult) -> DataFrame:

@@ -2332,7 +2332,7 @@ def q_embedding_neardup_pairs(spark, sf_dir):
     candidate scheme loses recall — the exact answer is inherently an
     O(N^2)-compute problem and the scalable form is the tiled matrix
     multiply (each tile one BLAS call per Arrow batch, grid parallel across
-    executors). High-tau dedup should use ann_lsh_topk / MinHash instead."""
+    executors). High-tau dedup should use ann_lsh_lookup / MinHash instead."""
     from sparkdedup.operators.similarity import cosine_pairs_blocked
 
     emb = _read(spark, sf_dir, "embeddings")

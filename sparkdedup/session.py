@@ -8,6 +8,7 @@ to a real cluster (explicit repartition by file_id, AQE skew handling on).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -78,23 +79,32 @@ def build_session(
     return spark
 
 
+# SparkContexts that already have the package zip, held by identity and
+# weakly: a context created after another one stops ships again, even if it
+# reuses the stopped one's address (an id() memo would skip it)
+_SHIPPED: weakref.WeakSet = weakref.WeakSet()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make sparkdedup importable on python workers regardless of the
-    driver's cwd (equivalent to spark-submit --py-files)."""
+    driver's cwd (equivalent to spark-submit --py-files). Ships once per
+    SparkContext."""
     import tempfile
     import zipfile
 
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
+        return
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = os.path.join(repo, "sparkdedup")
     sources = [os.path.join(root, n)
                for root, _dirs, names in os.walk(pkg)
                for n in names if n.endswith(".py")]
-    if not sources:
-        return
     zpath = os.path.join(tempfile.gettempdir(), "sparkdedup_pkg.zip")
     newest = max(os.path.getmtime(f) for f in sources)
     if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
         with zipfile.ZipFile(zpath, "w") as z:
             for full in sources:
                 z.write(full, os.path.relpath(full, repo))
-    spark.sparkContext.addPyFile(zpath)
+    sc.addPyFile(zpath)
+    _SHIPPED.add(sc)

@@ -40,3 +40,24 @@ def test_pipeline_matches_oracle_alt_banding(spark, small_corpus):
                     edges[edges.source == "lsh"].dst))
     oracle = run_oracle(small_corpus.files.head(100), cfg, containment=False)
     assert p_lsh == oracle.lsh_edges
+
+
+def test_containment_toggle_recomputes_edges(tmp_path, spark, small_corpus):
+    """A run with containment off, then one with it on, in the SAME
+    workdir: the second run must compute containment edges instead of
+    resuming the first run's edges (enable_containment is part of the
+    stage-dir key)."""
+    cfg = DedupConfig()
+    files = spark.createDataFrame(small_corpus.files)
+    wd = str(tmp_path / "wd")
+    off = DedupPipeline(spark, cfg, workdir=wd,
+                        enable_containment=False).run(files)
+    assert off.edges.filter("source = 'containment'").count() == 0
+
+    on = DedupPipeline(spark, cfg, workdir=wd,
+                       enable_containment=True).run(files)
+    assert "resumed" not in on.metrics["stages"]["edges"]
+    edges = on.edges.filter("source = 'containment'").toPandas()
+    got = set(zip(edges.src.astype(int), edges.dst.astype(int)))
+    want = run_oracle(small_corpus.files, cfg).containment_edges
+    assert want and got == want

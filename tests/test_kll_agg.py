@@ -1,11 +1,6 @@
 """KLL aggregation operator (operators/kll_agg.py): rank-error envelope,
-exact weight bookkeeping, merge invariance, REFERENCE-sketch interop
-(decoded .sk images merge through our chain), and the Spark two-phase
+exact weight bookkeeping, merge invariance, and the Spark two-phase
 operator."""
-
-import glob
-import os
-import re
 
 import numpy as np
 import pytest
@@ -13,7 +8,6 @@ import pytest
 from sparkdedup.operators.kll_agg import (_KllChain, kll_agg,
                                           kll_agg_quantiles, kll_quantile)
 
-VEC_DIR = "/root/reference/serialization_test_data"
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -68,33 +62,6 @@ def test_merge_invariance():
             est = kll_quantile(vals, wts, np.array([q]))[0]
             r = np.searchsorted(s, est, side="right") / len(s)
             assert abs(r - q) <= 0.04, (q, r)
-
-
-def test_reference_sketches_merge_through_our_chain():
-    """Cross-implementation merge: decode two reference-serialized KLL
-    sketches (1..n uniform streams), replay their retained
-    (item, 2^level) sets into OUR chain, and check exact combined n plus
-    quantile tracking — the reference's own merge contract."""
-    from sparkdedup.sketch_io.kll_decoder import decode_kll_sketch
-
-    paths = sorted(glob.glob(f"{VEC_DIR}/*/kll_float_n10000_*.sk"))
-    if len(paths) < 2:
-        pytest.skip("need two n=10000 float vectors")
-    imgs = [decode_kll_sketch(open(p, "rb").read(), "float")
-            for p in paths[:2]]
-    ch = _KllChain(200)
-    total = 0
-    for img in imgs:
-        total += int(img.weights.sum())
-        lv = np.log2(img.weights).astype(np.int64)
-        it = img.items.astype(np.float64)
-        for lvl in np.unique(lv):
-            ch.add_weighted(it[lv == lvl], int(lvl))
-    assert ch.total_weight() == total
-    vals, wts = ch.items()
-    for q in (0.1, 0.5, 0.9):
-        est = kll_quantile(vals, wts, np.array([q]))[0]
-        assert abs(est - q * 10000) <= 0.05 * 10000, (q, est)
 
 
 def test_chain_property_weight_exact():

@@ -156,15 +156,13 @@ def test_pack_next_fit_semantics(spark):
     assert packs[0 * stride + 2] == [7]
 
 
-def test_containment_candidate_schemes_boundary(spark):
-    """Pins the anchor-vs-KMV containment tradeoff: a containee with
-    >= containment_anchor_window shingles is found by the anchor scheme
-    (MOSS guarantee); a tiny containee (< w shingles) is found only by
-    the KMV inverted-index variant — the documented small-side fallback."""
+def test_anchor_containment_candidates_window_boundary(spark):
+    """Pins the anchor scheme's envelope: a containee with
+    >= containment_anchor_window shingles is found (MOSS guarantee); a
+    tiny containee (< w shingles) is not — the documented limit."""
     import pandas as pd
 
-    from sparkdedup.operators.containment import (
-        anchor_containment_candidates, containment_candidates)
+    from sparkdedup.operators.containment import anchor_containment_candidates
     from sparkdedup.operators.signatures import signature_stage
 
     cfg = DedupConfig()
@@ -175,10 +173,6 @@ def test_containment_candidate_schemes_boundary(spark):
     inner = " ".join(big_tokens[500:1000])          # >= w-shingle containee
     host = " ".join(big_tokens[:500]) + " " + inner + " " + \
         " ".join(big_tokens[1000:])
-    # KMV detects a containee only while n_host/n_containee <~
-    # kmv_k/min_shared (= 16): tiny (~36 shingles) in a ~330-shingle host
-    # shares ~36*128/330 ~= 14 >= 8 KMV values. In a 1000-shingle host
-    # BOTH schemes miss it — neither covers tiny-in-huge.
     tiny = " ".join(small_tokens)
     host2 = " ".join(big_tokens[1200:1350]) + " " + tiny + " " + \
         " ".join(big_tokens[200:350])
@@ -193,10 +187,6 @@ def test_containment_candidate_schemes_boundary(spark):
 
     anchor_pairs = {(r["src"], r["dst"])
                     for r in anchor_containment_candidates(sigs, cfg).collect()}
-    kmv_pairs = {(r["src"], r["dst"])
-                 for r in containment_candidates(sigs, cfg).collect()}
     assert (ids["inner"], ids["host"]) in anchor_pairs
-    assert (ids["inner"], ids["host"]) in kmv_pairs
-    # the tiny containee is below the anchor window: only KMV finds it
+    # the tiny containee is below the anchor window: not found
     assert (ids["tiny"], ids["host2"]) not in anchor_pairs
-    assert (ids["tiny"], ids["host2"]) in kmv_pairs

@@ -43,7 +43,7 @@ def test_bucketed_resume_identical(spark, small_corpus, tmp_path):
         pl.signature_stage = real_stage
 
     done = sorted(p.name for p in
-                  (wd / CFG.config_hash() / "signatures").glob("_bucket_*"))
+                  pipe._stage_dir("signatures").glob("_bucket_*"))
     assert len(done) == 2  # two buckets committed before the crash
 
     # resume: only the 2 missing buckets recompute
