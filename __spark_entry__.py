@@ -4,8 +4,7 @@ entry(spark)  - flagship: MinHash/LSH near-duplicate detection over the
                 documents table at sf0.001 (the engine's core pipeline).
 queries()     - one entry per implemented operator family (SURVEY.md §2);
                 each callable takes (spark, sf_dir) -> DataFrame.
-oracle_sql()  - matching DuckDB SQL where ANSI-expressible; murmur3/HLL
-                based ops are rows-only by design (noted in queries.py).
+oracle_sql()  - the matching DuckDB SQL oracle for every query.
 """
 
 from __future__ import annotations

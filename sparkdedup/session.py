@@ -88,7 +88,12 @@ _SHIPPED: weakref.WeakSet = weakref.WeakSet()
 def _ship_package(spark: SparkSession) -> None:
     """Make sparkdedup importable on python workers regardless of the
     driver's cwd (equivalent to spark-submit --py-files). Ships once per
-    SparkContext."""
+    SparkContext.
+
+    The zip is named after the package's absolute path, so two checkouts
+    that share a temp dir never ship each other's code; it is rebuilt when
+    a source is newer than it."""
+    import hashlib
     import tempfile
     import zipfile
 
@@ -100,7 +105,8 @@ def _ship_package(spark: SparkSession) -> None:
     sources = [os.path.join(root, n)
                for root, _dirs, names in os.walk(pkg)
                for n in names if n.endswith(".py")]
-    zpath = os.path.join(tempfile.gettempdir(), "sparkdedup_pkg.zip")
+    tag = hashlib.sha1(pkg.encode("utf-8")).hexdigest()[:12]
+    zpath = os.path.join(tempfile.gettempdir(), f"sparkdedup_pkg_{tag}.zip")
     newest = max(os.path.getmtime(f) for f in sources)
     if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
         with zipfile.ZipFile(zpath, "w") as z:

@@ -62,10 +62,6 @@ def main(argv):
             print(f"{name:28s} SPARK ERROR: {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             continue
-        if name not in ORACLES:
-            print(f"{name:28s} rows={len(sdf):6d}  (rows-only, no oracle)  "
-                  f"{time.time()-t0:5.1f}s")
-            continue
         try:
             odf = con.execute(ORACLES[name]).df()
         except Exception as e:
