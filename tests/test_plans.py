@@ -15,6 +15,32 @@ def _plan(spark, name):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_top_revenue_orders_plan(spark):
+    plan = _plan(spark, "top_revenue_orders")
+    assert "BroadcastHashJoin" in plan          # dim joins broadcast
+    assert "TakeOrderedAndProject" in plan      # top-k, no global sort
+    assert "partial_sum" in plan                # map-side combine
+    assert "PushedFilters" in plan or "DataFilters" in plan
+    assert "CartesianProduct" not in plan
+    # r7: lineitem pre-aggregates to one row per order BEFORE any join,
+    # so no join input ever needs a sort — the naive form SMJ'd the full
+    # fact table against unfiltered orders once orders outgrew the
+    # broadcast estimate
+    assert "SortMergeJoin" not in plan
+    # the shuffle_hash hint fixes the strategy at every scale; without it
+    # this tiny fixture would broadcast and the line above would still pass
+    assert "ShuffledHashJoin" in plan
+
+
+def test_pricing_summary_scan_pruned(spark):
+    plan = _plan(spark, "pricing_summary")
+    # only the referenced columns reach the scan
+    scan_line = [ln for ln in plan.splitlines() if "FileScan parquet" in ln][0]
+    assert "l_comment" not in scan_line
+    assert "ReadSchema" in scan_line or "l_quantity" in scan_line
+    assert "partial_sum" in plan
+
+
 def test_candidate_pairs_no_cartesian(spark):
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.lsh import candidate_pairs
@@ -82,6 +108,15 @@ def test_verify_joins_are_hash_joins(spark):
     assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             or "BroadcastHashJoin" in plan)
     assert "CartesianProduct" not in plan
+
+
+def test_range_join_uses_equi_key(spark):
+    """The range join must plan as an equi-join on user_id with a range
+    residual, never a cartesian/BNL over all pairs."""
+    plan = _plan(spark, "range_join_activity")
+    assert "CartesianProduct" not in plan
+    assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+            or "BroadcastHashJoin" in plan)
 
 
 def test_ngram_jaccard_plan(spark):
@@ -152,6 +187,17 @@ def test_kmv_tokens_partial_pipeline(spark):
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" in plan or "ApplyInPandas" in plan \
         or "FlatMapGroupsIn" in plan
+
+
+def test_regional_supplier_volume_plan(spark):
+    """TPC-H Q5 shape: every dimension broadcasts (customer, supplier,
+    nation, region), only lineitem/orders shuffle, partial aggregation
+    before the exchange, no cartesian."""
+    plan = _plan(spark, "regional_supplier_volume")
+    assert plan.count("BroadcastHashJoin") >= 2
+    assert "CartesianProduct" not in plan
+    assert "partial_sum" in plan
+    assert "PushedFilters" in plan or "DataFilters" in plan
 
 
 def test_varopt_orders_plan_all_jvm(spark):
