@@ -1,4 +1,4 @@
-.PHONY: test bench dist scaling clean
+.PHONY: test bench dist scaling clean loc
 
 # Tier-1: the whole suite, one Spark core per CPU, shuffle spill in a
 # scratch dir, no .pytest_cache left in the tree
@@ -8,6 +8,10 @@ test:
 
 bench:
 	python bench.py
+
+# package line count, the figure each CHANGES.md entry records
+loc:
+	@find sparkdedup -name '*.py' | xargs cat | wc -l
 
 scaling:
 	python tools/scaling_bench.py

@@ -8,8 +8,9 @@ Usage:
 Reads files(repo, path, commit, lang, content) — Iceberg when a catalog is
 on the classpath (spark.read.format("iceberg")), parquet otherwise — and
 writes signatures/edges/clusters parquet + metrics under
-<workdir>/<run_key>/ (config hash + --no-containment). Rerunning with the
-same options resumes from the last completed stage.
+<workdir>/<run_key>/ (config hash + --no-containment +
+--signature-buckets). Rerunning with the same options resumes from the
+last completed stage.
 """
 
 from __future__ import annotations

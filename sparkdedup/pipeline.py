@@ -9,9 +9,9 @@ Checkpoint protocol: every stage writes parquet under
   <workdir>/<run_key>/<stage>/   with a _SUCCESS marker (Spark's own)
   and a sidecar <workdir>/<run_key>/_metrics/<stage>.json
 where run_key hashes the config and the pipeline options that change a
-stage's output (enable_containment). A rerun skips any stage whose
-_SUCCESS exists (resume mid-pipeline); reading back from parquet also
-truncates lineage between stages.
+stage's output (enable_containment, signature_buckets). A rerun skips
+any stage whose _SUCCESS exists (resume mid-pipeline); reading back from
+parquet also truncates lineage between stages.
 
 Exact duplicates are collapsed BEFORE LSH (groupBy sha, keep min file_id):
 this removes the largest skew source (identical files all landing in the
@@ -125,7 +125,8 @@ class DedupPipeline:
         every pipeline option that changes a stage's output, so a rerun
         with a different option recomputes instead of resuming."""
         blob = json.dumps({"config": self.cfg.config_hash(),
-                           "enable_containment": self.enable_containment},
+                           "enable_containment": self.enable_containment,
+                           "signature_buckets": self.signature_buckets},
                           sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 

@@ -5,11 +5,9 @@ a DuckDB oracle string over the same parquet views. Column names/types
 are aligned pairwise (the correctness gate hashes values after sorting
 columns by name).
 
-Every query has an oracle. The catalog audit keeps a query only if it
-calls a sparkdedup module (operators/, functions/, streaming/) or emits
-dedup groups, pairs or clusters; the last two families below run on
-Spark built-ins alone, so the audit drops them, and their deletion is
-deferred to a later catalog cut. QUERIES and ORACLES list them by family:
+Every one of the 39 queries calls a sparkdedup module (operators/,
+functions/, streaming/) or emits dedup groups, pairs or clusters, and
+every query has an oracle. QUERIES and ORACLES list them by family:
   near-dup and exact dedup: md5 groups, clusters via our CC operator,
          word-3-gram Jaccard pairs, MinHash/LSH pairs (batch and
          incremental), LSH->verify->CC clusters and representatives,
@@ -19,8 +17,8 @@ deferred to a later catalog cut. QUERIES and ORACLES list them by family:
          clusters, LSH- and IVF-bucketed lookups;
   curation: the composite verdict, PII scrub, sequence packing,
          stratified sampling, KLL-driven length buckets;
-  quantile sketches: KLL build/merge and rank/CDF readers, REQ (HRA and
-         LRA), t-digest;
+  quantile sketches (operators/quantile_agg.py): KLL build/merge and
+         rank/CDF readers, REQ (HRA and LRA), t-digest;
   distinct, membership and frequency sketches: KMV/theta, tuple, bloom,
          count-min;
   sampling: deterministic reservoir, VarOpt (tau + systematic IPPS draw),
@@ -28,12 +26,7 @@ deferred to a later catalog cut. QUERIES and ORACLES list them by family:
   streaming: watermarked tumbling-window rollup, first-seen dedup, the
          stateful heavy-hitter operator and chunk dedup, each drained via
          AvailableNow and hash-matched against its batch oracle;
-  as-of join: last view before each purchase;
-  relational shapes on Spark built-ins (deletion deferred): TPC-H-style
-         scan/join/aggregate, top-k, window ranking, cube, pivot,
-         sessionization, range join, set operations;
-  exact percentiles on Spark built-ins (deletion deferred): body, head
-         and tail percentiles.
+  as-of join: last view before each purchase.
 """
 
 from __future__ import annotations
@@ -1154,7 +1147,7 @@ SELECT doc_id, lang, rank FROM ranked WHERE rank <= ceil(n * 0.25)
 
 def q_kll_quantiles_orders(spark, sf_dir):
     """KLL sketch BUILD + MERGE as a distributed aggregation (reference
-    kll/sketch.go; operators/kll_agg.py — published KLL compactor chain,
+    kll/sketch.go; operators/quantile_agg.py — published KLL compactor chain,
     two-phase: per-partition chains -> per-group retained-item merge),
     gated through the exact-regime contract the driver already uses for
     kmv/tuple/cms (NOTES gotcha #7): k is sized from the parquet FOOTER
@@ -1172,7 +1165,7 @@ def q_kll_quantiles_orders(spark, sf_dir):
     (0.25/0.5/0.75/0.95) to the same IEEE double and performing the same
     double multiply — 0.95 is NOT a dyadic fraction; the equality is
     literal-parse + identical-multiply, gate-verified."""
-    from sparkdedup.operators.kll_agg import kll_agg, kll_agg_quantiles
+    from sparkdedup.operators.quantile_agg import kll_agg, kll_agg_quantiles
 
     o = _read(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice")
@@ -1212,7 +1205,7 @@ def q_kll_rank_cdf_orders(spark, sf_dir):
     integer-count / integer-n double. Oracle recomputes the counts with
     a conditional aggregate + lag window. Estimation-mode accuracy is
     pytest-gated in tests/test_kll_agg.py."""
-    from sparkdedup.operators.kll_agg import kll_agg, kll_agg_cdf
+    from sparkdedup.operators.quantile_agg import kll_agg, kll_agg_cdf
 
     o = _read(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice")
@@ -1255,7 +1248,7 @@ def q_doc_length_buckets(spark, sf_dir):
     ceil(q*n); 0.25/0.5/0.75 are dyadic, so q*n is the same IEEE double
     in both engines. n_chars is integral, so the bucket comparisons are
     exact."""
-    from sparkdedup.operators.kll_agg import kll_agg, kll_agg_quantiles
+    from sparkdedup.operators.quantile_agg import kll_agg, kll_agg_quantiles
 
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("double").alias("len"))
@@ -1303,7 +1296,7 @@ FROM documents, th
 
 def q_req_topk_prices(spark, sf_dir):
     """REQ sketch (reference req/sketch.go:61-560, HRA mode;
-    operators/req_agg.py — published relative-error compactor chain,
+    operators/quantile_agg.py — published relative-error compactor chain,
     two-phase mapInPandas build -> applyInPandas merge) exercised through
     its DEFINING exact property: in HRA mode the protected top of level 0
     always retains the true global top-k items, so extreme-tail order
@@ -1312,7 +1305,7 @@ def q_req_topk_prices(spark, sf_dir):
     oracle recomputes them with a plain window over the raw table. The
     probabilistic envelope (relative-tail rank error) is pytest-gated in
     tests/test_req_agg.py."""
-    from sparkdedup.operators.req_agg import req_agg
+    from sparkdedup.operators.quantile_agg import req_agg
 
     li = _read(spark, sf_dir, "lineitem")
     sk = req_agg(li, "l_extendedprice", ["l_returnflag"], k=64)
@@ -1339,7 +1332,7 @@ WHERE rn <= 5
 
 def q_req_bottomk_prices(spark, sf_dir):
     """REQ sketch in LRA mode (reference req/sketch.go:47-76 supports
-    both accuracy orientations; operators/req_agg.py hra=False — r4
+    both accuracy orientations; operators/quantile_agg.py hra=False — r4
     verdict ask #6) exercised through LRA's DEFINING exact property, the
     mirror of q_req_topk_prices: in LRA mode the protected BOTTOM of
     level 0 always retains the true global bottom-k items, so extreme
@@ -1347,7 +1340,7 @@ def q_req_bottomk_prices(spark, sf_dir):
     bottom-5 prices read from the sketch's weight-1 level; the oracle
     recomputes them with a plain ascending window. The LRA relative-error
     envelope at low ranks is pytest-gated in tests/test_req_agg.py."""
-    from sparkdedup.operators.req_agg import req_agg
+    from sparkdedup.operators.quantile_agg import req_agg
 
     li = _read(spark, sf_dir, "lineitem")
     sk = req_agg(li, "l_extendedprice", ["l_returnflag"], k=64, hra=False)
@@ -1374,14 +1367,14 @@ WHERE rn <= 5
 
 def q_tdigest_prices(spark, sf_dir):
     """t-digest build + merge as a distributed aggregation (reference
-    tdigest/double.go:102-563 behavior; operators/tdigest_agg.py —
+    tdigest/double.go:102-563 behavior; operators/quantile_agg.py —
     two-phase: per-batch compress -> per-group centroid merge). The
     digest is approximate in its quantiles (pytest-gated accuracy:
     tests/test_tdigest_agg.py) but EXACT in its mass bookkeeping — total
     weight n, min and max survive both phases untouched — so the gate
     hashes those exact invariants per group, which is precisely what a
     SQL engine can replay."""
-    from sparkdedup.operators.tdigest_agg import tdigest_agg
+    from sparkdedup.operators.quantile_agg import tdigest_agg
 
     li = _read(spark, sf_dir, "lineitem")
     dig = tdigest_agg(li, "l_extendedprice", ["l_returnflag"], delta=100.0)
@@ -2335,472 +2328,6 @@ WHERE cnt <= 25 OR rn < hf
 
 
 # --------------------------------------------------------------------------
-# relational shapes on Spark built-ins (dropped by the catalog audit;
-# deletion deferred, COVERAGE.md "Catalog audit")
-# --------------------------------------------------------------------------
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: scan-filter-aggregate with full agg set."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-              .alias("sum_disc_price"),
-             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-             F.count("*").alias("count_order"))
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_discount), 4) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY 1, 2
-"""
-
-
-def q_top_revenue_orders(spark, sf_dir):
-    """TPC-H Q3 shape: 3-way join + agg + deterministic top-10.
-
-    Join/agg order is the at-scale shape (r7): the grouping key set
-    (o_orderkey, o_orderdate, o_orderpriority) is functionally dependent
-    on the join key (o_orderkey is the orders primary key), so lineitem
-    is partial-aggregated to one (l_orderkey, revenue) row per order
-    BEFORE any join — the fact-side exchange carries two longs per order
-    instead of every line item — and the selective customer segment
-    filter shrinks orders ~5x via the broadcast dimension join before
-    the orderkey join. The naive form (li ⋈ orders ⋈ customer, then
-    groupBy) sort-merge-joined the full fact table against unfiltered
-    orders once orders outgrew the broadcast threshold. shuffle_hash:
-    both join inputs are aggregate/join outputs with no stats, which
-    otherwise default to sort-merge (two sorts for nothing)."""
-    c = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    o2 = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
-        "o_orderkey", "o_orderdate", "o_orderpriority")
-    rev = (li.groupBy("l_orderkey")
-             .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                  .alias("_rev")))
-    return (
-        rev.join(o2.hint("shuffle_hash"), rev.l_orderkey == o2.o_orderkey)
-        .select("o_orderkey", "o_orderdate", "o_orderpriority",
-                F.round("_rev", 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-SQL_TOP_REVENUE_ORDERS = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_top_customers_per_nation(spark, sf_dir):
-    """Window ranking: top 3 customers by balance per nation (broadcast the
-    dimension)."""
-    c = _read(spark, sf_dir, "customer")
-    n = _read(spark, sf_dir, "nation")
-    w = Window.partitionBy("n_name").orderBy(
-        F.desc("c_acctbal"), F.asc("c_custkey"))
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("n_name", "c_custkey",
-                F.round("c_acctbal", 2).alias("acctbal"),
-                F.col("rn").cast("long").alias("rn"))
-    )
-
-
-SQL_TOP_CUSTOMERS_PER_NATION = """
-WITH r AS (
-  SELECT n_name, c_custkey, round(c_acctbal, 2) AS acctbal,
-         row_number() OVER (PARTITION BY n_name
-                            ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
-)
-SELECT n_name, c_custkey, acctbal, rn FROM r WHERE rn <= 3
-"""
-
-
-def q_regional_supplier_volume(spark, sf_dir):
-    """TPC-H Q5 shape: 6-table join (customer-orders-lineitem-supplier-
-    nation-region) with the local-supplier predicate (customer and supplier
-    in the same nation), revenue rolled up per nation inside one region.
-
-    Plan shape for scale: the two big tables (lineitem, orders) shuffle
-    once on orderkey; every dimension (customer 1.5k, supplier 100,
-    nation 25, region 5) is broadcast, so the nation/region restriction
-    prunes BEFORE the big join output is aggregated and no dimension ever
-    shuffles. The c_nationkey = s_nationkey predicate rides the join."""
-    r = _read(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _read(spark, sf_dir, "nation")
-    s = _read(spark, sf_dir, "supplier")
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01")))
-    li = _read(spark, sf_dir, "lineitem")
-    dim = (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-           .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-           .select("s_suppkey", "s_nationkey", "n_name"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(dim),
-              (li.l_suppkey == dim.s_suppkey)
-              & (c.c_nationkey == dim.s_nationkey))
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice")
-                           * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-SQL_REGIONAL_SUPPLIER_VOLUME = """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1998-01-01'
-GROUP BY n_name
-"""
-
-
-def q_part_profit_by_nation(spark, sf_dir):
-    """TPC-H Q9 shape: part-filtered profit per (nation, year) over a
-    5-table join — exercises the `part` dimension plus a string LIKE
-    pushdown, a date-extraction group key, and two broadcast dims.
-
-    Scale shape: part is filtered by LIKE at the scan (pushed), then
-    broadcast into lineitem; supplier->nation is a tiny broadcast chain;
-    orders joins lineitem on the shuffle key they would co-bucket on."""
-    p = (_read(spark, sf_dir, "part")
-         .filter(F.col("p_name").like("%red%"))
-         .select("p_partkey"))
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _read(spark, sf_dir, "lineitem")
-    sn = (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-          .select("s_suppkey", "n_name"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(F.col("n_name").alias("nation"),
-                 F.year("o_orderdate").alias("o_year"))
-        .agg(F.round(F.sum(F.col("l_extendedprice")
-                           * (1 - F.col("l_discount"))), 2).alias("profit"))
-    )
-
-
-SQL_PART_PROFIT_BY_NATION = """
-SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%red%'
-GROUP BY 1, 2
-"""
-
-
-def q_cube_sales(spark, sf_dir):
-    """CUBE rollup (grouping-sets family): totals at every aggregation
-    level of (returnflag, linestatus)."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-             F.count("*").alias("n"))
-        .select(F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-                F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-                "sum_qty", "n")
-    )
-
-
-SQL_CUBE_SALES = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       count(*) AS n
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_pivot_status(spark, sf_dir):
-    """Pivot: order counts + quantity by linestatus columns per returnflag."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-        .select(F.col("l_returnflag").alias("returnflag"),
-                F.col("O").alias("qty_open"), F.col("F").alias("qty_filled"))
-    )
-
-
-SQL_PIVOT_STATUS = """
-SELECT l_returnflag AS returnflag,
-       round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_open,
-       round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_filled
-FROM lineitem GROUP BY 1
-"""
-
-
-def q_range_join_activity(spark, sf_dir):
-    """Range join (equi-key + time interval): for each purchase, how many
-    clicks the same user made in the preceding hour. Catalyst plans the
-    equi part as a hash/sort-merge join with the range as a residual
-    filter (no cartesian)."""
-    ev = _read(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id"), F.col("user_id"), F.col("ts").alias("pts")
-    ).alias("p")
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id"), F.col("ts").alias("cts")).alias("c")
-    joined = p.join(
-        c, (F.col("p.user_id") == F.col("c.user_id"))
-        & (F.col("c.cts") <= F.col("p.pts"))
-        & (F.col("c.cts") >= F.col("p.pts") - F.expr("INTERVAL 1 HOUR")),
-        "left")
-    return (joined.groupBy("event_id")
-            .agg(F.count("cts").alias("n_prior_clicks")))
-
-
-SQL_RANGE_JOIN_ACTIVITY = """
-SELECT p.event_id, count(c.cts) AS n_prior_clicks
-FROM (SELECT event_id, user_id, ts AS pts FROM events
-      WHERE event_type = 'purchase') p
-LEFT JOIN (SELECT user_id, ts AS cts FROM events
-           WHERE event_type = 'click') c
-  ON p.user_id = c.user_id
- AND c.cts <= p.pts AND c.cts >= p.pts - INTERVAL 1 HOUR
-GROUP BY 1
-"""
-
-
-def q_sessionize_events(spark, sf_dir):
-    """Sessionization: 30-minute-gap sessions per user via lag + running
-    sum (the stateful-streaming analog computed in batch)."""
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_timestamp("ts")
-           - F.unix_timestamp(F.lag("ts").over(w))) > 1800
-    sess = F.sum(F.when(gap, 1).otherwise(0)).over(
-        w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        ev.withColumn("session_id", sess)
-        .groupBy("user_id")
-        .agg((F.max("session_id") + 1).alias("n_sessions"),
-             F.count("*").alias("n_events"))
-    )
-
-
-SQL_SESSIONIZE_EVENTS = """
-WITH g AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN epoch(ts) - epoch(lag(ts) OVER
-                (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), s AS (
-  SELECT user_id,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM g
-)
-SELECT user_id,
-       CAST(max(session_id) + 1 AS BIGINT) AS n_sessions,
-       count(*) AS n_events
-FROM s GROUP BY 1
-"""
-
-
-def q_hourly_event_rollup(spark, sf_dir):
-    """Time-bucketed rollup (streaming-window analog in batch)."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-        .agg(F.count("*").alias("n"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-SQL_HOURLY_EVENT_ROLLUP = """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS n, round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_repeat_buyers_setops(spark, sf_dir):
-    """Set algebra (theta intersection analog): customers with BOTH an open
-    and a fulfilled order — INTERSECT of two key sets."""
-    o = _read(spark, sf_dir, "orders")
-    open_c = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    done_c = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    return open_c.intersect(done_c).withColumnRenamed("o_custkey", "custkey")
-
-
-SQL_REPEAT_BUYERS_SETOPS = """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-INTERSECT
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-"""
-
-
-def q_anotb_customers(spark, sf_dir):
-    """Theta A-not-B (reference theta/a_not_b.go:28-144): key set of
-    customers with an open order MINUS those with a fulfilled order — the
-    relational form is EXCEPT / anti-join (exact at gate scale; the
-    sketched form is functions/theta.py::kmv_a_not_b)."""
-    o = _read(spark, sf_dir, "orders")
-    open_c = (o.filter(F.col("o_orderstatus") == "O")
-              .select(F.col("o_custkey").alias("custkey")))
-    done_c = (o.filter(F.col("o_orderstatus") == "F")
-              .select(F.col("o_custkey").alias("custkey")))
-    return open_c.subtract(done_c)
-
-
-SQL_ANOTB_CUSTOMERS = """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-EXCEPT
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-"""
-
-
-def q_distinct_users_by_type(spark, sf_dir):
-    events = _read(spark, sf_dir, "events")
-    return (events.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("n_users"),
-                 F.count("*").alias("n_events")))
-
-
-SQL_DISTINCT_USERS_BY_TYPE = """
-SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-FROM events GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# exact percentiles on Spark built-ins (dropped by the catalog audit;
-# deletion deferred)
-# --------------------------------------------------------------------------
-
-def q_quantiles_prices(spark, sf_dir):
-    """Exact percentile contract (KLL/REQ/t-digest family -> Spark
-    percentile; GK approx_percentile available for scale)."""
-    li = _read(spark, sf_dir, "lineitem")
-    pct = F.percentile("l_extendedprice", F.array(
-        F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.95)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.round(pct[0], 4).alias("p25"), F.round(pct[1], 4).alias("p50"),
-             F.round(pct[2], 4).alias("p75"), F.round(pct[3], 4).alias("p95"))
-    )
-
-
-SQL_QUANTILES_PRICES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-       round(quantile_cont(l_extendedprice, 0.50), 4) AS p50,
-       round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
-       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95
-FROM lineitem GROUP BY 1
-"""
-
-
-def q_head_quantiles_prices(spark, sf_dir):
-    """EXTREME-head quantiles — the LRA orientation's use case and the
-    mirror of q_tail_quantiles_prices: p1 / p0.1 / p0.01 / min of
-    l_extendedprice per returnflag, exact at the gate scale (Spark
-    percentile == DuckDB quantile_cont, both linear-interpolating at
-    rank p*(n-1)). The LRA sketch's probabilistic envelope at these
-    head ranks is pytest-gated in tests/test_req_agg.py — the analog of
-    the HRA envelope the tail row leans on."""
-    li = _read(spark, sf_dir, "lineitem")
-    pct = F.percentile("l_extendedprice", F.array(
-        F.lit(0.01), F.lit(0.001), F.lit(0.0001)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.round(pct[0], 4).alias("p01"),
-             F.round(pct[1], 4).alias("p001"),
-             F.round(pct[2], 4).alias("p0001"),
-             F.round(F.min("l_extendedprice"), 4).alias("pmin"))
-    )
-
-
-SQL_HEAD_QUANTILES_PRICES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.01), 4) AS p01,
-       round(quantile_cont(l_extendedprice, 0.001), 4) AS p001,
-       round(quantile_cont(l_extendedprice, 0.0001), 4) AS p0001,
-       round(min(l_extendedprice), 4) AS pmin
-FROM lineitem GROUP BY 1
-"""
-
-
-def q_tail_quantiles_prices(spark, sf_dir):
-    """EXTREME-tail quantiles — the REQ sketch's contract (reference
-    req/sketch.go:61-560): REQ exists because rank-error sketches (KLL)
-    give a +-eps*n RANK guarantee that is useless at p99.99 (the whole
-    tail fits inside the error band); REQ's HRA mode guarantees
-    RELATIVE rank error, so extreme quantiles stay meaningful. This
-    query pins the contract surface: p99 / p99.9 / p99.99 / max of
-    l_extendedprice per returnflag, exact at the gate scale (Spark
-    percentile == DuckDB quantile_cont, both linear-interpolating at
-    rank p*(n-1)). The approximation path's relative-error envelope in
-    estimation mode (percentile_approx at the same tail ranks) is
-    asserted in tests/test_tail_quantiles.py — the analog of REQ's HRA
-    accuracy guarantee, since no REQ golden vectors exist to gate serde
-    against."""
-    li = _read(spark, sf_dir, "lineitem")
-    pct = F.percentile("l_extendedprice", F.array(
-        F.lit(0.99), F.lit(0.999), F.lit(0.9999)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.round(pct[0], 4).alias("p99"),
-             F.round(pct[1], 4).alias("p999"),
-             F.round(pct[2], 4).alias("p9999"),
-             F.round(F.max("l_extendedprice"), 4).alias("pmax"))
-    )
-
-
-SQL_TAIL_QUANTILES_PRICES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.99), 4) AS p99,
-       round(quantile_cont(l_extendedprice, 0.999), 4) AS p999,
-       round(quantile_cont(l_extendedprice, 0.9999), 4) AS p9999,
-       round(max(l_extendedprice), 4) AS pmax
-FROM lineitem GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
 # catalog
 # --------------------------------------------------------------------------
 
@@ -2852,24 +2379,6 @@ QUERIES = {
     "streaming_chunk_dedup": q_streaming_chunk_dedup,
     # as-of join (operators/asof.py)
     "asof_last_view": q_asof_last_view,
-    # relational shapes on Spark built-ins (deletion deferred)
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "top_customers_per_nation": q_top_customers_per_nation,
-    "regional_supplier_volume": q_regional_supplier_volume,
-    "part_profit_by_nation": q_part_profit_by_nation,
-    "cube_sales": q_cube_sales,
-    "pivot_status": q_pivot_status,
-    "range_join_activity": q_range_join_activity,
-    "sessionize_events": q_sessionize_events,
-    "hourly_event_rollup": q_hourly_event_rollup,
-    "repeat_buyers_setops": q_repeat_buyers_setops,
-    "anotb_customers": q_anotb_customers,
-    "distinct_users_by_type": q_distinct_users_by_type,
-    # exact percentiles on Spark built-ins (deletion deferred)
-    "quantiles_prices": q_quantiles_prices,
-    "head_quantiles_prices": q_head_quantiles_prices,
-    "tail_quantiles_prices": q_tail_quantiles_prices,
 }
 
 ORACLES = {
@@ -2920,22 +2429,4 @@ ORACLES = {
     "streaming_chunk_dedup": SQL_STREAMING_CHUNK_DEDUP,
     # as-of join
     "asof_last_view": SQL_ASOF_LAST_VIEW,
-    # relational shapes on Spark built-ins
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "top_revenue_orders": SQL_TOP_REVENUE_ORDERS,
-    "top_customers_per_nation": SQL_TOP_CUSTOMERS_PER_NATION,
-    "regional_supplier_volume": SQL_REGIONAL_SUPPLIER_VOLUME,
-    "part_profit_by_nation": SQL_PART_PROFIT_BY_NATION,
-    "cube_sales": SQL_CUBE_SALES,
-    "pivot_status": SQL_PIVOT_STATUS,
-    "range_join_activity": SQL_RANGE_JOIN_ACTIVITY,
-    "sessionize_events": SQL_SESSIONIZE_EVENTS,
-    "hourly_event_rollup": SQL_HOURLY_EVENT_ROLLUP,
-    "repeat_buyers_setops": SQL_REPEAT_BUYERS_SETOPS,
-    "anotb_customers": SQL_ANOTB_CUSTOMERS,
-    "distinct_users_by_type": SQL_DISTINCT_USERS_BY_TYPE,
-    # exact percentiles on Spark built-ins
-    "quantiles_prices": SQL_QUANTILES_PRICES,
-    "head_quantiles_prices": SQL_HEAD_QUANTILES_PRICES,
-    "tail_quantiles_prices": SQL_TAIL_QUANTILES_PRICES,
 }

@@ -54,23 +54,3 @@ def streaming_hourly_rollup(events_stream: DataFrame,
         .select(F.col("w.start").alias("hour"), "event_type", "n", "sum_value")
     )
 
-
-def streaming_sessionize(events_stream: DataFrame,
-                         gap: str = "30 minutes",
-                         watermark: str = "2 hours") -> DataFrame:
-    """Watermarked session windows per user (the streaming form of the
-    batch sessionization query): Spark's native session_window merges
-    events whose gaps are below `gap`; the watermark closes sessions once
-    no in-gap event can still arrive. State is bounded by (users x open
-    sessions), the same contract as the reference's one-pass mergeable
-    sketches."""
-    return (
-        events_stream
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-        .select("user_id", F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"), "n_events", "sum_value")
-    )

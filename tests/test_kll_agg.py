@@ -1,12 +1,13 @@
-"""KLL aggregation operator (operators/kll_agg.py): rank-error envelope,
+"""KLL aggregation operator (operators/quantile_agg.py): rank-error envelope,
 exact weight bookkeeping, merge invariance, and the Spark two-phase
 operator."""
 
 import numpy as np
 import pytest
 
-from sparkdedup.operators.kll_agg import (_KllChain, kll_agg,
-                                          kll_agg_quantiles, kll_quantile)
+from sparkdedup.operators.quantile_agg import (_KllChain, kll_agg,
+                                               kll_agg_cdf, kll_agg_quantiles,
+                                               weighted_quantile)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +39,7 @@ def test_rank_error_envelope(q):
     s = np.sort(v)
     ch = _chain_over(v)
     vals, wts = ch.items()
-    est = kll_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right") / n
     assert abs(est_rank - q) <= 0.03, (q, est_rank)
 
@@ -53,13 +54,13 @@ def test_merge_invariance():
         vals, wts = part.items()
         lv = np.log2(wts).astype(np.int64)
         for lvl in np.unique(lv):
-            merged.add_weighted(vals[lv == lvl], int(lvl))
+            merged.update(vals[lv == lvl], int(lvl))
     assert merged.total_weight() == whole.total_weight() == 60_000
     s = np.sort(v)
     for q in (0.1, 0.5, 0.9, 0.99):
         for ch in (whole, merged):
             vals, wts = ch.items()
-            est = kll_quantile(vals, wts, np.array([q]))[0]
+            est = weighted_quantile(vals, wts, np.array([q]))[0]
             r = np.searchsorted(s, est, side="right") / len(s)
             assert abs(r - q) <= 0.04, (q, r)
 
@@ -110,7 +111,7 @@ def test_spark_operator_per_group(spark):
 def test_cdf_pmf_exact_regime():
     """Single-level chain (k >= n): cdf = count(v <= x)/n exactly, pmf
     sums back to the cdf — the contract q_kll_rank_cdf_orders gates."""
-    from sparkdedup.operators.kll_agg import kll_rank_cdf_pmf
+    from sparkdedup.operators.quantile_agg import kll_rank_cdf_pmf
 
     rng = np.random.default_rng(41)
     v = rng.uniform(0, 100, 3000)
@@ -128,7 +129,7 @@ def test_cdf_pmf_exact_regime():
 def test_cdf_estimation_envelope():
     """Compacting regime (k=200): |cdf_est - cdf_true| <= eps with the
     KLL additive rank envelope (~1.65%/k-normalized at k=200, 3x margin)."""
-    from sparkdedup.operators.kll_agg import kll_rank_cdf_pmf
+    from sparkdedup.operators.quantile_agg import kll_rank_cdf_pmf
 
     rng = np.random.default_rng(43)
     n = 200_000
@@ -153,9 +154,17 @@ def test_quantiles_require_single_level_guard(spark):
             [(float(x),) for x in values], "v double")
         return kll_agg(df, "v", None, k=k)
 
-    got = kll_agg_quantiles(chain_df(big[:100], 4096), [0.5], None,
+    exact, compacted = chain_df(big[:100], 4096), chain_df(big, 16)
+    got = kll_agg_quantiles(exact, [0.5], None,
                             require_single_level=True).toPandas()
     assert len(got) == 1
     with pytest.raises(Exception, match="exact-regime contract"):
-        kll_agg_quantiles(chain_df(big, 16), [0.5], None,
+        kll_agg_quantiles(compacted, [0.5], None,
                           require_single_level=True).toPandas()
+    # the CDF reader (kll_rank_cdf_orders) carries the same guard
+    got = kll_agg_cdf(exact, [0.0, 1.0], None,
+                      require_single_level=True).toPandas()
+    assert len(got) == 2
+    with pytest.raises(Exception, match="exact-regime contract"):
+        kll_agg_cdf(compacted, [0.0, 1.0], None,
+                    require_single_level=True).toPandas()

@@ -1,12 +1,13 @@
-"""REQ relative-error quantile sketch (operators/req_agg.py): exact
+"""REQ relative-error quantile sketch (operators/quantile_agg.py): exact
 invariants (total weight, min/max, top-k retention), relative-tail
 accuracy envelope, merge invariance, and the Spark two-phase operator."""
 
 import numpy as np
 import pytest
 
-from sparkdedup.operators.req_agg import (_ReqChain, req_agg,
-                                          req_agg_quantiles, req_quantile)
+from sparkdedup.operators.quantile_agg import (_ReqChain, req_agg,
+                                               req_agg_quantiles,
+                                               weighted_quantile)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,7 +47,7 @@ def test_relative_tail_rank_error(q):
     s = np.sort(v)
     ch = _chain_over(v)
     vals, wts = ch.items()
-    est = req_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right")
     target = q * n
     tail = n - target + 1
@@ -65,13 +66,13 @@ def test_merge_invariance_and_weight():
         vals, wts = part.items()
         lv = np.log2(wts).astype(np.int64)
         for lvl in np.unique(lv):
-            merged.add_weighted(vals[lv == lvl], int(lvl))
+            merged.update(vals[lv == lvl], int(lvl))
     assert merged.total_weight() == whole.total_weight() == 100_000
     s = np.sort(v)
     for q in (0.99, 0.999):
         for ch in (whole, merged):
             vals, wts = ch.items()
-            est = req_quantile(vals, wts, np.array([q]))[0]
+            est = weighted_quantile(vals, wts, np.array([q]))[0]
             r = np.searchsorted(s, est, side="right")
             tail = len(s) - q * len(s) + 1
             assert abs(r - q * len(s)) <= 0.2 * tail + 2
@@ -162,7 +163,7 @@ def test_lra_relative_head_rank_error(q):
     s = np.sort(v)
     ch = _lra_chain_over(v)
     vals, wts = ch.items()
-    est = req_quantile(vals, wts, np.array([q]))[0]
+    est = weighted_quantile(vals, wts, np.array([q]))[0]
     est_rank = np.searchsorted(s, est, side="right")
     target = q * n
     head = target + 1
@@ -183,7 +184,7 @@ def test_lra_merge_weight_and_bottom():
         vals, wts = part.items()
         lv = np.log2(wts).astype(np.int64)
         for lvl in np.unique(lv):
-            merged.add_weighted(vals[lv == lvl], int(lvl))
+            merged.update(vals[lv == lvl], int(lvl))
     assert merged.total_weight() == 100_000
     level0 = np.sort(np.asarray(merged.levels[0]))
     assert np.array_equal(level0[:k], np.sort(v)[:k])

@@ -58,3 +58,40 @@ def test_bucketed_resume_identical(spark, small_corpus, tmp_path):
     res3 = DedupPipeline(spark, CFG, workdir=str(wd),
                          signature_buckets=4).run(files)
     assert res3.metrics["stages"]["signatures"].get("resumed") is True
+
+
+def test_bucket_count_change_recomputes_signatures(spark, small_corpus,
+                                                   tmp_path, monkeypatch):
+    """Bucket markers record no bucket count, so a rerun with a different
+    signature_buckets must not resume them: B=4 markers for buckets 0-1
+    would skip B=2's buckets 0-1 (losing files) or feed stale bucket
+    directories into the read-back (duplicating them)."""
+    import sparkdedup.pipeline as pl
+
+    files = spark.createDataFrame(small_corpus.files.head(80))
+    ref = DedupPipeline(spark, CFG, workdir=str(tmp_path / "ref"),
+                        signature_buckets=2).run(files)
+    ref_out = ref.clusters.toPandas().sort_values(
+        "file_id").reset_index(drop=True)
+
+    wd = str(tmp_path / "int")
+    real_stage = pl.signature_stage
+    calls = {"n": 0}
+
+    def exploding_stage(*a, **k):
+        calls["n"] += 1
+        if calls["n"] > 2:
+            raise RuntimeError("simulated executor loss")
+        return real_stage(*a, **k)
+
+    monkeypatch.setattr(pl, "signature_stage", exploding_stage)
+    with pytest.raises(RuntimeError, match="simulated"):
+        DedupPipeline(spark, CFG, workdir=wd, signature_buckets=4).run(files)
+    monkeypatch.undo()
+
+    res = DedupPipeline(spark, CFG, workdir=wd, signature_buckets=2).run(files)
+    ids = res.signatures.select("file_id").toPandas()["file_id"]
+    assert len(ids) == ids.nunique() == 80
+    got = res.clusters.toPandas().sort_values(
+        "file_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, ref_out)

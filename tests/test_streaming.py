@@ -97,55 +97,6 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
         assert list(x) == list(y)
 
 
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Native session_window streaming sessionization must agree with the
-    batch lag/cumsum formulation on session COUNTS per user (closed
-    sessions only — the watermark withholds still-open ones)."""
-    from pyspark.sql import Window
-
-    from sparkdedup.streaming.stream_dedup import streaming_sessionize
-
-    batch = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    src_dir = str(tmp_path / "events_dir")
-    batch.write.parquet(src_dir)
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-
-    q = (streaming_sessionize(stream).writeStream.outputMode("append")
-         .format("memory").queryName("sess_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT * FROM sess_out").toPandas()
-
-    # batch oracle: 30-min-gap sessions via lag + running sum
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_timestamp("ts")
-           - F.unix_timestamp(F.lag("ts").over(w))) > 1800
-    sess = F.sum(F.when(gap, 1).otherwise(0)).over(
-        w.rowsBetween(Window.unboundedPreceding, 0))
-    want = (batch.withColumn("sid", sess)
-            .groupBy("user_id", "sid")
-            .agg(F.count("*").alias("n_events"))).toPandas()
-
-    # every emitted (closed) session must exist in the batch session set
-    # with identical event counts; emitted sessions are keyed by size
-    # histogram per user
-    gb = got.groupby("user_id")["n_events"].apply(
-        lambda s: sorted(s.tolist()))
-    wb = want.groupby("user_id")["n_events"].apply(
-        lambda s: sorted(s.tolist()))
-    merged = gb.to_frame("g").join(wb.to_frame("w"), how="left")
-    for _, row in merged.iterrows():
-        # got sessions (closed) are a sub-multiset of batch sessions
-        wl = list(row["w"])
-        for x in row["g"]:
-            assert x in wl, (row["g"], row["w"])
-            wl.remove(x)
-    # the stream must actually close most sessions at this data density
-    assert len(got) >= 0.5 * len(want)
-
-
 def test_append_emission_boundary_semantics(spark, tmp_path):
     """Pin Spark's append-mode emission predicate at the exact boundary
     (ADVICE r3): with max(ts) landing exactly on an hour mark, is the

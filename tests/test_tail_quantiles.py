@@ -9,15 +9,13 @@ the engine emulates the HRA contract by DERIVING accuracy from the
 desired relative tail error: for quantile q and relative rank error rel,
 accuracy >= 1 / ((1 - q) * rel) makes the additive band eps*n a rel
 fraction of the tail mass (1-q)*n. These tests pin that envelope
-empirically, plus exactness of the q_tail_quantiles_prices gate query
+empirically, plus exactness of Spark's percentile at the tail ranks
 against a numpy ground truth.
 """
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 def _skewed_df(spark, n=200_000, seed=13):
@@ -49,7 +47,7 @@ def test_tail_relative_rank_error_envelope(spark, q, rel):
 
 
 def test_tail_quantiles_exact_vs_numpy(spark):
-    """The gate query's exact path: Spark percentile at the tail ranks
+    """The exact path: Spark percentile at the tail ranks
     must equal numpy's linear interpolation at rank p*(n-1)."""
     df, sorted_vals = _skewed_df(spark, n=50_000, seed=29)
     row = df.agg(
@@ -59,16 +57,3 @@ def test_tail_quantiles_exact_vs_numpy(spark):
                        method="linear")
     got = np.array(row["p"])
     assert np.allclose(got, want, rtol=1e-12)
-
-
-def test_gate_query_runs_at_sf0001(spark):
-    from sparkdedup.queries import q_tail_quantiles_prices
-
-    out = q_tail_quantiles_prices(spark, SF_DIR).toPandas()
-    assert set(out.columns) == {"l_returnflag", "p99", "p999", "p9999",
-                                "pmax"}
-    assert len(out) == 3
-    # tail ordering invariant: p99 <= p999 <= p9999 <= max
-    assert (out.p99 <= out.p999).all()
-    assert (out.p999 <= out.p9999).all()
-    assert (out.p9999 <= out.pmax).all()

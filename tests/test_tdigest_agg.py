@@ -1,13 +1,13 @@
-"""t-digest aggregation operator (operators/tdigest_agg.py): build/merge
+"""t-digest aggregation operator (operators/quantile_agg.py): build/merge
 accuracy, merge invariance, and the Spark two-phase operator against exact
 quantiles."""
 
 import numpy as np
 import pytest
 
-from sparkdedup.operators.tdigest_agg import (td_compress, td_quantile,
-                                              tdigest_agg,
-                                              tdigest_quantiles)
+from sparkdedup.operators.quantile_agg import (td_compress, td_quantile,
+                                               tdigest_agg,
+                                               tdigest_quantiles)
 
 SF_DIR = "/root/testdata/sf0.001"
 
