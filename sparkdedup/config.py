@@ -12,12 +12,9 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
-
-# reference: theta/constants.go:39-52
-MAX_THETA = (1 << 63) - 1  # math.MaxInt64, Java compatibility
-DEFAULT_SEED = 9001
+from sparkdedup.functions.theta import DEFAULT_SEED
 
 
 @dataclass(frozen=True)

@@ -3,8 +3,8 @@
 Implements the FIXTURES.md spec (seed 42, no external data): a `files`
 table (repo, path, commit, lang, content) plus ground-truth tables
 `truth_pairs(src_id, dst_id, kind)` and `truth_clusters(file_id,
-cluster_id)` keyed by a deterministic file_id (murmur3 of repo\\0path\\0commit,
-seed 42 — reproduced by the pipeline's signature stage).
+cluster_id)` keyed by the pipeline's own file_id
+(operators/signatures.py::file_ids_batch).
 
 Duplicate kinds: exact (8%), near (12%, 1-10% token mutations), contained
 (5%, A pasted inside B with 2x padding), boilerplate-skew (3 mega groups
@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
-from sparkdedup.functions.murmur3 import murmur3_128_bytes
+from sparkdedup.operators.signatures import file_ids_batch
 
 LANGS = ["go", "py", "java", "js", "c"]
 LANG_W = [0.30, 0.25, 0.20, 0.15, 0.10]
@@ -45,22 +45,6 @@ _HEADER_TOKENS = (
     "either express or implied see the license for the specific language "
     "governing permissions and limitations under the license"
 ).split()
-
-
-def file_id_of(repo: str, path: str, commit: str) -> int:
-    """Deterministic file id: murmur3-128 h1 (seed 42) of repo\\0path\\0commit,
-    reinterpreted as int64. The pipeline computes the identical id in its
-    vectorized signature stage."""
-    key = f"{repo}\x00{path}\x00{commit}".encode("utf-8")
-    h1, _ = murmur3_128_bytes([key], 42)
-    return int(h1.astype(np.int64)[0])
-
-
-def file_ids_batch(repos: pd.Series, paths: pd.Series, commits: pd.Series) -> np.ndarray:
-    keys = [f"{r}\x00{p}\x00{c}".encode("utf-8")
-            for r, p, c in zip(repos, paths, commits)]
-    h1, _ = murmur3_128_bytes(keys, 42)
-    return h1.astype(np.int64)
 
 
 @dataclass

@@ -1,12 +1,20 @@
 """Vectorized MurmurHash3 x64 128-bit in numpy, with datasketches semantics.
 
-Behavioral parity target: the reference implementation at
-/root/reference/internal/murmur3.go (blockMix128 at :194-204, finalMix128 at
-:206-218, byte-array layout HashByteArrMurmur3 at :126-158, int64-slice
-layout HashInt64SliceMurmur3 at :99-124, char-slice layout
-HashCharSliceMurmur3 at :30-63). All functions here operate on whole numpy
-batches (one python-level loop only over 16-byte *blocks*, never over items),
-which is what makes them usable inside Arrow-batched pandas UDFs.
+Behavioral parity target: the reference implementation's
+internal/murmur3.go (blockMix128 at :194-204, finalMix128 at :206-218,
+byte-array layout HashByteArrMurmur3 at :126-158, int64-slice layout
+HashInt64SliceMurmur3 at :99-124, char-slice layout HashCharSliceMurmur3
+at :30-63). All functions here operate on whole numpy batches (one
+python-level loop only over 16-byte *blocks*, never over items), which is
+what makes them usable inside Arrow-batched pandas UDFs.
+
+One mix, one byte path: every batch hash runs the in-place block mix
+(`_block_mix_ip`) and the in-place finalizer (`_final_mix`, which ends in
+`_fmix_ip`), each writing into preallocated scratch so no mix step
+allocates. Byte strings hash through `murmur3_128_bytes_segmented`;
+`murmur3_128_bytes` only joins its inputs into one buffer first. The
+pure-python scalar functions at the end are independent references for
+the tests.
 
 Golden vector (reference internal/murmur3_test.go:26-37):
     murmur3_128_bytes(b"The quick brown fox jumps over the lazy dog", seed=0)
@@ -25,84 +33,6 @@ _F2 = U64(0xC4CEB9FE1A85EC53)
 _M5 = U64(5)
 _A1 = U64(0x52DCE729)
 _A2 = U64(0x38495AB5)
-
-_OLD_ERR = np.seterr(over="ignore")  # uint64 wraparound is the semantics
-np.seterr(**_OLD_ERR)
-
-
-def _rotl(x: np.ndarray, r: int) -> np.ndarray:
-    r_ = U64(r)
-    return (x << r_) | (x >> U64(64 - r))
-
-
-def fmix64(h: np.ndarray) -> np.ndarray:
-    """The murmur3 64-bit finalizer (reference internal/murmur3.go:184-192).
-
-    A bijection on uint64; also used standalone as our per-permutation
-    MinHash re-hash.
-    """
-    with np.errstate(over="ignore"):
-        h = h ^ (h >> U64(33))
-        h = h * _F1
-        h = h ^ (h >> U64(33))
-        h = h * _F2
-        h = h ^ (h >> U64(33))
-    return h
-
-
-def _mix_k1(k1: np.ndarray) -> np.ndarray:
-    return _rotl(k1 * _C1, 31) * _C2
-
-
-def _mix_k2(k2: np.ndarray) -> np.ndarray:
-    return _rotl(k2 * _C2, 33) * _C1
-
-
-def _block_mix(h1, h2, k1, k2):
-    # reference internal/murmur3.go:194-204
-    h1 = h1 ^ _mix_k1(k1)
-    h1 = _rotl(h1, 27)
-    h1 = h1 + h2
-    h1 = h1 * _M5 + _A1
-    h2 = h2 ^ _mix_k2(k2)
-    h2 = _rotl(h2, 31)
-    h2 = h2 + h1
-    h2 = h2 * _M5 + _A2
-    return h1, h2
-
-
-def _final_mix(h1, h2, k1, k2, length_bytes):
-    # reference internal/murmur3.go:206-218
-    h1 = h1 ^ _mix_k1(k1)
-    h2 = h2 ^ _mix_k2(k2)
-    h1 = h1 ^ length_bytes
-    h2 = h2 ^ length_bytes
-    h1 = h1 + h2
-    h2 = h2 + h1
-    h1 = fmix64(h1)
-    h2 = fmix64(h2)
-    h1 = h1 + h2
-    h2 = h2 + h1
-    return h1, h2
-
-
-def murmur3_128_int64_single(values: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """Hash each element as a one-long stream (HashInt64SliceMurmur3 with
-    lengthLongs=1 — reference internal/murmur3.go:99-124). This is exactly
-    what theta UpdateInt64 feeds (reference theta/hashtable.go:132-144).
-
-    values: uint64 array (int64 values reinterpreted); returns (h1, h2).
-    """
-    with np.errstate(over="ignore"):
-        v = values.astype(U64, copy=False)
-        h1 = np.full(v.shape, U64(seed), dtype=U64)
-        h2 = h1.copy()
-        return _final_mix(h1, h2, v, np.zeros_like(v), U64(8))
-
-
-# ---- fused in-place forms of the same mixes (identical math, zero
-# temporaries: every op writes into preallocated scratch, which matters in
-# the signature hot loop where these arrays are touched ~60 times) --------
 
 
 def _mix_k_ip(k: np.ndarray, c_in: np.uint64, rot: int, c_out: np.uint64,
@@ -123,6 +53,7 @@ def _rotl_ip(h: np.ndarray, rot: int, t: np.ndarray) -> None:
 
 
 def _fmix_ip(h: np.ndarray, t: np.ndarray) -> None:
+    """The 64-bit finalizer fmix64 (reference internal/murmur3.go:184-192)."""
     np.right_shift(h, U64(33), out=t)
     np.bitwise_xor(h, t, out=h)
     np.multiply(h, _F1, out=h)
@@ -134,6 +65,7 @@ def _fmix_ip(h: np.ndarray, t: np.ndarray) -> None:
 
 
 def _block_mix_ip(h1, h2, k1, k2, t, u) -> None:
+    # reference internal/murmur3.go:194-204
     np.bitwise_xor(h1, _mix_k_ip(k1, _C1, 31, _C2, t, u), out=h1)
     _rotl_ip(h1, 27, t)
     np.add(h1, h2, out=h1)
@@ -146,6 +78,64 @@ def _block_mix_ip(h1, h2, k1, k2, t, u) -> None:
     np.add(h2, _A2, out=h2)
 
 
+def _final_mix(h1: np.ndarray, h2: np.ndarray, k1: np.ndarray | None,
+               k2: np.ndarray | None, length, t: np.ndarray | None = None,
+               u: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """Tail words plus finalization (reference internal/murmur3.go:206-218),
+    in place on h1/h2, which are also returned. A tail word of None is all
+    zero: its mix is zero, so it is skipped. `length` is the stream length
+    in bytes (a scalar or one per row); t/u are optional scratch arrays
+    shaped like h1, so a caller that already has them allocates nothing."""
+    if t is None:
+        t, u = np.empty_like(h1), np.empty_like(h1)
+    if k1 is not None:
+        np.bitwise_xor(h1, _mix_k_ip(k1, _C1, 31, _C2, t, u), out=h1)
+    if k2 is not None:
+        np.bitwise_xor(h2, _mix_k_ip(k2, _C2, 33, _C1, t, u), out=h2)
+    np.bitwise_xor(h1, length, out=h1)
+    np.bitwise_xor(h2, length, out=h2)
+    np.add(h1, h2, out=h1)
+    np.add(h2, h1, out=h2)
+    _fmix_ip(h1, t)
+    _fmix_ip(h2, t)
+    np.add(h1, h2, out=h1)
+    np.add(h2, h1, out=h2)
+    return h1, h2
+
+
+def _seeded(seed: int | np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Fresh (h1, h2) state: both words start at the seed."""
+    if isinstance(seed, np.ndarray):
+        h1 = seed.astype(U64)
+    else:
+        h1 = np.full(n, U64(seed), dtype=U64)
+    return h1, h1.copy()
+
+
+def fmix64(h: np.ndarray) -> np.ndarray:
+    """The murmur3 64-bit finalizer on a copy of h (reference
+    internal/murmur3.go:184-192).
+
+    A bijection on uint64; also used standalone as our per-permutation
+    MinHash re-hash.
+    """
+    out = np.array(h, dtype=U64)
+    _fmix_ip(out, np.empty_like(out))
+    return out
+
+
+def murmur3_128_int64_single(values: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """Hash each element as a one-long stream (HashInt64SliceMurmur3 with
+    lengthLongs=1 — reference internal/murmur3.go:99-124). This is exactly
+    what theta UpdateInt64 feeds (reference theta/hashtable.go:132-144).
+
+    values: uint64 array (int64 values reinterpreted); returns (h1, h2).
+    """
+    v = values.astype(U64, copy=False)
+    h1, h2 = _seeded(seed, len(v))
+    return _final_mix(h1, h2, v, None, U64(8))
+
+
 def murmur3_128_int64_rows(rows: np.ndarray,
                            seed: int | np.ndarray
                            ) -> tuple[np.ndarray, np.ndarray]:
@@ -156,106 +146,50 @@ def murmur3_128_int64_rows(rows: np.ndarray,
     seed may be an (n,) array for per-row seeds (the fused band-hash path:
     all 16 bands in one call, each band row salted by its own seed).
     """
-    with np.errstate(over="ignore"):
-        rows = rows.astype(U64, copy=False)
-        n, m = rows.shape
-        if isinstance(seed, np.ndarray):
-            h1 = seed.astype(U64).copy()
-        else:
-            h1 = np.full(n, U64(seed), dtype=U64)
-        h2 = h1.copy()
-        t = np.empty(n, dtype=U64)
-        u = np.empty(n, dtype=U64)
-        for i in range(m >> 1):
-            _block_mix_ip(h1, h2, rows[:, 2 * i], rows[:, 2 * i + 1], t, u)
-        # final mix, in place (reference internal/murmur3.go:206-218)
-        if m & 1:
-            np.bitwise_xor(h1, _mix_k_ip(rows[:, m - 1], _C1, 31, _C2, t, u),
-                           out=h1)
-        length = U64(m << 3)
-        np.bitwise_xor(h1, length, out=h1)
-        np.bitwise_xor(h2, length, out=h2)
-        np.add(h1, h2, out=h1)
-        np.add(h2, h1, out=h2)
-        _fmix_ip(h1, t)
-        _fmix_ip(h2, t)
-        np.add(h1, h2, out=h1)
-        np.add(h2, h1, out=h2)
-        return h1, h2
-
-
-def _padded_matrix(data: list[bytes], lengths: np.ndarray, width: int) -> np.ndarray:
-    """Zero-padded (n, width) uint8 matrix from a list of byte strings.
-
-    Zero padding reproduces getUint64's partial-read semantics
-    (reference internal/murmur3.go:160-167): reading 8 bytes from the padded
-    buffer equals assembling `rem` little-endian bytes.
-    """
-    n = len(data)
-    buf = np.zeros(n * width, dtype=np.uint8)
-    if n:
-        flat = np.frombuffer(b"".join(data), dtype=np.uint8)
-        total = int(lengths.sum())
-        if total:
-            starts = np.cumsum(lengths) - lengths
-            within = np.arange(total, dtype=np.int64) - np.repeat(starts, lengths)
-            rows = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            buf[rows * width + within] = flat
-    return buf.reshape(n, width)
-
-
-def _hash_bytes_group(data: list[bytes], lengths: np.ndarray, nblocks: int, seed: int):
-    """All inputs share the same number of full 16-byte blocks."""
-    width = (nblocks + 1) * 16
-    mat = _padded_matrix(data, lengths, width)
-    u = mat.view("<u8")  # (n, 2*(nblocks+1)) little-endian words
-    n = len(data)
-    with np.errstate(over="ignore"):
-        h1 = np.full(n, U64(seed), dtype=U64)
-        h2 = h1.copy()
-        for i in range(nblocks):
-            h1, h2 = _block_mix(h1, h2, u[:, 2 * i], u[:, 2 * i + 1])
-        # tail (zero-padded uniform read == reference partial getUint64)
-        k1 = u[:, 2 * nblocks]
-        k2 = u[:, 2 * nblocks + 1]
-        return _final_mix(h1, h2, k1, k2, lengths.astype(U64))
+    rows = rows.astype(U64, copy=False)
+    n, m = rows.shape
+    h1, h2 = _seeded(seed, n)
+    t = np.empty(n, dtype=U64)
+    u = np.empty(n, dtype=U64)
+    for i in range(m >> 1):
+        _block_mix_ip(h1, h2, rows[:, 2 * i], rows[:, 2 * i + 1], t, u)
+    # an odd trailing long goes entirely into k1, k2 stays zero
+    tail = rows[:, m - 1] if m & 1 else None
+    return _final_mix(h1, h2, tail, None, U64(m << 3), t, u)
 
 
 def murmur3_128_bytes(data: list[bytes], seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Batch murmur3-128 over variable-length byte strings
-    (HashByteArrMurmur3 layout — reference internal/murmur3.go:126-158).
-
-    Inputs are bucketed by block count so each bucket vectorizes fully.
+    (HashByteArrMurmur3 layout — reference internal/murmur3.go:126-158):
+    the strings are joined into one buffer and hashed as its slices.
     Returns (h1, h2) uint64 arrays aligned with the input order.
     """
-    n = len(data)
-    h1_out = np.empty(n, dtype=U64)
-    h2_out = np.empty(n, dtype=U64)
-    if n == 0:
-        return h1_out, h2_out
-    lengths = np.fromiter((len(b) for b in data), dtype=np.int64, count=n)
-    nblocks = lengths >> 4
-    order = np.argsort(nblocks, kind="stable")
-    sorted_nb = nblocks[order]
-    boundaries = np.flatnonzero(np.diff(sorted_nb)) + 1
-    for group in np.split(order, boundaries):
-        nb = int(nblocks[group[0]])
-        sub = [data[i] for i in group]
-        g1, g2 = _hash_bytes_group(sub, lengths[group], nb, seed)
-        h1_out[group] = g1
-        h2_out[group] = g2
-    return h1_out, h2_out
+    lengths = np.fromiter((len(b) for b in data), dtype=np.int64,
+                          count=len(data))
+    flat = np.frombuffer(b"".join(data), dtype=np.uint8)
+    return murmur3_128_bytes_segmented(flat, np.cumsum(lengths) - lengths,
+                                       lengths, seed)
+
+
+# padded bytes gathered per step of the byte path: the gather's int64
+# index arrays cost ~32 bytes per gathered byte, so a step's scratch stays
+# under 10 MB whatever the batch size
+_GATHER_BYTES = 1 << 18
 
 
 def murmur3_128_bytes_segmented(flat: np.ndarray, starts: np.ndarray,
                                 lengths: np.ndarray,
                                 seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """murmur3-128 of `len(starts)` byte slices of a flat uint8 buffer —
-    identical results to murmur3_128_bytes on the materialized slices, but
-    with zero Python string/bytes objects (the hot path for tokenizers).
+    """murmur3-128 of `len(starts)` byte slices of a flat uint8 buffer
+    (HashByteArrMurmur3 layout), with zero Python string/bytes objects.
+    Slices may overlap and need not be contiguous.
 
-    Buckets by block count like murmur3_128_bytes; each bucket builds its
-    zero-padded word matrix by a single fancy-index gather from `flat`.
+    Slices are bucketed by 16-byte block count so each bucket vectorizes
+    fully; a bucket's zero-padded word matrix is built by one fancy-index
+    gather from `flat` per `_GATHER_BYTES` step. Zero padding reproduces
+    getUint64's partial-read semantics (reference internal/murmur3.go:
+    160-167): reading 8 bytes from the padded row equals assembling `rem`
+    little-endian bytes.
     """
     n = len(starts)
     h1_out = np.empty(n, dtype=U64)
@@ -266,32 +200,35 @@ def murmur3_128_bytes_segmented(flat: np.ndarray, starts: np.ndarray,
     lengths = lengths.astype(np.int64, copy=False)
     nblocks = lengths >> 4
     order = np.argsort(nblocks, kind="stable")
-    sorted_nb = nblocks[order]
-    boundaries = np.flatnonzero(np.diff(sorted_nb)) + 1
+    boundaries = np.flatnonzero(np.diff(nblocks[order])) + 1
     for group in np.split(order, boundaries):
         nb = int(nblocks[group[0]])
-        g_starts, g_lens = starts[group], lengths[group]
-        width = (nb + 1) * 16
-        m = len(group)
-        buf = np.zeros((m, width), dtype=np.uint8)
-        total = int(g_lens.sum())
-        if total:
-            rows = np.repeat(np.arange(m, dtype=np.int64), g_lens)
-            within = (np.arange(total, dtype=np.int64)
-                      - np.repeat(np.cumsum(g_lens) - g_lens, g_lens))
-            src = g_starts[rows] + within
-            buf[rows, within] = flat[src]
-        u = buf.view("<u8")
-        with np.errstate(over="ignore"):
-            h1 = np.full(m, U64(seed), dtype=U64)
-            h2 = h1.copy()
-            for i in range(nb):
-                h1, h2 = _block_mix(h1, h2, u[:, 2 * i], u[:, 2 * i + 1])
-            g1, g2 = _final_mix(h1, h2, u[:, 2 * nb], u[:, 2 * nb + 1],
-                                g_lens.astype(U64))
-        h1_out[group] = g1
-        h2_out[group] = g2
+        step = max(1, _GATHER_BYTES // ((nb + 1) * 16))
+        for sub in np.split(group, range(step, len(group), step)):
+            h1_out[sub], h2_out[sub] = _hash_slices(
+                flat, starts[sub], lengths[sub], nb, seed)
     return h1_out, h2_out
+
+
+def _hash_slices(flat: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+                 nb: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """murmur3-128 of byte slices that all have `nb` full 16-byte blocks."""
+    m = len(starts)
+    buf = np.zeros((m, (nb + 1) * 16), dtype=np.uint8)
+    total = int(lengths.sum())
+    if total:
+        rows = np.repeat(np.arange(m, dtype=np.int64), lengths)
+        within = (np.arange(total, dtype=np.int64)
+                  - np.repeat(np.cumsum(lengths) - lengths, lengths))
+        buf[rows, within] = flat[starts[rows] + within]
+    words = buf.view("<u8")  # (m, 2 * (nb + 1)) little-endian words
+    h1, h2 = _seeded(seed, m)
+    t = np.empty(m, dtype=U64)
+    u = np.empty(m, dtype=U64)
+    for i in range(nb):
+        _block_mix_ip(h1, h2, words[:, 2 * i], words[:, 2 * i + 1], t, u)
+    return _final_mix(h1, h2, words[:, 2 * nb], words[:, 2 * nb + 1],
+                      lengths.astype(U64), t, u)
 
 
 def murmur3_128_scalar(data: bytes, seed: int) -> tuple[int, int]:

@@ -20,7 +20,8 @@ import re
 import numpy as np
 import pandas as pd
 
-from sparkdedup.functions.murmur3 import (murmur3_128_bytes,
+from sparkdedup.functions.murmur3 import (_final_mix, _seeded,
+                                          murmur3_128_bytes,
                                           murmur3_128_bytes_segmented,
                                           murmur3_128_int64_rows)
 
@@ -167,7 +168,6 @@ def _hash_tokens_dedup(flat: np.ndarray, starts: np.ndarray,
     out = np.empty(n, dtype=U64)
     if n == 0:
         return out
-    from sparkdedup.functions.murmur3 import _final_mix  # single-block form
 
     # The packed-word identity keys below are collision-free ONLY when no
     # token contains a NUL byte (zero-padding would alias "a" and "a\x00").
@@ -211,10 +211,8 @@ def _hash_tokens_dedup(flat: np.ndarray, starts: np.ndarray,
         first = np.empty(len(uniq), dtype=np.int64)
         first[codes[::-1]] = np.arange(len(idx8) - 1, -1, -1, dtype=np.int64)
         ulen = s_lens[first].astype(U64)
-        with np.errstate(over="ignore"):
-            hseed = np.full(len(uniq), U64(seed), dtype=U64)
-            uh, _ = _final_mix(hseed, hseed.copy(), uniq.view(U64),
-                               np.zeros(len(uniq), U64), ulen)
+        uh, _ = _final_mix(*_seeded(seed, len(uniq)), uniq.view(U64), None,
+                           ulen)
         out[idx8] = uh[codes]
 
     # 9..15 bytes: (w0, w1) is likewise NUL-free-unambiguous; lexsort the
@@ -231,10 +229,8 @@ def _hash_tokens_dedup(flat: np.ndarray, starts: np.ndarray,
         new = np.ones(m, dtype=bool)
         new[1:] = (w0[1:] != w0[:-1]) | (w1[1:] != w1[:-1])
         ustart = np.flatnonzero(new)
-        with np.errstate(over="ignore"):
-            hseed = np.full(len(ustart), U64(seed), dtype=U64)
-            uh, _ = _final_mix(hseed, hseed.copy(), w0[ustart], w1[ustart],
-                               ln[ustart].astype(U64))
+        uh, _ = _final_mix(*_seeded(seed, len(ustart)), w0[ustart],
+                           w1[ustart], ln[ustart].astype(U64))
         tmp = np.empty(m, dtype=U64)
         tmp[order] = uh[np.cumsum(new) - 1]
         out[idx16] = tmp

@@ -42,39 +42,42 @@ def winnowed_gram_index(docs: DataFrame, id_col: str, text_col: str,
     window minimum of the w-window at the occurrence offset, which the
     index keeps — perfect candidate recall, so an exact verifier
     downstream makes the result exact. Implemented as a numpy kernel per
-    Arrow batch: strided gram gather -> segmented murmur3 -> sliding
-    window_view min (Spark 4.1's codegen for the equivalent nested
-    higher-order-function expressions is unreliable: flaky
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on self-joined reused scans)."""
-    from sparkdedup.functions.murmur3 import murmur3_128_bytes_segmented
+    Arrow batch: every gram of the batch hashed in one segmented murmur3
+    call, then the pipeline's O(n) window minima
+    (signatures._anchors_and_probes with one probe block) — docs with
+    fewer than w grams emit nothing. (Spark 4.1's codegen for the
+    equivalent nested higher-order-function expressions is unreliable:
+    flaky INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on self-joined reused
+    scans.)"""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from sparkdedup.functions.murmur3 import murmur3_128_bytes_segmented
+        from sparkdedup.operators.signatures import _anchors_and_probes
+
         for pdf in batches:
-            ids_out: list[np.ndarray] = []
-            ghs_out: list[np.ndarray] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                data = text.encode("utf-8") if isinstance(text, str) else b""
-                n_grams = len(data) - anch + 1
-                if n_grams < w:
-                    continue
-                buf = np.frombuffer(data, dtype=np.uint8)
-                if probe_only:
-                    starts = np.arange(w, dtype=np.int64)
-                else:
-                    starts = np.arange(n_grams, dtype=np.int64)
-                h, _ = murmur3_128_bytes_segmented(
-                    buf, starts, np.full(len(starts), anch, np.int64), 9001)
-                if probe_only:
-                    sel = h.min(keepdims=True)
-                else:
-                    wins = np.lib.stride_tricks.sliding_window_view(h, w)
-                    sel = np.unique(wins.min(axis=1))
-                ids_out.append(np.full(len(sel), doc_id, dtype=np.int64))
-                ghs_out.append(sel.astype(np.int64))
-            if ids_out:
-                yield pd.DataFrame({
-                    "id": np.concatenate(ids_out),
-                    "gh": np.concatenate(ghs_out)})
+            enc = [t.encode("utf-8") if isinstance(t, str) else b""
+                   for t in pdf[text_col]]
+            n = len(enc)
+            lens = np.fromiter(map(len, enc), dtype=np.int64, count=n)
+            n_grams = lens - anch + 1
+            # the probe side needs only each doc's first w grams
+            per_doc = np.where(n_grams < w, 0, w if probe_only else n_grams)
+            total = int(per_doc.sum())
+            if total == 0:
+                continue
+            seg = np.repeat(np.arange(n, dtype=np.int64), per_doc)
+            starts = ((np.cumsum(lens) - lens)[seg]
+                      + np.arange(total, dtype=np.int64)
+                      - (np.cumsum(per_doc) - per_doc)[seg])
+            h, _ = murmur3_128_bytes_segmented(
+                np.frombuffer(b"".join(enc), dtype=np.uint8), starts,
+                np.full(total, anch, np.int64), 9001)
+            anchors, probes = _anchors_and_probes(h, seg, n, w, 1)
+            sel = probes if probe_only else anchors
+            yield pd.DataFrame({
+                "id": np.repeat(pdf[id_col].to_numpy(np.int64),
+                                [len(x) for x in sel]),
+                "gh": np.concatenate(sel)})
 
     return (docs.select(id_col, text_col)
             .mapInPandas(run, schema="id long, gh long")

@@ -105,16 +105,24 @@ def _anchors_and_probes(
     return anchors, probes
 
 
+def file_ids_batch(repos, paths, commits) -> np.ndarray:
+    """Deterministic file ids: murmur3-128 h1 (seed 42) of
+    repo\\0path\\0commit, reinterpreted as int64. The one definition
+    of the file-id key; the fixtures' truth tables and the catalog's
+    docs-as-files id map use it too."""
+    keys = [f"{r}\x00{p}\x00{c}".encode("utf-8")
+            for r, p, c in zip(repos, paths, commits)]
+    h1, _ = murmur3_128_bytes(keys, 42)
+    return h1.astype(np.int64)
+
+
 def compute_signatures_pdf(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     """Signature computation for one pandas batch (pure function, testable)."""
     n = len(pdf)
     repo, path, commit = pdf["repo"], pdf["path"], pdf["commit"]
     content = pdf["content"].fillna("")
 
-    keys = [f"{r}\x00{p}\x00{c}".encode("utf-8")
-            for r, p, c in zip(repo, path, commit)]
-    fid_h1, _ = murmur3_128_bytes(keys, 42)
-    file_id = fid_h1.astype(np.int64)
+    file_id = file_ids_batch(repo, path, commit)
 
     sha = [hashlib.sha256(t.encode("utf-8")).hexdigest() for t in content]
 

@@ -230,32 +230,46 @@ def _word_gram_inv(spark, sf_dir,
 
 def _doc_idmap(docs: DataFrame) -> DataFrame:
     """(file_id, orig_id) for the docs-as-files mapping WITHOUT running
-    the signature kernel: file_id is a pure function of
-    (repo, path, commit) = ('docs', str(doc_id), '0')
-    (operators/signatures.py:53-56 — murmur3-128(repo\\0path\\0commit,
-    seed 42).h1), independent of content. The LSH queries join this map
-    back onto candidate pairs TWICE (src and dst); deriving it from the
-    signatures frame re-ran the whole tokenize+shingle+KMV kernel per
-    join branch. This kernel reads one long column. Equality with
-    signature_stage's file_id is pinned in tests/test_queries.py."""
+    the signature kernel: file_id is file_ids_batch over
+    (repo, path, commit) = ('docs', str(doc_id), '0') — the key
+    _docs_as_files feeds signature_stage — independent of content. The
+    LSH queries join this map back onto candidate pairs TWICE (src and
+    dst); deriving it from the signatures frame re-ran the whole
+    tokenize+shingle+KMV kernel per join branch. This kernel reads one
+    long column. Equality with signature_stage's file_id is pinned in
+    tests/test_queries.py."""
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkdedup.functions.murmur3 import murmur3_128_bytes
+        from sparkdedup.operators.signatures import file_ids_batch
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["doc_id"].to_numpy()
-            keys = [("docs\x00%d\x000" % d).encode("utf-8") for d in ids]
-            h1, _ = murmur3_128_bytes(keys, 42)
-            yield pd.DataFrame({"file_id": h1.astype(np.int64),
-                                "orig_id": ids})
+            yield pd.DataFrame({
+                "file_id": file_ids_batch(
+                    ["docs"] * len(ids), map(str, ids), ["0"] * len(ids)),
+                "orig_id": ids})
 
     return docs.select("doc_id").mapInPandas(
         kern, schema="file_id long, orig_id long")
+
+
+def _jaccard_from_counts(inter: DataFrame, sizes: DataFrame,
+                        tau: float) -> DataFrame:
+    """(src, dst, jaccard) pairs with jaccard >= tau, from the pair
+    intersection counts (src, dst, inter) and the per-doc set sizes
+    (doc_id, n); jaccard is rounded to 6 places like the oracles."""
+    na = sizes.select(F.col("doc_id").alias("src"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("dst"), F.col("n").alias("nb"))
+    return (
+        inter.join(na, "src").join(nb, "dst")
+        .withColumn("jaccard", F.round(
+            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
+        .filter(F.col("jaccard") >= tau)
+        .select("src", "dst", "jaccard"))
 
 
 def _exact_jaccard_on_pairs(cand: DataFrame, inv: DataFrame,
@@ -272,14 +286,7 @@ def _exact_jaccard_on_pairs(cand: DataFrame, inv: DataFrame,
     b_c = inv_b.join(cand.select("dst").distinct(), "dst", "left_semi")
     inter = (cand.join(a_c, "src").join(b_c, ["dst", "gh"])
              .groupBy("src", "dst").agg(F.count("*").alias("inter")))
-    na = sizes.select(F.col("doc_id").alias("src"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("dst"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "src").join(nb, "dst")
-        .withColumn("jaccard", F.round(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("src", "dst", "jaccard"))
+    return _jaccard_from_counts(inter, sizes, threshold)
 
 
 def q_ngram_jaccard_pairs(spark, sf_dir):
@@ -313,15 +320,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     b = cold.select("gh", F.col("doc_id").alias("dst"))
     inter = (a.join(b, "gh").filter(F.col("src") < F.col("dst"))
              .groupBy("src", "dst").agg(F.count("*").alias("inter")))
-    na = sizes.select(F.col("doc_id").alias("src"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("dst"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "src").join(nb, "dst")
-        .withColumn("jaccard", F.round(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= 0.2)
-        .select("src", "dst", "jaccard")
-    )
+    return _jaccard_from_counts(inter, sizes, 0.2)
 
 
 # the oracle applies the SAME df <= 64 posting cap as the Spark plan
@@ -429,16 +428,16 @@ def q_substr_containment_docs(spark, sf_dir):
     instead of indexing EVERY 24-char gram of every container (w=1
     winnowing, O(chars) index rows), the container side keeps only window
     minima: position i is selected iff its gram hash is the minimum of
-    some w-window containing it (two window passes: trailing rolling min,
-    then leading max of that) — expected 2/(w+1) density, a ~w/2 x smaller
-    index and join. The containee side needs exactly ONE probe: the argmin
-    gram among its first w grams. Guarantee: if ta occurs in tb at offset
-    o and has >= w grams, ta's argmin over grams [1..w] IS tb's window
-    minimum of [o..o+w-1], which the selection keeps — so the candidate
-    join has perfect recall (64-bit hash ties are the only caveat,
-    ~w^2/2^64 per window). Verification is exact (instr), so false
-    positives are free. Docs with fewer than ANCH+W-1 chars go through
-    the (tiny) brute branch."""
+    some w-window containing it (the pipeline's O(n) window minima,
+    operators/signatures.py::_anchors_and_probes) — expected 2/(w+1)
+    density, a ~w/2 x smaller index and join. The containee side needs
+    exactly ONE probe: the argmin gram among its first w grams.
+    Guarantee: if ta occurs in tb at offset o and has >= w grams, ta's
+    argmin over grams [1..w] IS tb's window minimum of [o..o+w-1], which
+    the selection keeps — so the candidate join has perfect recall
+    (64-bit hash ties are the only caveat, ~w^2/2^64 per window).
+    Verification is exact (instr), so false positives are free. Docs
+    with fewer than ANCH+W-1 chars go through the (tiny) brute branch."""
     ANCH, W = 24, 16
     # independent scans per side: deriving both from one DataFrame trips a
     # Catalyst attribute-resolution INTERNAL_ERROR on the self-join over
@@ -1684,6 +1683,29 @@ WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sig, b.sig)) <= 4
 """
 
 
+def _quantized_probes(emb: DataFrame) -> DataFrame:
+    """Every embedding re-encoded through the deterministic 1/16-step
+    quantizer: the probe side of both bucketed lookup queries. 1/16 steps
+    are exact in float32 AND double, so the SQL oracles (which recompute
+    floor(x * 16) / 16) see bit-identical probe vectors."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    def quant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = (np.floor(v * 16) / 16).astype(np.float32)
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
+                                "embedding": list(q)})
+
+    return emb.mapInPandas(
+        quant, schema="vec_id long, embedding array<float>")
+
+
 def q_ann_lsh_lookup(spark, sf_dir):
     """Sub-quadratic similarity search under the driver gate: every
     embedding is re-encoded through a deterministic 1/16-step quantizer
@@ -1704,26 +1726,11 @@ def q_ann_lsh_lookup(spark, sf_dir):
 
     1/16 quantization steps are exact in float32 AND double, so both
     engines see bit-identical probe vectors."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     from sparkdedup.operators.similarity import ann_lsh_lookup
 
     emb = _read(spark, sf_dir, "embeddings")
 
-    def quant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q = (np.floor(v * 16) / 16).astype(np.float32)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                                "embedding": list(q)})
-
-    probes = emb.mapInPandas(
-        quant, schema="vec_id long, embedding array<float>")
+    probes = _quantized_probes(emb)
     res = ann_lsh_lookup(probes, emb, dim=64, k=1,
                          n_tables=64, n_bits=16, seed=9001)
     return res.select("qid", "nid", "cosine")
@@ -1772,26 +1779,11 @@ def q_ann_ivf_lookup(spark, sf_dir):
     pytest-gated at the operator level on data the gate never sees).
     The fitted codebook is memoized under (dataset path + mtime), so
     repeat invocations skip the trainer TakeOrdered pull entirely."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     from sparkdedup.operators.similarity import ann_ivf_lookup
 
     emb = _read(spark, sf_dir, "embeddings")
 
-    def quant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            q = (np.floor(v * 16) / 16).astype(np.float32)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                                "embedding": list(q)})
-
-    probes = emb.mapInPandas(
-        quant, schema="vec_id long, embedding array<float>")
+    probes = _quantized_probes(emb)
     n = _table_rows(sf_dir, "embeddings")
     res = ann_ivf_lookup(probes, emb, k=1,
                          n_centroids=16 if n < 1000 else 32, n_probe=8,

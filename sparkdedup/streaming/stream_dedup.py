@@ -5,8 +5,9 @@ anywhere (SURVEY.md §2.8: no time type in any Update signature) — so every
 sketch stage lifts to a streaming groupBy().agg() for free. This module
 demonstrates the two shapes the engine needs:
 
-  1. streaming signature extraction (same mapInPandas kernel — stateless,
-     so it is identical code in batch and streaming), and
+  1. streaming signature extraction: operators.signatures.signature_stage
+     applied to a streaming DataFrame as is (its mapInPandas kernel is
+     stateless, so batch and streaming run identical code), and
   2. streaming incremental exact-dedup + windowed rollups with watermarks
      (the stateful shape; first-seen semantics via flatMapGroupsWithState
      analog applyInPandasWithState, or dropDuplicates with watermark).
@@ -18,15 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from sparkdedup.config import DedupConfig
-from sparkdedup.operators.signatures import signature_stage
-
-
-def streaming_signatures(files_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Stateless streaming signature extraction — literally the batch
-    operator applied to a streaming DataFrame (mapInPandas is streamable)."""
-    return signature_stage(files_stream, cfg)
 
 
 def streaming_first_seen(docs_stream: DataFrame,

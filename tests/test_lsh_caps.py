@@ -190,3 +190,47 @@ def test_anchor_containment_candidates_window_boundary(spark):
     assert (ids["inner"], ids["host"]) in anchor_pairs
     # the tiny containee is below the anchor window: not found
     assert (ids["tiny"], ids["host2"]) not in anchor_pairs
+
+
+@pytest.mark.parametrize("probe_only", [False, True])
+def test_winnowed_gram_index_matches_per_doc_reference(spark, probe_only):
+    """The batched winnowing kernel emits exactly the rows of the
+    per-document sliding-window algorithm (inlined below): distinct
+    w-window minima of each doc's anch-byte-gram hashes, or one probe =
+    min of its first w gram hashes; docs with < w grams emit nothing."""
+    import pandas as pd
+
+    from sparkdedup.functions.murmur3 import murmur3_128_bytes
+    from sparkdedup.operators.containment import winnowed_gram_index
+
+    anch, w = 24, 16
+    rng = np.random.default_rng(11)
+    alphabet = list("ab c\n_{}") + ["é", "中"]
+    texts = [None, "", "x" * (anch + w - 2), "y" * (anch + w - 1),
+             "é" * 20, "中文" * 10]
+    texts += ["".join(rng.choice(alphabet, int(n)))
+              for n in rng.integers(0, 200, 40)]
+    pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64),
+                        "text": pd.Series(texts, dtype=object)})
+
+    expected = []
+    for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+        data = text.encode("utf-8") if isinstance(text, str) else b""
+        n_grams = len(data) - anch + 1
+        if n_grams < w:
+            continue
+        h, _ = murmur3_128_bytes(
+            [data[i:i + anch] for i in range(n_grams)], 9001)
+        if probe_only:
+            sel = [h[:w].min()]
+        else:
+            sel = np.unique(
+                np.lib.stride_tricks.sliding_window_view(h, w).min(axis=1))
+        expected += [(int(doc_id), int(g)) for g in
+                     np.asarray(sel, dtype=np.uint64).astype(np.int64)]
+
+    docs = spark.createDataFrame(pdf, "doc_id long, text string") \
+        .repartition(3)
+    got = [(r["doc_id"], r["gh"]) for r in winnowed_gram_index(
+        docs, "doc_id", "text", anch, w, probe_only=probe_only).collect()]
+    assert expected and sorted(got) == sorted(expected)

@@ -7,10 +7,12 @@ vector; theta/sketch_serialization_test.go cross-language vectors).
 import numpy as np
 import pytest
 
+from sparkdedup.functions import murmur3 as m3
 from sparkdedup.functions.murmur3 import (
     compute_seed_hash,
     fmix64,
     murmur3_128_bytes,
+    murmur3_128_bytes_segmented,
     murmur3_128_int64_rows,
     murmur3_128_int64_scalar,
     murmur3_128_int64_single,
@@ -72,3 +74,20 @@ def test_fmix64_bijective_sample():
     rng = np.random.default_rng(3)
     x = rng.integers(0, 2**64, 10_000, dtype=np.uint64)
     assert len(np.unique(fmix64(x))) == len(np.unique(x))
+
+
+@pytest.mark.parametrize("gather_bytes", [None, 64])
+@pytest.mark.parametrize("seed", [0, 9001])
+def test_bytes_segmented_matches_scalar(seed, gather_bytes, monkeypatch):
+    """Non-contiguous and overlapping slices of one buffer, lengths 0-48;
+    a 64-byte gather step also splits every block-count bucket."""
+    if gather_bytes is not None:
+        monkeypatch.setattr(m3, "_GATHER_BYTES", gather_bytes)
+    rng = np.random.default_rng(seed + 5)
+    flat = rng.integers(0, 256, 400, dtype=np.uint8)
+    lengths = np.tile(np.arange(49, dtype=np.int64), 3)
+    starts = rng.integers(0, len(flat) - 48, len(lengths))
+    h1, h2 = murmur3_128_bytes_segmented(flat, starts, lengths, seed)
+    for s, n, a, b in zip(starts, lengths, h1, h2):
+        assert (int(a), int(b)) == murmur3_128_scalar(
+            flat[s:s + n].tobytes(), seed), f"start={s} len={n}"

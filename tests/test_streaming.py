@@ -67,7 +67,6 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
     must produce identical signatures on a streaming source."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.signatures import signature_stage
-    from sparkdedup.streaming.stream_dedup import streaming_signatures
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
     files = docs.selectExpr("'r' as repo", "cast(doc_id as string) as path",
@@ -79,7 +78,7 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
                                  DedupConfig()).toPandas()
 
     stream = spark.readStream.schema(files.schema).parquet(src)
-    q = (streaming_signatures(stream, DedupConfig())
+    q = (signature_stage(stream, DedupConfig())
          .writeStream.outputMode("append").format("memory")
          .queryName("sig_stream")
          .option("checkpointLocation", str(tmp_path / "ck3"))
