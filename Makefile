@@ -1,4 +1,4 @@
-.PHONY: test bench dist scaling clean loc
+.PHONY: test bench dist scaling clean loc kernel
 
 # Tier-1: the whole suite, one Spark core per CPU, shuffle spill in a
 # scratch dir, no .pytest_cache left in the tree
@@ -12,6 +12,12 @@ bench:
 # package line count, the figure each CHANGES.md entry records
 loc:
 	@find sparkdedup -name '*.py' | xargs cat | wc -l
+
+# signature/word-gram kernel digests and best-of-5 seconds on the
+# perfbench pipeline workloads (equal digests = byte-identical kernels)
+SEED ?= 1
+kernel:
+	python tools/kernel_digest.py --seed $(SEED)
 
 scaling:
 	python tools/scaling_bench.py

@@ -12,7 +12,8 @@ One mix, one byte path: every batch hash runs the in-place block mix
 (`_block_mix_ip`) and the in-place finalizer (`_final_mix`, which ends in
 `_fmix_ip`), each writing into preallocated scratch so no mix step
 allocates. Byte strings hash through `murmur3_128_bytes_segmented`;
-`murmur3_128_bytes` only joins its inputs into one buffer first. The
+`murmur3_128_bytes` only joins its inputs into one buffer first, and
+`murmur3_128_strings` hashes the UTF-8 of each distinct string once. The
 pure-python scalar functions at the end are independent references for
 the tests.
 
@@ -24,6 +25,7 @@ Golden vector (reference internal/murmur3_test.go:26-37):
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 U64 = np.uint64
 _C1 = U64(0x87C37B91114253D5)  # reference internal/murmur3.go:21
@@ -169,6 +171,15 @@ def murmur3_128_bytes(data: list[bytes], seed: int) -> tuple[np.ndarray, np.ndar
     flat = np.frombuffer(b"".join(data), dtype=np.uint8)
     return murmur3_128_bytes_segmented(flat, np.cumsum(lengths) - lengths,
                                        lengths, seed)
+
+
+def murmur3_128_strings(values, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """murmur3-128 (h1, h2) of the UTF-8 of each string in `values`,
+    aligned with it: one factorize, then each DISTINCT string is encoded
+    and hashed once."""
+    codes, uniques = pd.factorize(np.asarray(values, dtype=object))
+    h1, h2 = murmur3_128_bytes([u.encode("utf-8") for u in uniques], seed)
+    return h1[codes], h2[codes]
 
 
 # padded bytes gathered per step of the byte path: the gather's int64

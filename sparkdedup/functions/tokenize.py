@@ -9,8 +9,9 @@ its UTF-8 bytes (UpdateBytes semantics, theta/update_sketch.go:377-393);
 empty strings are rejected exactly like the reference's UpdateString
 (theta/update_sketch.go:353-356).
 
-The whole path is batch-first: unique-token hashing via pandas factorize so
-each distinct token is murmur3'd once per batch.
+The whole path is batch-first on the flat layout of functions/segments.py
+(each distinct token murmur3'd once per batch; shingles and word grams are
+`window_hashes`); only the non-ASCII regex fallback works per document.
 """
 
 from __future__ import annotations
@@ -21,9 +22,12 @@ import numpy as np
 import pandas as pd
 
 from sparkdedup.functions.murmur3 import (_final_mix, _seeded,
-                                          murmur3_128_bytes,
                                           murmur3_128_bytes_segmented,
-                                          murmur3_128_int64_rows)
+                                          murmur3_128_int64_rows,
+                                          murmur3_128_strings)
+from sparkdedup.functions.segments import (encode_texts, offsets, ranges,
+                                           seg_ids, sort_unique,
+                                           window_hashes)
 
 U64 = np.uint64
 
@@ -256,25 +260,17 @@ def token_hashes_batch(
     murmur3 kernel — zero Python string objects. Docs containing non-ASCII
     bytes take the regex path (utf-8 continuation bytes have no per-byte
     code-point class)."""
-    tl = list(texts)
-    n_docs = len(tl)
-    enc = [t.encode("utf-8") if isinstance(t, str) else b"" for t in tl]
-    lens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=n_docs)
+    # '\n' separators keep AD runs from bridging adjacent docs
+    flat, lens, doc_starts = encode_texts(texts, b"\n")
+    n_docs = len(lens)
     if n_docs == 0 or int(lens.sum()) == 0:
         return (np.empty(0, U64), np.empty(0, np.int64),
                 np.zeros(n_docs, np.int64))
-    # '\n' separators keep AD runs from bridging adjacent docs
-    flat = np.frombuffer(b"\n".join(enc), dtype=np.uint8)
-    doc_starts = np.cumsum(lens + 1) - (lens + 1)
-    non_ascii = np.flatnonzero(flat >= 0x80)
-    if len(non_ascii):
-        bad_docs = np.unique(
-            np.searchsorted(doc_starts, non_ascii, side="right") - 1)
+    bad_docs = np.unique(np.searchsorted(
+        doc_starts, np.flatnonzero(flat >= 0x80), side="right") - 1)
+    if len(bad_docs):
         flat = flat.copy()
-        for d in bad_docs:
-            flat[doc_starts[d]: doc_starts[d] + lens[d]] = 10  # blank to \n
-    else:
-        bad_docs = np.empty(0, np.int64)
+        flat[ranges(doc_starts[bad_docs], lens[bad_docs])] = 10  # blank to \n
 
     tok_starts, tok_lens = _token_spans_ascii(flat)
     # tokens per doc: search the (few) doc boundaries against the (many)
@@ -284,34 +280,22 @@ def token_hashes_batch(
     hashes = _hash_tokens_dedup(flat, tok_starts, tok_lens, seed)
 
     if len(bad_docs):
-        fb_lists = [_TOKEN_RE.findall(tl[d]) for d in bad_docs]
-        fb_counts = np.fromiter((len(x) for x in fb_lists), np.int64,
+        fb_lists = [_TOKEN_RE.findall(t)
+                    for t in np.asarray(texts, dtype=object)[bad_docs]]
+        fb_counts = np.fromiter(map(len, fb_lists), np.int64,
                                 count=len(fb_lists))
+        fb_hashes, _ = murmur3_128_strings(
+            [t for toks in fb_lists for t in toks], seed)
+        # merge ascii + fallback streams back into doc order (blanked
+        # docs hold no ascii tokens)
+        n_ascii = n_tokens.copy()
         n_tokens[bad_docs] = fb_counts
-        if fb_counts.sum():
-            fb_tokens = [t for toks in fb_lists for t in toks]
-            codes, uniques = pd.factorize(pd.Series(fb_tokens, dtype=object))
-            uh1, _ = murmur3_128_bytes(
-                [u.encode("utf-8") for u in uniques], seed)
-            fb_hashes = uh1[codes]
-        else:
-            fb_hashes = np.empty(0, U64)
-        # merge ascii + fallback streams back into doc order
-        offs = np.cumsum(n_tokens) - n_tokens
-        total = int(n_tokens.sum())
-        out = np.empty(total, dtype=U64)
-        if len(tok_starts):
-            tok_doc = np.searchsorted(doc_starts, tok_starts,
-                                      side="right") - 1
-            within = np.arange(len(tok_doc), dtype=np.int64) - firsts[tok_doc]
-            out[offs[tok_doc] + within] = hashes
-        pos = 0
-        for d, c in zip(bad_docs, fb_counts):
-            out[offs[d]: offs[d] + c] = fb_hashes[pos: pos + c]
-            pos += c
+        offs = offsets(n_tokens)
+        out = np.empty(int(n_tokens.sum()), dtype=U64)
+        out[ranges(offs, n_ascii)] = hashes
+        out[ranges(offs[bad_docs], fb_counts)] = fb_hashes
         hashes = out
-    seg = np.repeat(np.arange(n_docs, dtype=np.int64), n_tokens)
-    return hashes, seg, n_tokens
+    return hashes, seg_ids(n_tokens), n_tokens
 
 
 def word_gram_hashes_batch(texts: pd.Series, n: int,
@@ -325,16 +309,12 @@ def word_gram_hashes_batch(texts: pd.Series, n: int,
     in-doc dedup done (sorted per segment).
 
     Fully vectorized: byte-level word spans -> dedup word hashing
-    (_hash_tokens_dedup) -> sliding-window murmur over word-hash rows ->
-    per-segment sort + adjacent-dedup."""
-    tl = list(texts)
-    n_docs = len(tl)
-    enc = [t.encode("utf-8") if isinstance(t, str) else b"" for t in tl]
-    lens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=n_docs)
+    (_hash_tokens_dedup) -> in-document n-window murmur (window_hashes)
+    -> per-document sorted distinct (sort_unique)."""
+    flat, lens, doc_starts = encode_texts(texts, b"\n")
+    n_docs = len(lens)
     if n_docs == 0 or int(lens.sum()) == 0:
         return np.empty(0, U64), np.empty(0, np.int64)
-    flat = np.frombuffer(b"\n".join(enc), dtype=np.uint8)
-    doc_starts = np.cumsum(lens + 1) - (lens + 1)
     # whitespace = RE2's \s class [ \t\n\f\r] exactly (the DuckDB oracle's
     # string_split_regex semantics). NOTE: python's ASCII \s ALSO matches
     # \x0b (vertical tab) — deliberately excluded here so a \v-bearing
@@ -352,32 +332,9 @@ def word_gram_hashes_batch(texts: pd.Series, n: int,
     w_hashes = _hash_tokens_dedup(flat, ws, we - ws, seed)
     firsts = np.searchsorted(ws, doc_starts)
     n_words = np.diff(np.r_[firsts, len(ws)]).astype(np.int64)
-    seg = np.repeat(np.arange(n_docs, dtype=np.int64), n_words)
-    # sliding n-window murmur over the flat word-hash stream; keep only
-    # windows fully inside a doc with >= n words
-    if len(w_hashes) < n:
-        return np.empty(0, U64), np.empty(0, np.int64)
-    windows = np.lib.stride_tricks.sliding_window_view(w_hashes, n)
-    gh_all = np.empty(len(windows), dtype=U64)
-    CH = 1 << 18
-    for s in range(0, len(windows), CH):
-        e = min(s + CH, len(windows))
-        gh_all[s:e], _ = murmur3_128_int64_rows(windows[s:e], seed)
-    n_grams = np.maximum(n_words - n + 1, 0)
-    starts_w = np.cumsum(n_words) - n_words
-    vseg = np.repeat(np.arange(n_docs, dtype=np.int64), n_grams)
-    vstarts = np.cumsum(n_grams) - n_grams
-    offs = np.arange(int(n_grams.sum()), dtype=np.int64) - vstarts[vseg]
-    gh = gh_all[starts_w[vseg] + offs]
-    # per-doc distinct: segments are contiguous -> per-slice sort + dedup
-    gh = gh.copy()
-    seg_offs = np.cumsum(n_grams) - n_grams
-    for d in np.flatnonzero(n_grams):
-        gh[seg_offs[d]: seg_offs[d] + n_grams[d]].sort()
-    keep = np.ones(len(gh), dtype=bool)
-    if len(gh):
-        keep[1:] = (gh[1:] != gh[:-1]) | (vseg[1:] != vseg[:-1])
-    return gh[keep], vseg[keep]
+    gh, gseg = window_hashes(w_hashes, n_words, n, seed)
+    gh, n_grams = sort_unique(gh, gseg, n_docs)
+    return gh, seg_ids(n_grams)
 
 
 def shingle_hashes_batch(
@@ -389,59 +346,24 @@ def shingle_hashes_batch(
     Documents shorter than w tokens contribute one shingle over all their
     tokens (so short files still dedup). Returns (screened shingle hashes,
     seg ids aligned to them, n_shingles per doc BEFORE screening+dedup).
+    Long documents' shingles come first, in document order, then one per
+    short document: the seg ids are contiguous per document but not
+    monotonic.
     """
-    n_docs = len(n_tokens)
-    if len(token_hashes) == 0:
-        return (np.empty(0, U64), np.empty(0, np.int64),
-                np.zeros(n_docs, np.int64))
     w = shingle_size
-    total = len(token_hashes)
-    starts = np.cumsum(n_tokens) - n_tokens  # doc start offsets in flat array
     # number of shingles per doc: max(n - w + 1, 1 if n > 0 else 0)
     n_shingles = np.where(n_tokens > 0, np.maximum(n_tokens - w + 1, 1), 0)
-    total_sh = int(n_shingles.sum())
-    if total_sh == 0:
+    if int(n_shingles.sum()) == 0:
         return (np.empty(0, U64), np.empty(0, np.int64), n_shingles)
-
-    long_docs = n_tokens >= w
-    # Fast path: hash EVERY w-window of the flat token array through a
-    # zero-copy strided view (includes doc-boundary-crossing windows, ~w
-    # junk rows per boundary), then keep the windows that lie fully inside
-    # a doc. Avoids materializing a (total_sh, w) gather.
-    out_h: list[np.ndarray] = []
-    out_seg: list[np.ndarray] = []
-    if total >= w and long_docs.any():
-        windows = np.lib.stride_tricks.sliding_window_view(token_hashes, w)
-        # chunked hashing: keeps murmur3's elementwise temporaries at ~2MB
-        # (cache-resident, allocator-reusable) instead of multi-GB streams
-        n_win = len(windows)
-        h1_all = np.empty(n_win, dtype=U64)
-        CH = 1 << 18
-        for s in range(0, n_win, CH):
-            e = min(s + CH, n_win)
-            h1_all[s:e], _ = murmur3_128_int64_rows(windows[s:e], seed)
-        # valid window starts per long doc: starts[d] .. starts[d]+n-w
-        n_valid = np.where(long_docs, n_tokens - w + 1, 0)
-        vseg = np.repeat(np.arange(n_docs, dtype=np.int64), n_valid)
-        vstarts = np.cumsum(n_valid) - n_valid
-        offs = np.arange(int(n_valid.sum()), dtype=np.int64) - vstarts[vseg]
-        widx = starts[vseg] + offs
-        out_h.append(h1_all[widx])
-        out_seg.append(vseg)
+    h1_long, seg_long = window_hashes(token_hashes, n_tokens, w, seed)
     # Short docs (< w tokens): one clamped shingle over all their tokens
     # (pad by repeating the last token) so tiny files still dedup.
-    short = np.flatnonzero(~long_docs & (n_tokens > 0))
-    if len(short):
-        rows = np.empty((len(short), w), dtype=U64)
-        for j, d in enumerate(short):
-            toks = token_hashes[starts[d] : starts[d] + n_tokens[d]]
-            rows[j, : len(toks)] = toks
-            rows[j, len(toks):] = toks[-1]
-        h1s, _ = murmur3_128_int64_rows(rows, seed)
-        out_h.append(h1s)
-        out_seg.append(short.astype(np.int64))
-    h1 = np.concatenate(out_h) if out_h else np.empty(0, U64)
-    sh_seg = np.concatenate(out_seg) if out_seg else np.empty(0, np.int64)
+    short = np.flatnonzero((n_tokens > 0) & (n_tokens < w))
+    pad = np.minimum(np.arange(w), n_tokens[short, None] - 1)
+    h1_short, _ = murmur3_128_int64_rows(
+        token_hashes[offsets(n_tokens)[short, None] + pad], seed)
+    h1 = np.concatenate([h1_long, h1_short])
+    sh_seg = np.concatenate([seg_long, short.astype(np.int64)])
     sh = h1 >> U64(1)                            # theta screening shift
     keep = sh != U64(0)
     return sh[keep], sh_seg[keep], n_shingles

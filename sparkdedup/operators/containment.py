@@ -12,6 +12,8 @@ shingles to be found.
 Verification is exact: join contents and check substring containment
 JVM-side (F.instr) — zero false positives, which makes this pass's output
 the ground truth for `contained` pairs at any scale.
+The catalog's `winnowed_gram_index` runs the signature stage's winnowing
+kernel on the flat (values, counts) layout of functions/segments.py.
 """
 
 from __future__ import annotations
@@ -52,32 +54,29 @@ def winnowed_gram_index(docs: DataFrame, id_col: str, text_col: str,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from sparkdedup.functions.murmur3 import murmur3_128_bytes_segmented
+        from sparkdedup.functions.segments import (encode_texts, ranges,
+                                                   seg_ids)
         from sparkdedup.operators.signatures import _anchors_and_probes
 
         for pdf in batches:
-            enc = [t.encode("utf-8") if isinstance(t, str) else b""
-                   for t in pdf[text_col]]
-            n = len(enc)
-            lens = np.fromiter(map(len, enc), dtype=np.int64, count=n)
+            flat, lens, doc_starts = encode_texts(pdf[text_col], b"")
+            n = len(lens)
             n_grams = lens - anch + 1
             # the probe side needs only each doc's first w grams
             per_doc = np.where(n_grams < w, 0, w if probe_only else n_grams)
             total = int(per_doc.sum())
             if total == 0:
                 continue
-            seg = np.repeat(np.arange(n, dtype=np.int64), per_doc)
-            starts = ((np.cumsum(lens) - lens)[seg]
-                      + np.arange(total, dtype=np.int64)
-                      - (np.cumsum(per_doc) - per_doc)[seg])
             h, _ = murmur3_128_bytes_segmented(
-                np.frombuffer(b"".join(enc), dtype=np.uint8), starts,
+                flat, ranges(doc_starts, per_doc),
                 np.full(total, anch, np.int64), 9001)
-            anchors, probes = _anchors_and_probes(h, seg, n, w, 1)
-            sel = probes if probe_only else anchors
+            anchors, n_anchors, probes, n_probes = _anchors_and_probes(
+                h, seg_ids(per_doc), n, w, 1)
+            gh, counts = (probes, n_probes) if probe_only else \
+                (anchors, n_anchors)
             yield pd.DataFrame({
-                "id": np.repeat(pdf[id_col].to_numpy(np.int64),
-                                [len(x) for x in sel]),
-                "gh": np.concatenate(sel)})
+                "id": np.repeat(pdf[id_col].to_numpy(np.int64), counts),
+                "gh": gh})
 
     return (docs.select(id_col, text_col)
             .mapInPandas(run, schema="id long, gh long")

@@ -11,6 +11,8 @@ This is the reference's designed distribution seam made literal
 The exchange between the phases is the one shuffle, carrying only
 (group, <=k longs) per partition — the same partial/final shape Spark's
 own HLL aggregate uses, but with theta/KMV semantics and murmur3 parity.
+The update phase runs on groups as the segments of functions/segments.py
+(`sort_unique` + `smallest_k` over all groups at once, no per-group loop).
 """
 
 from __future__ import annotations
@@ -20,9 +22,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from sparkdedup.functions.murmur3 import murmur3_128_bytes
+from sparkdedup.functions.murmur3 import murmur3_128_strings
+from sparkdedup.functions.segments import (cells, from_cells, smallest_k,
+                                           sort_unique)
 from sparkdedup.functions.theta import MAX_THETA, KmvSketch
 
 U64 = np.uint64
@@ -46,54 +49,25 @@ def kmv_distinct_agg(df: DataFrame, group_col: str, value_col: str,
             if not len(pdf):
                 continue
             if values_are_arrays:
-                lens = pdf[value_col].map(len).to_numpy()
-                flat = np.concatenate([np.asarray(a, dtype=object)
-                                       for a in pdf[value_col]]) \
-                    if lens.sum() else np.empty(0, dtype=object)
+                flat, lens = from_cells(pdf[value_col], None)
                 vals = pd.Series(flat, dtype=object).astype(str)
                 groups_all = np.repeat(
                     pdf[group_col].astype(str).to_numpy(), lens)
             else:
                 vals = pdf[value_col].astype(str)
                 groups_all = pdf[group_col].astype(str).to_numpy()
-            codes, uniques = pd.factorize(vals)
-            h1, _ = murmur3_128_bytes(
-                [u.encode("utf-8") for u in uniques], seed)
-            h = (h1 >> U64(1))
-            hashes = h[codes]
-            # argsort-segment by factorized group code: O(n log n) total,
-            # no per-group boolean-mask rescans (same pattern as
-            # signatures.py's lexsort/bincount kernel).
+            h1, _ = murmur3_128_strings(vals, seed)
+            hashes = h1 >> U64(1)
             gcodes, guniq = pd.factorize(groups_all)
+            # a group whose every hash screened to 0 (astronomically rare)
+            # keeps its row: an empty partial, so it appears downstream
             keep = hashes != U64(0)
-            hashes, gcodes = hashes[keep], gcodes[keep]
-            order = np.lexsort((hashes, gcodes))
-            gs, hs = gcodes[order], hashes[order]
-            starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]]) \
-                if len(gs) else np.empty(0, np.int64)
-            ends = np.r_[starts[1:], len(gs)] if len(starts) else starts
-            out_g, out_e, out_t = [], [], []
-            for s, e in zip(starts, ends):
-                gh = hs[s:e]
-                gh = gh[np.r_[True, gh[1:] != gh[:-1]]]  # sorted -> distinct
-                if len(gh) > k:
-                    theta = int(gh[k])
-                    gh = gh[:k]
-                else:
-                    theta = MAX_THETA
-                out_g.append(guniq[gs[s]])
-                out_e.append(gh.astype(np.int64).tolist())
-                out_t.append(theta)
-            # groups whose every hash screened to 0 (astronomically rare)
-            # still need an empty partial so the group appears downstream
-            seen = {gs[s] for s in starts}
-            for gi in range(len(guniq)):
-                if gi not in seen:
-                    out_g.append(guniq[gi])
-                    out_e.append([])
-                    out_t.append(MAX_THETA)
-            yield pd.DataFrame({group_col: out_g, "entries": out_e,
-                                "theta": out_t})
+            u, counts = sort_unique(hashes[keep], gcodes[keep], len(guniq))
+            kept, n_kept, theta = smallest_k(u, counts, k)
+            yield pd.DataFrame({
+                group_col: guniq,
+                "entries": cells(u[kept].view(np.int64), n_kept),
+                "theta": theta})
 
     partials = df.select(group_col, value_col).mapInPandas(
         update_phase, schema=partial_schema)
@@ -105,10 +79,7 @@ def kmv_distinct_agg(df: DataFrame, group_col: str, value_col: str,
         # multiway union in one pass (order-independent, same result as
         # pairwise kmv_union folds): theta' = min, keep < theta', k-trim
         theta = int(pdf["theta"].min()) if len(pdf) else MAX_THETA
-        all_h = (np.concatenate(
-            [np.asarray(e, dtype=np.int64) for e in pdf["entries"]])
-            .view(U64) if len(pdf) else np.empty(0, U64))
-        all_h = np.unique(all_h)
+        all_h = np.unique(from_cells(pdf["entries"])[0].view(U64))
         all_h = all_h[all_h < U64(theta)]
         if len(all_h) > k:
             theta = int(all_h[k])

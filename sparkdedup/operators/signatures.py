@@ -1,7 +1,8 @@
 """Signature stage: files -> per-file dedup signatures, one mapInPandas pass.
 
-All math is vectorized numpy over Arrow batches (no per-row python except
-C-speed hashlib/regex calls). The stage computes, per file:
+All math is vectorized numpy over Arrow batches on the flat layout of
+functions/segments.py; per-row Python is only the C-speed hashlib/encode
+calls and `sort_unique`'s per-document sort. The stage computes, per file:
   file_id   - murmur3-128(h1, seed 42) of repo\\0path\\0commit (int64)
   sha       - sha256 hex of content (per-row invariant vs source table)
   n_tokens / n_shingles
@@ -31,7 +32,8 @@ from sparkdedup.config import DedupConfig
 from sparkdedup.functions.minhash import minhash_signatures_segmented
 from sparkdedup.functions.murmur3 import murmur3_128_bytes, murmur3_128_int64_rows
 from sparkdedup.functions.simhash import simhash_segmented
-from sparkdedup.functions.theta import MAX_THETA
+from sparkdedup.functions.segments import (cells, ranges, seg_ids,
+                                           smallest_k, sort_unique, within)
 from sparkdedup.functions.tokenize import shingle_hashes_batch, token_hashes_batch
 
 U64 = np.uint64
@@ -66,9 +68,10 @@ def _window_minima_flat(h: np.ndarray, w: int) -> np.ndarray:
 
 def _anchors_and_probes(
     sh: np.ndarray, sh_seg: np.ndarray, n: int, w: int, n_probes: int
-) -> tuple[list[np.ndarray], list[np.ndarray]]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Winnowed containment anchors + probes per doc from the POSITIONAL
-    screened shingle stream (pre-dedup/sort).
+    screened shingle stream (pre-dedup/sort), as flat int64 arrays with
+    per-doc counts: (anchors, anchor counts, probes, probe counts).
 
     anchors(d) = distinct minima of every w-window of doc d's shingle
     sequence; probes(d) = minima of d's first <=n_probes non-overlapping
@@ -80,29 +83,30 @@ def _anchors_and_probes(
     Each value in the stream contributes to <= w windows, so the expected
     anchor density is ~2/(w+1) distinct values per position.
     """
-    _EMPTY = np.empty(0, dtype=np.int64)
-    anchors: list[np.ndarray] = [_EMPTY] * n
-    probes: list[np.ndarray] = [_EMPTY] * n
-    T = len(sh)
-    if T < w:
-        return anchors, probes
     winmin = _window_minima_flat(sh, w)
     # contiguous per-doc runs (sh_seg is per-doc contiguous by construction
-    # even though the short-doc block makes it non-monotonic globally)
-    run_starts = np.r_[0, np.flatnonzero(sh_seg[1:] != sh_seg[:-1]) + 1]
-    run_lens = np.diff(np.r_[run_starts, T])
-    for rs, rl in zip(run_starts, run_lens):
-        if rl < w:
-            continue
-        d = int(sh_seg[rs])
-        wm = winmin[rs : rs + rl - w + 1]
-        # adjacent-dedup first (each min value spans ~w consecutive
-        # windows), then sort+unique the small remainder
-        small = wm[np.r_[True, wm[1:] != wm[:-1]]]
-        anchors[d] = np.unique(small).view(np.int64)
-        jmax = min(n_probes, (rl - w) // w + 1)
-        probes[d] = wm[np.arange(jmax, dtype=np.int64) * w].view(np.int64)
-    return anchors, probes
+    # even though the short-doc block makes it non-monotonic globally),
+    # taken in doc order so the outputs come out in the flat layout
+    run_starts = np.flatnonzero(np.diff(sh_seg, prepend=-1))
+    run_lens = np.diff(np.r_[run_starts, len(sh)])
+    by_doc = np.argsort(sh_seg[run_starts], kind="stable")
+    run_starts, run_lens = run_starts[by_doc], run_lens[by_doc]
+    run_doc = sh_seg[run_starts]
+    n_win = np.maximum(run_lens - w + 1, 0)
+    wm = winmin[ranges(run_starts, n_win)]
+    wseg = np.repeat(run_doc, n_win)
+    # adjacent-dedup first (each min value spans ~w consecutive windows),
+    # then sort+unique the small remainder
+    fresh = np.ones(len(wm), dtype=bool)
+    fresh[1:] = (wm[1:] != wm[:-1]) | (wseg[1:] != wseg[:-1])
+    anchors, anchor_counts = sort_unique(wm[fresh], wseg[fresh], n)
+    # probe j of a run is the window starting at its j-th w-block
+    n_prb = np.minimum(n_probes, (n_win + w - 1) // w)
+    probes = winmin[np.repeat(run_starts, n_prb) + within(n_prb) * w]
+    probe_counts = np.zeros(n, dtype=np.int64)
+    probe_counts[run_doc] = n_prb
+    return (anchors.view(np.int64), anchor_counts, probes.view(np.int64),
+            probe_counts)
 
 
 def file_ids_batch(repos, paths, commits) -> np.ndarray:
@@ -131,59 +135,22 @@ def compute_signatures_pdf(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
         tok_h, tok_seg, n_tokens, cfg.shingle_size, cfg.seed)
 
     # containment anchors/probes from the POSITIONAL stream (before the
-    # dedup sort below destroys position order)
-    anchors_col, probes_col = _anchors_and_probes(
+    # per-doc sort below destroys position order)
+    anchors, anchor_counts, probes, probe_counts = _anchors_and_probes(
         sh, sh_seg, n, cfg.containment_anchor_window,
         cfg.containment_probe_blocks)
 
-    # distinct shingle hashes per doc (KMV is over the distinct set).
-    # Group by segment with a stable argsort (seg is nearly sorted), then
-    # np.sort each contiguous slice in place — ~9x faster than a global
-    # 2-key lexsort at identical output.
-    order = np.argsort(sh_seg, kind="stable")
-    sh_s, seg_s = sh[order].copy(), sh_seg[order]
-    seg_counts = np.bincount(seg_s, minlength=n)
-    seg_offs = np.cumsum(seg_counts) - seg_counts
-    for d in np.flatnonzero(seg_counts):
-        sh_s[seg_offs[d]: seg_offs[d] + seg_counts[d]].sort()
-    keep = np.ones(len(sh_s), dtype=bool)
-    if len(sh_s):
-        keep[1:] = (sh_s[1:] != sh_s[:-1]) | (seg_s[1:] != seg_s[:-1])
-    sh_u, seg_u = sh_s[keep], seg_s[keep]
+    # distinct shingle hashes per doc (KMV is over the distinct set)
+    sh_u, counts = sort_unique(sh, sh_seg, n)
+    in_kmv, kmv_count, theta = smallest_k(sh_u, counts, cfg.kmv_k)
+    kmv = sh_u[in_kmv]
 
-    counts = np.bincount(seg_u, minlength=n)
-    k = cfg.kmv_k
-    _EMPTY = np.empty(0, dtype=np.int64)
-    kmv_col: list[np.ndarray] = [_EMPTY] * n
-    theta_col = np.full(n, MAX_THETA, dtype=np.int64)
-    kmv_count = np.zeros(n, dtype=np.int64)
-    if len(sh_u):
-        sh_i64 = sh_u.view(np.int64)  # values < 2^63: same bits, no copy
-        starts = np.cumsum(counts) - counts
-        # per-doc k smallest: values are sorted within each segment
-        # already; cells are numpy slices (Arrow converts ndarray cells
-        # directly — no per-value python int boxing)
-        for d in np.flatnonzero(counts):
-            s, c = starts[d], counts[d]
-            if c > k:
-                theta_col[d] = sh_i64[s + k]
-                kmv_count[d] = k
-                kmv_col[d] = sh_i64[s : s + k]
-            else:
-                kmv_count[d] = c
-                kmv_col[d] = sh_i64[s : s + c]
-
-    minh = minhash_signatures_segmented(sh_u, seg_u, n, cfg.num_perms)
+    minh = minhash_signatures_segmented(sh_u, seg_ids(counts), n,
+                                        cfg.num_perms)
     # SimHash over each doc's KMV subset (deterministic sample of the
     # shingle set — near-dups share most of it), 60x less data than the
     # full shingle stream at equal discriminative power for bucket ordering
-    if len(sh_u):
-        starts_all = np.cumsum(counts) - counts
-        within = np.arange(len(sh_u), dtype=np.int64) - starts_all[seg_u]
-        kmask = within < k
-        sim = simhash_segmented(sh_u[kmask], seg_u[kmask], n)
-    else:
-        sim = np.zeros(n, dtype=U64)
+    sim = simhash_segmented(kmv, seg_ids(kmv_count), n)
 
     # LSH band hashes: murmur3 over each 8-perm slice, salted by band
     # index — ONE fused call over all (doc, band) rows with per-row seeds
@@ -205,14 +172,15 @@ def compute_signatures_pdf(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
         "sha": sha,
         "n_tokens": n_tokens.astype(np.int32),
         "n_shingles": counts.astype(np.int32),
-        "kmv": kmv_col,
-        "kmv_theta": theta_col,
+        # values < 2^63: the int64 view keeps the bits
+        "kmv": cells(kmv.view(np.int64), kmv_count),
+        "kmv_theta": theta,
         "kmv_count": kmv_count.astype(np.int32),
         "minh": list(minh.astype(np.int64)),
         "simhash": sim.astype(np.int64),
         "bands": list(bands),
-        "anchors": anchors_col,
-        "probes": probes_col,
+        "anchors": cells(anchors, anchor_counts),
+        "probes": cells(probes, probe_counts),
     })
 
 

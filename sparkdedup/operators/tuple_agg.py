@@ -19,10 +19,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkdedup.functions.murmur3 import murmur3_128_bytes
+from sparkdedup.functions.murmur3 import murmur3_128_strings
+from sparkdedup.functions.segments import cells, from_cells, smallest_k
 from sparkdedup.functions.theta import MAX_THETA
 
 U64 = np.uint64
@@ -38,14 +40,13 @@ def _update_batch(groups: pd.Series, keys: pd.Series, payload: np.ndarray,
                   k: int, seed: int, policy: str = "sum"):
     """Partial tuple sketches for EVERY group in one batch, fully
     vectorized: one factorize + one murmur pass over the whole batch, one
-    lexsort by (group, hash), run-length payload reduction — per-group
-    work is pure slicing (no per-group pandas/hashing; the round-1 version
-    was O(groups x per-call overhead)).
+    lexsort by (group, hash), run-length payload reduction, then the k
+    smallest hashes per group (no per-group Python).
 
-    Yields (group_value, entries int64 list, payload list, theta)."""
-    kcodes, kuniq = pd.factorize(keys.astype(str))
-    h1, _ = murmur3_128_bytes([u.encode("utf-8") for u in kuniq], seed)
-    hu_all = (h1 >> U64(1))[kcodes]
+    Returns (group values, entries cells, payload cells, theta), aligned
+    per group; a group whose every hash screened to 0 gets empty cells."""
+    h1, _ = murmur3_128_strings(keys.astype(str), seed)
+    hu_all = h1 >> U64(1)
     gcodes, guniq = pd.factorize(groups.astype(str))
     keep = hu_all != U64(0)
     h, g, p = hu_all[keep], gcodes[keep], payload[keep]
@@ -60,33 +61,18 @@ def _update_batch(groups: pd.Series, keys: pd.Series, payload: np.ndarray,
     run_starts = np.flatnonzero(new_run)
     sums = _POLICIES[policy].reduceat(ps, run_starts) if len(run_starts) \
         else np.empty(0, np.float64)
-    uh, ug = hs[run_starts], gs[run_starts]
-    g_starts = np.flatnonzero(np.r_[True, ug[1:] != ug[:-1]]) \
-        if len(ug) else np.empty(0, np.int64)
-    g_ends = np.r_[g_starts[1:], len(ug)] if len(g_starts) else g_starts
-    seen = set()
-    for s, e in zip(g_starts, g_ends):
-        hh, vv = uh[s:e], sums[s:e]  # hash-sorted within the group
-        if len(hh) > k:
-            theta = int(hh[k])
-            hh, vv = hh[:k], vv[:k]
-        else:
-            theta = MAX_THETA
-        seen.add(ug[s])
-        yield (guniq[ug[s]], hh.astype(np.int64).tolist(),
-               vv.tolist(), theta)
-    for gi in range(len(guniq)):  # all-hashes-screened groups (h==0 only)
-        if gi not in seen:
-            yield (guniq[gi], [], [], MAX_THETA)
+    uh = hs[run_starts]  # hash-sorted within each group
+    counts = np.bincount(gs[run_starts], minlength=len(guniq))
+    kept, n_kept, theta = smallest_k(uh, counts, k)
+    return (guniq, cells(uh[kept].view(np.int64), n_kept),
+            cells(sums[kept], n_kept), theta)
 
 
-def _merge_tuple(parts, k: int, policy: str):
-    """Union partial tuple sketches: theta'=min, policy on hash collisions,
-    trim to k smallest."""
-    op = _POLICIES[policy]
-    theta = min(p[2] for p in parts) if parts else MAX_THETA
-    all_h = np.concatenate([p[0] for p in parts]) if parts else np.empty(0, U64)
-    all_v = np.concatenate([p[1] for p in parts]) if parts else np.empty(0)
+def _merge_tuple(all_h: np.ndarray, all_v: np.ndarray, theta: int, k: int,
+                 policy: str):
+    """Union partial tuple sketches, given as their concatenated entries
+    and payloads and their min theta: policy on hash collisions, trim to
+    k smallest."""
     m = all_h < U64(theta)
     all_h, all_v = all_h[m], all_v[m]
     if len(all_h) == 0:
@@ -95,12 +81,7 @@ def _merge_tuple(parts, k: int, policy: str):
     h, v = all_h[order], all_v[order]
     starts = np.flatnonzero(np.r_[True, h[1:] != h[:-1]])
     uh = h[starts]
-    if policy == "sum":
-        uv = np.add.reduceat(v, starts)
-    elif policy == "min":
-        uv = np.minimum.reduceat(v, starts)
-    else:
-        uv = np.maximum.reduceat(v, starts)
+    uv = _POLICIES[policy].reduceat(v, starts)
     if len(uh) > k:
         theta = int(uh[k])
         uh, uv = uh[:k], uv[:k]
@@ -139,10 +120,10 @@ def tuple_sketch_agg(df: DataFrame, group_col: str, key_col: str,
             if not len(pdf):
                 continue
             payload = pdf[payload_col].astype(float).to_numpy()
-            out = list(_update_batch(pdf[group_col], pdf[key_col],
-                                     payload, k, seed, policy))
-            yield pd.DataFrame(out, columns=[group_col, "entries",
-                                             "payloads", "theta"])
+            yield pd.DataFrame(dict(zip(
+                [group_col, "entries", "payloads", "theta"],
+                _update_batch(pdf[group_col], pdf[key_col], payload, k,
+                              seed, policy))))
 
     partials = df.select(group_col, key_col, payload_col).mapInPandas(
         update, schema=partial_schema)
@@ -151,11 +132,10 @@ def tuple_sketch_agg(df: DataFrame, group_col: str, key_col: str,
                   "payload_total_est double, n_retained int")
 
     def union(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [(np.asarray(e, np.int64).view(U64),
-                  np.asarray(p, np.float64), int(t))
-                 for e, p, t in zip(pdf["entries"], pdf["payloads"],
-                                    pdf["theta"])]
-        uh, uv, theta = _merge_tuple(parts, k, policy)
+        uh, uv, theta = _merge_tuple(
+            from_cells(pdf["entries"])[0].view(U64),
+            from_cells(pdf["payloads"], pa.float64())[0],
+            int(pdf["theta"].min()), k, policy)
         f = theta / float(MAX_THETA)
         return pd.DataFrame({
             group_col: [key[0]],

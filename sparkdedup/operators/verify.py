@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
+from sparkdedup.functions.segments import from_cells, seg_ids, within
 from sparkdedup.functions.simhash import hamming_distance
 from sparkdedup.functions.theta import pairwise_kmv_jaccard, pairwise_minhash_jaccard
 
@@ -26,29 +27,27 @@ EDGE_SCHEMA = (
 )
 
 
-def _stack_padded(col: pd.Series, k: int) -> np.ndarray:
-    """(n, k) uint64 from a series of variable-length int64 lists."""
-    n = len(col)
-    out = np.zeros((n, k), dtype=np.uint64)
-    for i, arr in enumerate(col):
-        a = np.asarray(arr, dtype=np.int64).view(np.uint64)
-        out[i, : len(a)] = a
+def _padded(col: pd.Series, k: int) -> np.ndarray:
+    """(n, k) uint64 from a column of <= k-long int64 array cells, each
+    row zero-padded (fixed-width cells simply stack)."""
+    flat, counts = from_cells(col)
+    out = np.zeros((len(counts), k), dtype=np.uint64)
+    out[seg_ids(counts), within(counts)] = flat.view(np.uint64)
     return out
 
 
 def verify_pairs_pdf(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     k = cfg.kmv_k
-    sa = _stack_padded(pdf["kmv_a"], k)
-    sb = _stack_padded(pdf["kmv_b"], k)
+    sa = _padded(pdf["kmv_a"], k)
+    sb = _padded(pdf["kmv_b"], k)
     ta = pdf["theta_a"].to_numpy(np.int64).view(np.uint64)
     tb = pdf["theta_b"].to_numpy(np.int64).view(np.uint64)
     ca = pdf["count_a"].to_numpy(np.int64)
     cb = pdf["count_b"].to_numpy(np.int64)
     lb, est, ub, _ = pairwise_kmv_jaccard(sa, ta, ca, sb, tb, cb)
 
-    ma = np.stack(pdf["minh_a"].to_numpy()).astype(np.int64).view(np.uint64)
-    mb = np.stack(pdf["minh_b"].to_numpy()).astype(np.int64).view(np.uint64)
-    mh_j = pairwise_minhash_jaccard(ma, mb)
+    mh_j = pairwise_minhash_jaccard(_padded(pdf["minh_a"], cfg.num_perms),
+                                    _padded(pdf["minh_b"], cfg.num_perms))
 
     ha = pdf["sim_a"].to_numpy(np.int64).view(np.uint64)
     hb = pdf["sim_b"].to_numpy(np.int64).view(np.uint64)

@@ -43,6 +43,18 @@ class OracleResult:
     candidate_pairs: set[tuple[int, int]] = field(default_factory=set)
 
 
+def _winnowed(sh: np.ndarray, w: int,
+              n_probes: int) -> tuple[np.ndarray, np.ndarray]:
+    """One document's containment (anchors, probes) from its positional
+    shingle stream: anchors = distinct minima of every w-window, probes =
+    minima of the first n_probes non-overlapping w-blocks."""
+    if len(sh) < w:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    minima = np.lib.stride_tricks.sliding_window_view(sh, w).min(axis=1)
+    probes = minima[::w][:n_probes]
+    return np.unique(minima).view(np.int64), probes.view(np.int64)
+
+
 def _file_signatures(files: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     content = files["content"].fillna("")
     keys = [f"{r}\x00{p}\x00{c}".encode("utf-8")
@@ -50,15 +62,12 @@ def _file_signatures(files: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
     fid_h1, _ = murmur3_128_bytes(keys, 42)
     file_id = fid_h1.astype(np.int64)
 
-    from sparkdedup.operators.signatures import _anchors_and_probes
-
     rows = []
     for i, text in enumerate(content):
         th, seg, ntok = token_hashes_batch(pd.Series([text]), cfg.seed)
-        sh, sseg, _ = shingle_hashes_batch(th, seg, ntok, cfg.shingle_size, cfg.seed)
-        anchors, probes = _anchors_and_probes(
-            sh, sseg, 1, cfg.containment_anchor_window,
-            cfg.containment_probe_blocks)
+        sh, _, _ = shingle_hashes_batch(th, seg, ntok, cfg.shingle_size, cfg.seed)
+        anchors, probes = _winnowed(sh, cfg.containment_anchor_window,
+                                    cfg.containment_probe_blocks)
         shu = np.unique(sh)
         k = cfg.kmv_k
         if len(shu) > k:
@@ -77,11 +86,12 @@ def _file_signatures(files: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
         rows.append({
             "file_id": int(file_id[i]),
             "sha": hashlib.sha256(text.encode()).hexdigest(),
+            "n_tokens": int(ntok[0]),
             "n_shingles": len(shu),
             "kmv": kmv, "kmv_theta": theta,
             "minh": minh, "simhash": sim, "bands": bands,
             "shingles": shu,
-            "anchors": anchors[0], "probes": probes[0],
+            "anchors": anchors, "probes": probes,
         })
     return pd.DataFrame(rows)
 

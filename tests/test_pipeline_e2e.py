@@ -172,9 +172,60 @@ def test_signature_stage_batch_invariance(spark, small_corpus):
     s8 = s8.sort_values("file_id").reset_index(drop=True)
     for col in ["sha", "n_tokens", "n_shingles", "kmv_theta", "kmv_count", "simhash"]:
         assert (s1[col] == s8[col]).all(), col
-    for col in ["kmv", "minh", "bands"]:
+    for col in ["kmv", "minh", "bands", "anchors", "probes"]:
         for x, y in zip(s1[col], s8[col]):
             assert np.array_equal(np.asarray(x), np.asarray(y)), col
+
+
+@pytest.mark.parametrize("window", [CFG.containment_anchor_window, 1])
+def test_signature_kernel_matches_oracle_per_doc(window):
+    """The batch kernel (one segmented pass over the whole batch) equals
+    the oracle's one-document-at-a-time signatures on every column, on a
+    batch mixing every document-size edge case. With a 1-shingle anchor
+    window the short documents (one shingle, placed after the long ones
+    in the kernel's stream) get anchors and probes too."""
+    import dataclasses
+
+    from sparkdedup.operators.signatures import compute_signatures_pdf
+    from sparkdedup.oracle import _file_signatures
+
+    cfg = dataclasses.replace(CFG, containment_anchor_window=window)
+
+    def words(n, tag):
+        return " ".join(f"{tag}{i}" for i in range(n))
+
+    w, s = CFG.containment_anchor_window, CFG.shingle_size
+    texts = [
+        None, "", " \t\n  \n",
+        words(s - 1, "few"),                    # < shingle_size tokens
+        words(s + w - 2, "sub"),                # w - 1 shingles
+        words(s + w - 1, "exact"),              # exactly w shingles
+        words(s + 6 * w, "long"),               # > kmv_k, > probe_blocks
+        "caf\u00e9 = na\u00efve(x) + " + words(40, "u"),  # non-ASCII
+        words(s + w - 1, "exact"),              # duplicate of the above
+    ]
+    pdf = pd.DataFrame({
+        "repo": [f"r{i % 3}" for i in range(len(texts))],
+        "path": [f"f{i}.py" for i in range(len(texts))],
+        "commit": "c0", "lang": "python", "content": texts})
+    got = compute_signatures_pdf(pdf, cfg)
+    want = _file_signatures(pdf, cfg)
+    assert len(got.columns) == 16
+    for col in ["repo", "path", "commit", "lang"]:
+        assert list(got[col]) == list(pdf[col]), col
+    want["kmv_count"] = want["kmv"].map(len)
+    assert list(got["sha"]) == list(want["sha"])
+    for col in ["file_id", "n_tokens", "n_shingles", "kmv_theta",
+                "kmv_count", "simhash"]:  # compared as 64-bit words
+        assert [int(x) % 2**64 for x in got[col]] == \
+            [int(x) % 2**64 for x in want[col]], col
+    for col in ["kmv", "minh", "bands", "anchors", "probes"]:
+        for i, (x, y) in enumerate(zip(got[col], want[col])):
+            assert np.array_equal(np.asarray(x).view(np.int64),
+                                  np.asarray(y).astype(np.uint64)
+                                  .view(np.int64)), (col, i)
+    if window == w:
+        assert list(got["probes"].map(len)) == [0, 0, 0, 0, 0, 1, 4, 0, 1]
 
 
 def test_cluster_representatives_from_materialized_table(spark, pipeline_result):

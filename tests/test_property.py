@@ -204,3 +204,67 @@ def test_class_masks_match_lut_all_ascii():
     assert np.array_equal(is_digit, cls == _CLS_D)
     assert np.array_equal(is_p, cls == _CLS_P)
     assert np.array_equal(~(is_ad | is_p), cls == _CLS_W)
+
+
+@given(st.lists(st.lists(st.integers(0, 20), max_size=12), max_size=8),
+       st.integers(1, 4), st.randoms(use_true_random=False))
+@settings(max_examples=150, deadline=None)
+def test_segments_match_per_document_numpy(docs, w, rnd):
+    """The segmented-array helpers equal a per-document NumPy loop on
+    empty batches, empty documents and values whose document ids are
+    contiguous-but-unordered (the short-document block of
+    shingle_hashes_batch) or fully shuffled (the KMV aggregate)."""
+    import pandas as pd
+
+    from sparkdedup.functions.segments import (cells, from_cells,
+                                               smallest_k, sort_unique,
+                                               window_hashes)
+
+    n = len(docs)
+    arrs = [np.array(d, dtype=np.uint64) for d in docs]
+    counts = np.array([len(a) for a in arrs], dtype=np.int64)
+    flat = np.concatenate(arrs) if n else np.empty(0, np.uint64)
+    uniq = [np.unique(a) for a in arrs]
+
+    # window hashes: in-document w-windows only, in document order
+    wh, wseg = window_hashes(flat, counts, w, 9001)
+    want = [(int(murmur3_128_int64_rows(a[None, i:i + w], 9001)[0][0]), d)
+            for d, a in enumerate(arrs) for i in range(len(a) - w + 1)]
+    assert list(zip(wh.tolist(), wseg.tolist())) == want
+
+    # sort_unique over blocks in a shuffled order, then over shuffled values
+    block_order = list(range(n))
+    rnd.shuffle(block_order)
+    seg = np.repeat(np.arange(n, dtype=np.int64), counts)
+    blocks = [np.flatnonzero(seg == d) for d in block_order]
+    perm = np.concatenate(blocks) if n else np.empty(0, np.int64)
+    shuffled = np.array(rnd.sample(range(len(flat)), len(flat)), np.int64)
+    for p in (perm, shuffled):
+        u, uc = sort_unique(flat[p], seg[p], n)
+        assert uc.tolist() == [len(x) for x in uniq]
+        assert u.tolist() == [v for x in uniq for v in x.tolist()]
+
+    # k smallest + theta, over sort_unique's layout
+    u, uc = sort_unique(flat, seg, n)
+    k = 3
+    kept, kc, theta = smallest_k(u, uc, k)
+    assert u[kept].tolist() == [v for x in uniq for v in x[:k].tolist()]
+    assert kc.tolist() == [min(len(x), k) for x in uniq]
+    assert theta.tolist() == [int(x[k]) if len(x) > k else MAX_THETA
+                              for x in uniq]
+
+    # cells round trip through the pandas object column
+    col = cells(flat.view(np.int64), counts)
+    assert len(col) == n
+    for c, a in zip(col, arrs):
+        assert np.array_equal(c, a.view(np.int64))
+    back, back_counts = from_cells(pd.Series(col, dtype=object))
+    assert np.array_equal(back, flat.view(np.int64))
+    assert np.array_equal(back_counts, counts)
+    # inferred element type (string cells here); None cells, and a
+    # column of only None cells, read as empty
+    strs = pd.Series([[str(v) for v in a] for a in arrs] + [None],
+                     dtype=object)
+    back, back_counts = from_cells(strs, None)
+    assert back.tolist() == [str(v) for v in flat.tolist()]
+    assert back_counts.tolist() == counts.tolist() + [0]

@@ -38,28 +38,21 @@ def group_scaling_microbench(seed: int = 0) -> None:
         groups = rng.integers(0, n_groups, n_rows).astype(str)
         vals = pd.Series(rng.integers(0, 50_000, n_rows).astype(str))
         payload = rng.random(n_rows)
-        # kmv update phase body (mirrors kmv_agg.update_phase)
-        from sparkdedup.functions.murmur3 import murmur3_128_bytes
+        # kmv update phase body (as in kmv_agg.update_phase)
+        from sparkdedup.functions.murmur3 import murmur3_128_strings
+        from sparkdedup.functions.segments import smallest_k, sort_unique
         t0 = time.time()
-        codes, uniques = pd.factorize(vals)
-        h1, _ = murmur3_128_bytes([u.encode() for u in uniques], 9001)
-        hashes = (h1 >> np.uint64(1))[codes]
+        h1, _ = murmur3_128_strings(vals, 9001)
+        hashes = h1 >> np.uint64(1)
         gcodes, guniq = pd.factorize(groups)
         keep = hashes != np.uint64(0)
-        hashes_k, gcodes_k = hashes[keep], gcodes[keep]
-        order = np.lexsort((hashes_k, gcodes_k))
-        gs, hs = gcodes_k[order], hashes_k[order]
-        starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
-        ends = np.r_[starts[1:], len(gs)]
-        for s, e in zip(starts, ends):
-            gh = hs[s:e]
-            gh = gh[np.r_[True, gh[1:] != gh[:-1]]]
-            _ = gh[:256]
+        u, counts = sort_unique(hashes[keep], gcodes[keep], len(guniq))
+        _ = smallest_k(u, counts, 256)
         kmv_sec = time.time() - t0
         # tuple update phase (the full batch kernel)
         from sparkdedup.operators.tuple_agg import _update_batch
         t0 = time.time()
-        _ = list(_update_batch(pd.Series(groups), vals, payload, 256, 9001))
+        _ = _update_batch(pd.Series(groups), vals, payload, 256, 9001)
         tup_sec = time.time() - t0
         print(f"{n_groups:>8} {kmv_sec:>9.3f} {tup_sec:>10.3f}")
 
