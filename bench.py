@@ -224,7 +224,7 @@ def main() -> int:
         "cpus": cpus,
         "stages": {k: v.get("seconds")
                    for k, v in res.metrics["stages"].items()},
-        "cc_seconds": res.metrics.get("cc_seconds"),
+        "cc_seconds": res.metrics["stages"]["clusters"].get("cc_seconds"),
     }
 
     # "value" = cold pass + pipeline, the r1-r3 definition — freeze it

@@ -22,6 +22,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType
 
 from sparkdedup.functions.murmur3 import murmur3_128_strings
 from sparkdedup.functions.segments import (cells, from_cells, smallest_k,
@@ -32,15 +33,15 @@ U64 = np.uint64
 
 
 def kmv_distinct_agg(df: DataFrame, group_col: str, value_col: str,
-                     k: int = 256, seed: int = 9001,
-                     values_are_arrays: bool = False) -> DataFrame:
+                     k: int = 256, seed: int = 9001) -> DataFrame:
     """(group, n_distinct_est double, n_retained int, theta_frac double).
 
     Values are hashed with the reference's murmur3-128 h1 >> 1 screening;
     distinct-count estimate follows compact-sketch semantics
-    (num_retained / theta). With values_are_arrays=True, value_col holds an
-    ARRAY per row and is flattened in-kernel — pass token arrays instead of
-    pre-exploding so Arrow batches stay fat (one row per document)."""
+    (num_retained / theta). An ARRAY-typed value_col is flattened
+    in-kernel — pass token arrays instead of pre-exploding so Arrow
+    batches stay fat (one row per document)."""
+    values_are_arrays = isinstance(df.schema[value_col].dataType, ArrayType)
 
     partial_schema = f"{group_col} string, entries array<long>, theta long"
 

@@ -3,10 +3,11 @@
 Reference semantics (tuple/update_sketch.go:36-49, tuple/sketch.go:26-40):
 a theta sketch where every retained hash carries a user value, updated on
 insert and combined by a Policy on union hash-match
-(theta/set_operation.go:36-47). Spark re-expression: the sketch is a pair
-of aligned arrays (entries, payloads); the update phase aggregates payloads
-per retained hash inside each Arrow batch; the union phase merges partials
-with theta'=min + k-trim and applies the policy to colliding hashes.
+(theta/set_operation.go:36-47); the policy here is sum. Spark
+re-expression: the sketch is a pair of aligned arrays (entries,
+payloads); the update phase sums payloads per retained hash inside each
+Arrow batch; the union phase merges partials with theta'=min + k-trim and
+sums the payloads of colliding hashes.
 
 The canonical use (ArrayOfNumbers / aod sketches) is "distinct keys with a
 numeric summary per key, at bounded memory": e.g. estimated distinct users
@@ -29,15 +30,9 @@ from sparkdedup.functions.theta import MAX_THETA
 
 U64 = np.uint64
 
-_POLICIES = {
-    "sum": np.add,
-    "min": np.minimum,
-    "max": np.maximum,
-}
-
 
 def _update_batch(groups: pd.Series, keys: pd.Series, payload: np.ndarray,
-                  k: int, seed: int, policy: str = "sum"):
+                  k: int, seed: int):
     """Partial tuple sketches for EVERY group in one batch, fully
     vectorized: one factorize + one murmur pass over the whole batch, one
     lexsort by (group, hash), run-length payload reduction, then the k
@@ -52,14 +47,12 @@ def _update_batch(groups: pd.Series, keys: pd.Series, payload: np.ndarray,
     h, g, p = hu_all[keep], gcodes[keep], payload[keep]
     order = np.lexsort((h, g))
     hs, gs, ps = h[order], g[order], p[order]
-    # combine payload per (group, hash) run — the in-batch update
-    # aggregation uses the POLICY ufunc (in-batch key repeats under
-    # 'min'/'max' must min/max-combine, not sum — only reachable with
-    # pre_aggregate=False, where raw rows hit the kernel)
+    # sum payload per (group, hash) run; after the JVM pre-aggregation a
+    # run holds more than one key only on a hash collision
     new_run = np.r_[True, (gs[1:] != gs[:-1]) | (hs[1:] != hs[:-1])] \
         if len(gs) else np.empty(0, bool)
     run_starts = np.flatnonzero(new_run)
-    sums = _POLICIES[policy].reduceat(ps, run_starts) if len(run_starts) \
+    sums = np.add.reduceat(ps, run_starts) if len(run_starts) \
         else np.empty(0, np.float64)
     uh = hs[run_starts]  # hash-sorted within each group
     counts = np.bincount(gs[run_starts], minlength=len(guniq))
@@ -68,11 +61,10 @@ def _update_batch(groups: pd.Series, keys: pd.Series, payload: np.ndarray,
             cells(sums[kept], n_kept), theta)
 
 
-def _merge_tuple(all_h: np.ndarray, all_v: np.ndarray, theta: int, k: int,
-                 policy: str):
+def _merge_tuple(all_h: np.ndarray, all_v: np.ndarray, theta: int, k: int):
     """Union partial tuple sketches, given as their concatenated entries
-    and payloads and their min theta: policy on hash collisions, trim to
-    k smallest."""
+    and payloads and their min theta: sum on hash collisions, trim to k
+    smallest."""
     m = all_h < U64(theta)
     all_h, all_v = all_h[m], all_v[m]
     if len(all_h) == 0:
@@ -81,7 +73,7 @@ def _merge_tuple(all_h: np.ndarray, all_v: np.ndarray, theta: int, k: int,
     h, v = all_h[order], all_v[order]
     starts = np.flatnonzero(np.r_[True, h[1:] != h[:-1]])
     uh = h[starts]
-    uv = _POLICIES[policy].reduceat(v, starts)
+    uv = np.add.reduceat(v, starts)
     if len(uh) > k:
         theta = int(uh[k])
         uh, uv = uh[:k], uv[:k]
@@ -89,28 +81,19 @@ def _merge_tuple(all_h: np.ndarray, all_v: np.ndarray, theta: int, k: int,
 
 
 def tuple_sketch_agg(df: DataFrame, group_col: str, key_col: str,
-                     payload_col: str, k: int = 256, seed: int = 9001,
-                     policy: str = "sum",
-                     pre_aggregate: bool = True) -> DataFrame:
+                     payload_col: str, k: int = 256,
+                     seed: int = 9001) -> DataFrame:
     """Per group: estimated distinct keys + estimated payload total over
     the distinct-key population (payload scaled by 1/theta like the count).
 
-    pre_aggregate=True first reduces to one row per (group, key) with the
-    policy-combined payload in a JVM hash aggregate (map-side combine) —
-    the Python kernel then only hashes DISTINCT keys instead of raw rows,
-    which is both faster and the right shape when keys repeat a lot
-    (events-per-user etc). Set False for mostly-unique keys where the
-    extra shuffle outweighs the combine.
+    The input is first reduced to one row per (group, key) with the
+    summed payload in a JVM hash aggregate (map-side combine), so the
+    Python kernel hashes DISTINCT keys instead of raw rows.
 
     Output: (group, n_distinct_est double, payload_total_est double,
              n_retained int)."""
-    if policy not in _POLICIES:
-        raise ValueError(f"unknown policy {policy}")
-
-    if pre_aggregate:
-        agg_fn = {"sum": F.sum, "min": F.min, "max": F.max}[policy]
-        df = (df.groupBy(group_col, key_col)
-              .agg(agg_fn(payload_col).alias(payload_col)))
+    df = (df.groupBy(group_col, key_col)
+          .agg(F.sum(payload_col).alias(payload_col)))
 
     partial_schema = (f"{group_col} string, entries array<long>, "
                       "payloads array<double>, theta long")
@@ -123,7 +106,7 @@ def tuple_sketch_agg(df: DataFrame, group_col: str, key_col: str,
             yield pd.DataFrame(dict(zip(
                 [group_col, "entries", "payloads", "theta"],
                 _update_batch(pdf[group_col], pdf[key_col], payload, k,
-                              seed, policy))))
+                              seed))))
 
     partials = df.select(group_col, key_col, payload_col).mapInPandas(
         update, schema=partial_schema)
@@ -135,7 +118,7 @@ def tuple_sketch_agg(df: DataFrame, group_col: str, key_col: str,
         uh, uv, theta = _merge_tuple(
             from_cells(pdf["entries"])[0].view(U64),
             from_cells(pdf["payloads"], pa.float64())[0],
-            int(pdf["theta"].min()), k, policy)
+            int(pdf["theta"].min()), k)
         f = theta / float(MAX_THETA)
         return pd.DataFrame({
             group_col: [key[0]],

@@ -5,13 +5,21 @@ Stage graph (SURVEY.md §3.4):
         -> [verify: KMV-Jaccard] -> [containment pass] -> [edges]
         -> [connected components] -> clusters
 
-Checkpoint protocol: every stage writes parquet under
-  <workdir>/<run_key>/<stage>/   with a _SUCCESS marker (Spark's own)
-  and a sidecar <workdir>/<run_key>/_metrics/<stage>.json
-where run_key hashes the config and the pipeline options that change a
-stage's output (enable_containment, signature_buckets). A rerun skips
-any stage whose _SUCCESS exists (resume mid-pipeline); reading back from
-parquet also truncates lineage between stages.
+Stage protocol, decided in one place (`DedupPipeline._stage`): stage
+<name> writes parquet under
+  <workdir>/<run_key>/<name>/   committed by Spark's own _SUCCESS
+and a sidecar <workdir>/<run_key>/_metrics/<name>.json. A rerun reads
+back every stage whose _SUCCESS exists (resume mid-pipeline); reading
+back from parquet also truncates lineage between stages. The stages are
+signatures, edges and clusters. With signature_buckets = B > 1 each
+signature bucket, pmod(xxhash64(repo, path, commit), B), is a stage of
+its own (signatures/bucket=<b>/), so a killed run resumes mid-signatures.
+run_key hashes the config and the pipeline options that change a
+stage's output (enable_containment, signature_buckets).
+
+One clock rule: a stage's seconds run from the start of its build to its
+commit. Sub-steps timed inside a build (edges.containment_candidates_s,
+clusters.cc_seconds) are part of their stage's seconds.
 
 Exact duplicates are collapsed BEFORE LSH (groupBy sha, keep min file_id):
 this removes the largest skew source (identical files all landing in the
@@ -71,53 +79,12 @@ class DedupPipeline:
         self.num_partitions = num_partitions
         self.enable_containment = enable_containment
         # >1: the signature stage runs as B independently-committed bucket
-        # jobs (bucket = pmod(xxhash64(repo,path,commit), B)) so a killed
-        # run resumes mid-STAGE, re-doing only incomplete buckets.
+        # stages so a killed run resumes mid-STAGE, re-doing only
+        # uncommitted buckets
         self.signature_buckets = signature_buckets
         self.metrics: dict = {"stages": {}}
 
-    def _run_signatures_bucketed(self, files: DataFrame) -> DataFrame:
-        """Per-bucket signature computation with per-bucket commit markers
-        and row-count counters (the north-rule 'per-partition lineage +
-        metrics' resume granularity)."""
-        from pyspark.sql import functions as F  # local alias for clarity
-
-        cfg = self.cfg
-        B = self.signature_buckets
-        base = self._stage_dir("signatures")
-        base.mkdir(parents=True, exist_ok=True)
-        bucket_col = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(B))
-        counters = {}
-        t0 = time.time()
-        resumed = 0
-        for b in range(B):
-            marker = base / f"_bucket_{b}_DONE"
-            if marker.exists():
-                resumed += 1
-                counters[str(b)] = json.loads(marker.read_text())["rows"]
-                continue
-            part = files.filter(bucket_col == b)
-            sigs_b = signature_stage(part, cfg, self.num_partitions)
-            (sigs_b.write.mode("overwrite")
-             .parquet(str(base / f"bucket={b}")))
-            n = _parquet_rows(base / f"bucket={b}")
-            counters[str(b)] = n
-            marker.write_text(json.dumps({"rows": n}))
-        # stage-level commit marker once every bucket is present
-        (base / "_SUCCESS").write_text("")
-        out = self.spark.read.parquet(
-            *[str(base / f"bucket={b}") for b in range(B)])
-        # counters now covers fresh AND resumed buckets (fresh: footer read
-        # at write time; resumed: the count persisted in the bucket marker)
-        # — no second footer pass over every bucket directory
-        self._write_metrics("signatures", {
-            "rows": sum(counters.values()),
-            "seconds": round(time.time() - t0, 3),
-            "buckets": B, "buckets_resumed": resumed,
-            "bucket_rows": counters})
-        return out
-
-    # -- checkpoint helpers --------------------------------------------------
+    # -- stage protocol ------------------------------------------------------
 
     @property
     def run_key(self) -> str:
@@ -140,38 +107,141 @@ class DedupPipeline:
         return d is not None and (d / "_SUCCESS").exists()
 
     def _write_metrics(self, stage: str, payload: dict) -> None:
+        """Record a stage's metrics; a stage computed by this run (not
+        resumed) also gets its sidecar _metrics/<stage>.json."""
         self.metrics["stages"][stage] = payload
-        if self.workdir is None:
+        if self.workdir is None or payload.get("resumed"):
             return
-        mdir = self._stage_dir("_metrics")
-        mdir.mkdir(parents=True, exist_ok=True)
-        (mdir / f"{stage}.json").write_text(json.dumps(payload, indent=2))
+        path = self._stage_dir("_metrics") / f"{stage}.json"
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(json.dumps(payload, indent=2))
 
-    def _checkpoint(self, df: DataFrame, stage: str,
-                    partition_by: str | None = None,
-                    t0: float | None = None) -> DataFrame:
-        """Write stage output to parquet and read back (lineage cut + resume
-        point). Without a workdir, localCheckpoint instead. The stage's
-        seconds run from t0 (default: now) to the end of the write."""
+    def _checkpoint(self, df: DataFrame, stage: str) -> tuple[DataFrame, int]:
+        """Write stage output to parquet and read it back (lineage cut +
+        resume point); without a workdir, localCheckpoint instead.
+        Returns the read-back frame and its row count."""
         d = self._stage_dir(stage)
-        t0 = time.time() if t0 is None else t0
         if d is None:
             out = df.localCheckpoint()
-            n = out.count()
-        else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(str(d))
-            out = self.spark.read.parquet(str(d))
-            n = _parquet_rows(d)  # footer metadata, no second scan job
-        self._write_metrics(stage, {"rows": n, "seconds": round(time.time() - t0, 3)})
+            return out, out.count()
+        df.write.mode("overwrite").parquet(str(d))
+        return self.spark.read.parquet(str(d)), _parquet_rows(d)
+
+    def _stage(self, name: str, build) -> DataFrame:
+        """Resume stage `name` if its _SUCCESS exists; otherwise run
+        build() -> (frame, sub-step numbers), checkpoint the frame and
+        record its rows, the seconds from the start of the build to the
+        commit, and the sub-step numbers."""
+        if self._is_done(name):
+            self._write_metrics(name, {"resumed": True})
+            return self.spark.read.parquet(str(self._stage_dir(name)))
+        t0 = time.time()
+        df, sub = build()
+        out, rows = self._checkpoint(df, name)
+        self._write_metrics(name, {
+            "rows": rows, "seconds": round(time.time() - t0, 3), **sub})
         return out
 
-    def _load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._stage_dir(stage)))
-
     # -- stages --------------------------------------------------------------
+
+    def _signatures(self, files: DataFrame) -> DataFrame:
+        """The signatures stage, or with a workdir and B > 1 buckets, B
+        bucket stages read back as one frame. The signatures entry then
+        totals rows and seconds over the buckets this run computed."""
+        cfg, B = self.cfg, self.signature_buckets
+        if self.workdir is None or B == 1:
+            return self._stage("signatures", lambda: (
+                signature_stage(files, cfg, self.num_partitions), {}))
+        bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(B))
+        names = [f"signatures/bucket={b}" for b in range(B)]
+        for b, name in enumerate(names):
+            self._stage(name, lambda b=b: (signature_stage(
+                files.filter(bucket == b), cfg, self.num_partitions), {}))
+        recs = [self.metrics["stages"].pop(name) for name in names]
+        resumed = sum("resumed" in r for r in recs)
+        self._write_metrics("signatures", {
+            "rows": sum(r.get("rows", 0) for r in recs),
+            "seconds": round(sum(r.get("seconds", 0.0) for r in recs), 3),
+            "buckets": B, "buckets_resumed": resumed,
+            **({"resumed": True} if resumed == B else {})})
+        return self.spark.read.parquet(
+            *(str(self._stage_dir(name)) for name in names))
+
+    def _edges(self, files: DataFrame, sigs: DataFrame, rep_sigs: DataFrame,
+               exact_edges: DataFrame) -> tuple[DataFrame, dict]:
+        """LSH candidates + KMV verification, the exact-sha edges and the
+        containment pass. candidate_pairs runs jobs at call time (its
+        has_big probe and band checkpoints), so this is the stage's work,
+        not only its plan."""
+        cfg = self.cfg
+        cands = candidate_pairs(rep_sigs, cfg)
+        near = verify_candidates(cands, rep_sigs, cfg).withColumn(
+            "source", F.lit("lsh"))
+        exact_e = exact_edges.select(
+            "src", "dst", F.lit(1.0).alias("jaccard"),
+            F.lit(1.0).alias("jaccard_lb"), F.lit(1.0).alias("jaccard_ub"),
+            F.lit(1.0).alias("minhash_jaccard"),
+            F.lit(0).cast("int").alias("hamming"),
+            F.lit("sha").alias("source"))
+        edges = near.unionByName(exact_e)
+        if not self.enable_containment:
+            return edges, {}
+
+        # this eager localCheckpoint is the first job to touch rep_sigs,
+        # so its seconds also pay the cache materialization
+        t0 = time.time()
+        cont_cand = anchor_containment_candidates(
+            rep_sigs, cfg).localCheckpoint()
+        cont_s = round(time.time() - t0, 3)
+        # content is re-joined ONLY for candidate ids: semi-join the
+        # (small) candidate id set against the signature keys and
+        # broadcast it into the files scan — the corpus content never
+        # shuffles (SCALE.md stage 5).
+        cand_ids = (cont_cand.select(F.col("src").alias("file_id"))
+                    .unionByName(cont_cand.select(
+                        F.col("dst").alias("file_id")))
+                    .distinct())
+        sig_keys = (sigs.join(cand_ids, "file_id", "left_semi")
+                    .select("file_id", "repo", "path", "commit"))
+        fid_content = (
+            files.join(F.broadcast(sig_keys), ["repo", "path", "commit"])
+            .select("file_id", "content"))
+        cont = verify_containment(cont_cand, fid_content, cfg)
+        cont_e = cont.select(
+            "src", "dst",
+            F.lit(None).cast("double").alias("jaccard"),
+            F.lit(None).cast("double").alias("jaccard_lb"),
+            F.lit(None).cast("double").alias("jaccard_ub"),
+            F.lit(None).cast("double").alias("minhash_jaccard"),
+            F.lit(None).cast("int").alias("hamming"),
+            F.lit("containment").alias("source"))
+        return (edges.unionByName(cont_e),
+                {"containment_candidates_s": cont_s})
+
+    def _clusters(self, sigs: DataFrame,
+                  edges: DataFrame) -> tuple[DataFrame, dict]:
+        """Connected components over the lsh and containment edges.
+
+        Exact copies fold in after CC. A sha group's edges form a star
+        (rep -> every copy), and CC puts a node's whole neighbourhood in
+        one task, so CC runs only over the edges that touch reps alone.
+        Each copy then takes its rep's cluster: the rep is its sha group's
+        minimum file_id, so every component minimum (cluster_id) is the
+        same as with the stars inside."""
+        nodes = sigs.select("file_id")
+        is_sha = F.col("source") == "sha"
+        rep_of = edges.filter(is_sha).select(
+            F.col("dst").alias("file_id"), F.col("src").alias("rep"))
+        t0 = time.time()
+        rep_clusters, self.metrics["cc_iterations"] = connected_components(
+            edges.filter(~is_sha).select("src", "dst"), nodes, self.cfg)
+        cc_s = round(time.time() - t0, 3)
+        clusters = (
+            nodes.join(rep_of, "file_id", "left")
+            .select("file_id", F.coalesce("rep", "file_id").alias("rep"))
+            .join(rep_clusters.withColumnRenamed("file_id", "rep"), "rep")
+            .select("file_id", "cluster_id"))
+        return clusters, {"cc_seconds": cc_s}
 
     def _persistent_ids(self) -> set[int]:
         jm = self.spark.sparkContext._jsc.sc().getPersistentRDDs()
@@ -196,22 +266,12 @@ class DedupPipeline:
             sc.unpersistRDD(rid, False)
 
     def run(self, files: DataFrame) -> PipelineResult:
-        cfg = self.cfg
         t_start = time.time()
         persisted_before = self._persistent_ids()
+        sigs = self._signatures(files)
 
-        # stage 1: signatures ------------------------------------------------
-        if self._is_done("signatures"):
-            sigs = self._load("signatures")
-            self.metrics["stages"]["signatures"] = {"resumed": True}
-        elif self.workdir is not None and self.signature_buckets > 1:
-            sigs = self._run_signatures_bucketed(files)
-        else:
-            sigs = signature_stage(files, cfg, self.num_partitions)
-            sigs = self._checkpoint(sigs, "signatures")
-
-        # stage 2: exact-sha pre-cluster ------------------------------------
-        # representative per sha = min file_id; exact edges rep -> member
+        # exact-sha pre-cluster: representative per sha = min file_id;
+        # exact edges rep -> member
         reps = sigs.groupBy("sha").agg(F.min("file_id").alias("rep"),
                                        F.count("*").alias("copies"))
         exact_edges = (
@@ -221,105 +281,15 @@ class DedupPipeline:
         )
         # rep_sigs feeds four consumers (banding, both verify sides, the
         # containment index): cache it so the sha groupBy + semi-join run
-        # once, not per branch; unpersisted at the end of stage 3 (the
-        # edges checkpoint is its last consumer — r6 verdict nit #1).
+        # once, not per branch; unpersisted once the edges stage (its
+        # last consumer) has committed — r6 verdict nit #1.
         rep_sigs = sigs.join(
             reps.select(F.col("rep").alias("file_id")), "file_id",
             "left_semi").cache()
-
-        # stage 3: LSH candidates + verification -----------------------------
-        if self._is_done("edges"):
-            edges = self._load("edges")
-            self.metrics["stages"]["edges"] = {"resumed": True}
-        else:
-            # candidate_pairs runs jobs at call time (its has_big probe
-            # and band checkpoints), so the stage clock starts here
-            t_edges = time.time()
-            cont_s = 0.0
-            cands = candidate_pairs(rep_sigs, cfg)
-            near = verify_candidates(cands, rep_sigs, cfg).withColumn(
-                "source", F.lit("lsh"))
-            exact_e = exact_edges.select(
-                "src", "dst", F.lit(1.0).alias("jaccard"),
-                F.lit(1.0).alias("jaccard_lb"), F.lit(1.0).alias("jaccard_ub"),
-                F.lit(1.0).alias("minhash_jaccard"),
-                F.lit(0).cast("int").alias("hamming"),
-                F.lit("sha").alias("source"))
-            edges = near.unionByName(exact_e)
-
-            if self.enable_containment:
-                # this eager localCheckpoint is the first job to touch
-                # rep_sigs, so it also pays the cache materialization —
-                # time it as its own stage so the pipeline wall fully
-                # decomposes (found while chasing the scaling tail: ~50s
-                # at N=1 on 64k files was invisible to per-stage metrics)
-                t_cc0 = time.time()
-                cont_cand = anchor_containment_candidates(rep_sigs, cfg)
-                cont_cand = cont_cand.localCheckpoint()
-                cont_s = time.time() - t_cc0
-                self._write_metrics("containment_candidates", {
-                    "seconds": round(cont_s, 3)})
-                # content is re-joined ONLY for candidate ids: semi-join the
-                # (small) candidate id set against the signature keys and
-                # broadcast it into the files scan — the corpus content
-                # never shuffles (SCALE.md stage 5).
-                cand_ids = (cont_cand.select(F.col("src").alias("file_id"))
-                            .unionByName(cont_cand.select(
-                                F.col("dst").alias("file_id")))
-                            .distinct())
-                sig_keys = (sigs.join(cand_ids, "file_id", "left_semi")
-                            .select("file_id", "repo", "path", "commit"))
-                fid_content = (
-                    files.join(F.broadcast(sig_keys),
-                               ["repo", "path", "commit"])
-                    .select("file_id", "content")
-                )
-                cont = verify_containment(cont_cand, fid_content, cfg)
-                cont_e = cont.select(
-                    "src", "dst",
-                    F.lit(None).cast("double").alias("jaccard"),
-                    F.lit(None).cast("double").alias("jaccard_lb"),
-                    F.lit(None).cast("double").alias("jaccard_ub"),
-                    F.lit(None).cast("double").alias("minhash_jaccard"),
-                    F.lit(None).cast("int").alias("hamming"),
-                    F.lit("containment").alias("source"))
-                edges = edges.unionByName(cont_e)
-
-            # shift the start by the containment-candidates seconds so
-            # the two stages do not count the same wall time twice
-            edges = self._checkpoint(edges, "edges", t0=t_edges + cont_s)
-
-        # the edges checkpoint above was rep_sigs' last consumer; release
-        # its storage now so long sessions don't accumulate stage caches
+        edges = self._stage("edges", lambda: self._edges(
+            files, sigs, rep_sigs, exact_edges))
         rep_sigs.unpersist()
-
-        # stage 4: connected components --------------------------------------
-        if self._is_done("clusters"):
-            clusters = self._load("clusters")
-            self.metrics["stages"]["clusters"] = {"resumed": True}
-        else:
-            # Exact copies fold in after CC. A sha group's edges form a
-            # star (rep -> every copy), and CC puts a node's whole
-            # neighbourhood in one task, so CC runs only over the lsh and
-            # containment edges, which touch reps alone. Each copy then
-            # takes its rep's cluster: the rep is its sha group's minimum
-            # file_id, so every component minimum (cluster_id) is the
-            # same as with the stars inside.
-            nodes = sigs.select("file_id")
-            is_sha = F.col("source") == "sha"
-            rep_of = edges.filter(is_sha).select(
-                F.col("dst").alias("file_id"), F.col("src").alias("rep"))
-            t_cc = time.time()
-            rep_clusters, iters = connected_components(
-                edges.filter(~is_sha).select("src", "dst"), nodes, cfg)
-            self.metrics["cc_seconds"] = round(time.time() - t_cc, 3)
-            clusters = (
-                nodes.join(rep_of, "file_id", "left")
-                .select("file_id", F.coalesce("rep", "file_id").alias("rep"))
-                .join(rep_clusters.withColumnRenamed("file_id", "rep"), "rep")
-                .select("file_id", "cluster_id"))
-            clusters = self._checkpoint(clusters, "clusters")
-            self.metrics["cc_iterations"] = iters
+        clusters = self._stage("clusters", lambda: self._clusters(sigs, edges))
 
         self._sweep_persisted(persisted_before, [sigs, edges, clusters])
         self.metrics["total_seconds"] = round(time.time() - t_start, 3)

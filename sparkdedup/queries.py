@@ -1447,8 +1447,7 @@ def q_kmv_distinct_tokens(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.split(F.trim("text"), r"[ \t\n\f\r]+").alias("token"))
-    return kmv_distinct_agg(toks, "source", "token", k=256,
-                            values_are_arrays=True)
+    return kmv_distinct_agg(toks, "source", "token", k=256)
 
 
 SQL_KMV_DISTINCT_TOKENS = """
@@ -1829,8 +1828,7 @@ def q_tuple_user_spend(spark, sf_dir):
     from sparkdedup.operators.tuple_agg import tuple_sketch_agg
 
     ev = _read(spark, sf_dir, "events")
-    t = tuple_sketch_agg(ev, "event_type", "user_id", "value",
-                         k=256, policy="sum")
+    t = tuple_sketch_agg(ev, "event_type", "user_id", "value", k=256)
     return t.select(
         "event_type",
         F.round("n_distinct_est", 4).alias("n_users_est"),

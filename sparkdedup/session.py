@@ -7,9 +7,15 @@ to a real cluster (explicit repartition by file_id, AQE skew handling on).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 import weakref
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -71,12 +77,50 @@ def build_session(
     )
     b = b.config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     b = b.config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf.update(_local_fs_conf(master, conf))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+_LOCAL_FS = "sparkdedup.jvm.LocalFileSystem"
+
+
+def _local_fs_conf(master: str, conf: dict) -> dict:
+    """Settings that serve file:// with jvm/LocalFileSystem.java (no
+    forked chmod per file written): on a local[N] master, unless conf sets
+    the file system or the class path, when javac builds the class and the
+    JVM, launched by this build or already running, can load it."""
+    if not master.startswith("local[") or conf.keys() & {
+            "spark.hadoop.fs.file.impl", "spark.driver.extraClassPath"}:
+        return {}
+    src = os.path.join(os.path.dirname(__file__), "jvm/LocalFileSystem.java")
+    with open(src, "rb") as f:
+        tag = hashlib.sha1(f.read()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"sparkdedup_jvm_{tag}")
+    if not os.path.isdir(out):
+        jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+        tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
+        try:  # --release 17: loadable by any JVM Spark 4 runs on
+            subprocess.run(["javac", "--release", "17", "-cp", jars, "-d", tmp,
+                            src], check=True, capture_output=True)
+            os.rename(tmp, out)  # atomic; a concurrent build may win
+        except (OSError, subprocess.CalledProcessError):
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(out):
+                return {}
+    if SparkContext._jvm is None:  # this build launches the JVM
+        return {"spark.driver.extraClassPath": out,
+                "spark.hadoop.fs.file.impl": _LOCAL_FS}
+    try:
+        SparkContext._jvm.java.lang.Class.forName(_LOCAL_FS)
+    except Exception:  # a running JVM started without it on its class path
+        return {}
+    return {"spark.hadoop.fs.file.impl": _LOCAL_FS}
 
 
 # SparkContexts that already have the package zip, held by identity and
@@ -92,9 +136,8 @@ def _ship_package(spark: SparkSession) -> None:
 
     The zip is named after the package's absolute path, so two checkouts
     that share a temp dir never ship each other's code; it is rebuilt when
-    a source is newer than it."""
-    import hashlib
-    import tempfile
+    a source is newer than it or its members are not the current sources
+    (a module deleted from the package must not stay importable)."""
     import zipfile
 
     sc = spark.sparkContext
@@ -102,15 +145,19 @@ def _ship_package(spark: SparkSession) -> None:
         return
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = os.path.join(repo, "sparkdedup")
-    sources = [os.path.join(root, n)
+    sources = {os.path.relpath(os.path.join(root, n), repo)
                for root, _dirs, names in os.walk(pkg)
-               for n in names if n.endswith(".py")]
+               for n in names if n.endswith(".py")}
     tag = hashlib.sha1(pkg.encode("utf-8")).hexdigest()[:12]
     zpath = os.path.join(tempfile.gettempdir(), f"sparkdedup_pkg_{tag}.zip")
-    newest = max(os.path.getmtime(f) for f in sources)
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
+    newest = max(os.path.getmtime(os.path.join(repo, f)) for f in sources)
+    fresh = os.path.exists(zpath) and os.path.getmtime(zpath) >= newest
+    if fresh:
+        with zipfile.ZipFile(zpath) as z:
+            fresh = set(z.namelist()) == sources
+    if not fresh:
         with zipfile.ZipFile(zpath, "w") as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, repo))
+            for rel in sorted(sources):
+                z.write(os.path.join(repo, rel), rel)
     sc.addPyFile(zpath)
     _SHIPPED.add(sc)

@@ -138,6 +138,20 @@ def test_truth_recall_report(pipeline_result, small_corpus, oracle):
     assert report["contained"][0] == report["contained"][1]
 
 
+def test_stage_seconds_decompose_the_run(pipeline_result):
+    """One clock rule: the stages are exactly signatures, edges and
+    clusters; a sub-step timed inside a stage is part of its seconds, and
+    the stages together fit inside the run's wall."""
+    m = pipeline_result["metrics"]
+    stages = m["stages"]
+    assert set(stages) == {"signatures", "edges", "clusters"}
+    for name, sub in (("edges", "containment_candidates_s"),
+                      ("clusters", "cc_seconds")):
+        assert 0 <= stages[name][sub] <= stages[name]["seconds"]
+    assert sum(s["seconds"] for s in stages.values()) <= m["total_seconds"]
+    assert "cc_seconds" not in m and m["cc_iterations"] >= 1
+
+
 def test_resume_from_checkpoint_identical(spark, small_corpus, pipeline_result):
     """Rerun with the same workdir: all stages resume, outputs identical."""
     files = spark.createDataFrame(small_corpus.files)

@@ -213,7 +213,7 @@ def test_kmv_distinct_agg_accuracy(spark):
 
 
 def test_kmv_distinct_agg_array_of_longs(spark):
-    """values_are_arrays takes any element type: array<long> cells hash
+    """Array-typed values take any element type: array<long> cells hash
     their decimal strings, so they estimate exactly as the same cells
     cast to array<string> do."""
     from sparkdedup.operators.kmv_agg import kmv_distinct_agg
@@ -221,11 +221,10 @@ def test_kmv_distinct_agg_array_of_longs(spark):
     df = spark.range(0, 3000, numPartitions=4).select(
         (F.col("id") % 3).cast("string").alias("g"),
         F.array(F.col("id") % 700, F.col("id") % 50 + 10_000).alias("v"))
-    longs = kmv_distinct_agg(df, "g", "v", k=256,
-                             values_are_arrays=True).toPandas()
+    longs = kmv_distinct_agg(df, "g", "v", k=256).toPandas()
     strs = kmv_distinct_agg(
         df.select("g", F.col("v").cast("array<string>").alias("v")),
-        "g", "v", k=256, values_are_arrays=True).toPandas()
+        "g", "v", k=256).toPandas()
     longs, strs = (x.sort_values("g").reset_index(drop=True)
                    for x in (longs, strs))
     pd.testing.assert_frame_equal(longs, strs)

@@ -42,8 +42,8 @@ def test_bucketed_resume_identical(spark, small_corpus, tmp_path):
     finally:
         pl.signature_stage = real_stage
 
-    done = sorted(p.name for p in
-                  pipe._stage_dir("signatures").glob("_bucket_*"))
+    done = sorted(p.parent.name for p in
+                  pipe._stage_dir("signatures").glob("bucket=*/_SUCCESS"))
     assert len(done) == 2  # two buckets committed before the crash
 
     # resume: only the 2 missing buckets recompute
@@ -60,10 +60,50 @@ def test_bucketed_resume_identical(spark, small_corpus, tmp_path):
     assert res3.metrics["stages"]["signatures"].get("resumed") is True
 
 
+def test_lost_bucket_commit_recomputes_only_that_bucket(
+        spark, small_corpus, tmp_path, monkeypatch):
+    """Each signature bucket is committed by its own _SUCCESS: after a
+    finished B=4 run, deleting one bucket's _SUCCESS makes the rerun
+    recompute that bucket alone, and nothing is lost or duplicated.
+    The edges and clusters commits go too, so the compared clusters are
+    built from the recomputed bucket."""
+    import shutil
+
+    import sparkdedup.pipeline as pl
+
+    files = spark.createDataFrame(small_corpus.files.head(80))
+    wd = str(tmp_path / "wd")
+    ref = DedupPipeline(spark, CFG, workdir=wd, signature_buckets=4)
+    ref_out = ref.run(files).clusters.toPandas().sort_values(
+        "file_id").reset_index(drop=True)
+    (ref._stage_dir("signatures/bucket=2") / "_SUCCESS").unlink()
+    for stage in ("edges", "clusters"):
+        shutil.rmtree(ref._stage_dir(stage))
+
+    real_stage = pl.signature_stage
+    calls = []
+
+    def counting_stage(*a, **k):
+        calls.append(1)
+        return real_stage(*a, **k)
+
+    monkeypatch.setattr(pl, "signature_stage", counting_stage)
+    res = DedupPipeline(spark, CFG, workdir=wd, signature_buckets=4).run(files)
+    m = res.metrics["stages"]["signatures"]
+    assert m["buckets_resumed"] == 3 and "resumed" not in m
+    assert len(calls) == 1
+    assert not any("resumed" in res.metrics["stages"][s]
+                   for s in ("edges", "clusters"))
+    ids = res.signatures.select("file_id").toPandas()["file_id"]
+    assert len(ids) == ids.nunique() == 80
+    got = res.clusters.toPandas().sort_values("file_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, ref_out)
+
+
 def test_bucket_count_change_recomputes_signatures(spark, small_corpus,
                                                    tmp_path, monkeypatch):
-    """Bucket markers record no bucket count, so a rerun with a different
-    signature_buckets must not resume them: B=4 markers for buckets 0-1
+    """Bucket commits record no bucket count, so a rerun with a different
+    signature_buckets must not resume them: B=4 commits for buckets 0-1
     would skip B=2's buckets 0-1 (losing files) or feed stale bucket
     directories into the read-back (duplicating them)."""
     import sparkdedup.pipeline as pl

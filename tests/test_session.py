@@ -1,8 +1,10 @@
-"""Package shipping: each checkout ships its own sparkdedup zip."""
+"""Session set-up: each checkout ships its own sparkdedup zip, and local
+file:// writes set file modes without forking chmod."""
 
 import importlib.util
 import os
 import shutil
+import stat
 import tempfile
 import time
 import zipfile
@@ -64,3 +66,45 @@ def test_checkouts_sharing_tmpdir_ship_their_own_code(tmp_path, monkeypatch):
 
     assert _shipped_marker(spark_a) == "CHECKOUT = 'A'\n"
     assert _shipped_marker(spark_b) == "CHECKOUT = 'B'\n"
+
+
+def test_deleted_module_leaves_the_zip(tmp_path, monkeypatch):
+    """Deleting a module makes no source newer than the zip, yet the next
+    ship must rebuild it without that module."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    a = _checkout(str(tmp_path), "a", "A")
+    first = _FakeSpark()
+    a._ship_package(first)
+    assert _shipped_marker(first) == "CHECKOUT = 'A'\n"
+
+    os.remove(os.path.join(str(tmp_path), "a", "sparkdedup", "marker.py"))
+    second = _FakeSpark()
+    a._ship_package(second)
+    (zpath,) = second.sparkContext.py_files
+    with zipfile.ZipFile(zpath) as z:
+        assert z.namelist() == ["sparkdedup/session.py"]
+
+
+def test_local_file_system_sets_modes_without_chmod(spark, tmp_path):
+    """file:// is served by jvm/LocalFileSystem.java: parquet files and
+    directories get Hadoop's default modes (umask 022) through java.nio,
+    and a mode java.nio cannot set (sticky bit) still goes to chmod."""
+    jvm = spark._jvm
+    hadoop_fs = jvm.org.apache.hadoop.fs
+    fs = hadoop_fs.FileSystem.get(jvm.java.net.URI("file:///"),
+                                  spark._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == "sparkdedup.jvm.LocalFileSystem"
+
+    out = tmp_path / "t"
+    spark.range(10).repartition(2).write.parquet(str(out))
+    modes = {p.name: stat.S_IMODE(p.stat().st_mode) for p in out.iterdir()}
+    assert sum(n.endswith(".parquet") for n in modes) == 2
+    assert set(modes.values()) == {0o644}
+    assert stat.S_IMODE(out.stat().st_mode) == 0o755
+
+    for mode, path in ((0o640, out / "_SUCCESS"), (0o1777, out)):
+        fs.setPermission(hadoop_fs.Path(str(path)),
+                         hadoop_fs.permission.FsPermission(f"{mode:o}"))
+        assert stat.S_IMODE(path.stat().st_mode) == mode

@@ -60,7 +60,7 @@ def run_at(cpus: int, input_path: str, n_files: int, workroot: str,
         "wall_sec": round(wall, 2),
         "files_per_sec": round(n_files / wall, 2),
         "stages": {k: v.get("seconds") for k, v in res.metrics["stages"].items()},
-        "cc_seconds": res.metrics.get("cc_seconds"),
+        "cc_seconds": res.metrics["stages"]["clusters"].get("cc_seconds"),
         "cc_iterations": res.metrics.get("cc_iterations"),
         "edges": res.metrics["stages"].get("edges", {}).get("rows"),
         "loadavg_end": round(os.getloadavg()[0], 2),
