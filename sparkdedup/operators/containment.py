@@ -85,7 +85,7 @@ def winnowed_gram_index(docs: DataFrame, id_col: str, text_col: str,
 
 def anchor_containment_candidates(signatures: DataFrame,
                                   cfg: DedupConfig) -> DataFrame:
-    """(src, dst, shared) candidates from the winnowed shingle-stream
+    """Distinct (src, dst) candidates from the winnowed shingle-stream
     anchor index (the pipeline's containment candidate generator).
 
     Index side: explode(anchors) — ~2/(w+1) rows per shingle position,
@@ -102,7 +102,6 @@ def anchor_containment_candidates(signatures: DataFrame,
     boilerplate-header buckets (shared license headers make identical
     window minima across a whole group — exactly the mega-bucket skew
     guard reasoning as LSH caps).
-    `shared` = number of distinct matching anchor values (diagnostic).
     """
     idx = signatures.select(
         F.col("file_id").alias("dst"), F.col("n_shingles").alias("nb"),
@@ -117,8 +116,8 @@ def anchor_containment_candidates(signatures: DataFrame,
     return (
         idx.join(prb, "gh")
         .filter((F.col("src") != F.col("dst")) & (F.col("na") <= F.col("nb")))
-        .groupBy("src", "dst")
-        .agg(F.countDistinct("gh").alias("shared"))
+        .select("src", "dst")
+        .distinct()
     )
 
 
@@ -126,7 +125,7 @@ def verify_containment(candidates: DataFrame, files_with_id: DataFrame,
                        cfg: DedupConfig) -> DataFrame:
     """Exact substring check: content(src) inside content(dst).
 
-    files_with_id: (file_id, content). Returns (src, dst, shared) edges
+    files_with_id: (file_id, content). Returns the (src, dst) edges
     where dst's content contains src's content verbatim.
     """
     ca = files_with_id.select(F.col("file_id").alias("src"),
@@ -136,5 +135,5 @@ def verify_containment(candidates: DataFrame, files_with_id: DataFrame,
     return (
         candidates.join(ca, "src").join(cb, "dst")
         .filter(F.instr(F.col("content_b"), F.col("content_a")) > 0)
-        .select("src", "dst", "shared")
+        .select("src", "dst")
     )

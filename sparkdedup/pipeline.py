@@ -19,7 +19,10 @@ stage's output (enable_containment, signature_buckets).
 
 One clock rule: a stage's seconds run from the start of its build to its
 commit. Sub-steps timed inside a build (edges.containment_candidates_s,
-clusters.cc_seconds) are part of their stage's seconds.
+clusters.cc_seconds) are part of their stage's seconds. Over the same span
+a stage counts its codegen_compiles (Janino classes compiled, i.e. codegen
+cache misses; near 0 on a warm session) and tags its Spark jobs with the
+description sparkdedup:<name>.
 
 Exact duplicates are collapsed BEFORE LSH (groupBy sha, keep min file_id):
 this removes the largest skew source (identical files all landing in the
@@ -127,19 +130,35 @@ class DedupPipeline:
         df.write.mode("overwrite").parquet(str(d))
         return self.spark.read.parquet(str(d)), _parquet_rows(d)
 
+    def _compiles(self) -> int:
+        """Classes Janino has compiled in this JVM so far: one per
+        generated class that missed Spark's codegen cache."""
+        return self.spark._jvm.org.apache.spark.metrics.source \
+            .CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
     def _stage(self, name: str, build) -> DataFrame:
         """Resume stage `name` if its _SUCCESS exists; otherwise run
         build() -> (frame, sub-step numbers), checkpoint the frame and
-        record its rows, the seconds from the start of the build to the
-        commit, and the sub-step numbers."""
+        record its rows, the seconds and the codegen compiles from the
+        start of the build to the commit, and the sub-step numbers. Its
+        Spark jobs are described as sparkdedup:<name>; the caller's job
+        group stays (a setJobGroup attribution still holds) and its
+        description comes back after."""
         if self._is_done(name):
             self._write_metrics(name, {"resumed": True})
             return self.spark.read.parquet(str(self._stage_dir(name)))
-        t0 = time.time()
-        df, sub = build()
-        out, rows = self._checkpoint(df, name)
+        t0, c0 = time.time(), self._compiles()
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setLocalProperty("spark.job.description", f"sparkdedup:{name}")
+        try:
+            df, sub = build()
+            out, rows = self._checkpoint(df, name)
+        finally:
+            sc.setLocalProperty("spark.job.description", caller)
         self._write_metrics(name, {
-            "rows": rows, "seconds": round(time.time() - t0, 3), **sub})
+            "rows": rows, "seconds": round(time.time() - t0, 3),
+            "codegen_compiles": self._compiles() - c0, **sub})
         return out
 
     # -- stages --------------------------------------------------------------
@@ -147,7 +166,8 @@ class DedupPipeline:
     def _signatures(self, files: DataFrame) -> DataFrame:
         """The signatures stage, or with a workdir and B > 1 buckets, B
         bucket stages read back as one frame. The signatures entry then
-        totals rows and seconds over the buckets this run computed."""
+        totals rows, seconds and compiles over the buckets this run
+        computed."""
         cfg, B = self.cfg, self.signature_buckets
         if self.workdir is None or B == 1:
             return self._stage("signatures", lambda: (
@@ -162,6 +182,8 @@ class DedupPipeline:
         self._write_metrics("signatures", {
             "rows": sum(r.get("rows", 0) for r in recs),
             "seconds": round(sum(r.get("seconds", 0.0) for r in recs), 3),
+            "codegen_compiles": sum(r.get("codegen_compiles", 0)
+                                    for r in recs),
             "buckets": B, "buckets_resumed": resumed,
             **({"resumed": True} if resumed == B else {})})
         return self.spark.read.parquet(
@@ -187,8 +209,9 @@ class DedupPipeline:
         if not self.enable_containment:
             return edges, {}
 
-        # this eager localCheckpoint is the first job to touch rep_sigs,
-        # so its seconds also pay the cache materialization
+        # candidate_pairs has already filled the rep_sigs cache (under
+        # AQE its lazy localCheckpoints run their upstream stages at call
+        # time), so these seconds do not pay for the cache fill
         t0 = time.time()
         cont_cand = anchor_containment_candidates(
             rep_sigs, cfg).localCheckpoint()
@@ -266,7 +289,7 @@ class DedupPipeline:
             sc.unpersistRDD(rid, False)
 
     def run(self, files: DataFrame) -> PipelineResult:
-        t_start = time.time()
+        t_start, c_start = time.time(), self._compiles()
         persisted_before = self._persistent_ids()
         sigs = self._signatures(files)
 
@@ -293,6 +316,7 @@ class DedupPipeline:
 
         self._sweep_persisted(persisted_before, [sigs, edges, clusters])
         self.metrics["total_seconds"] = round(time.time() - t_start, 3)
+        self.metrics["codegen_compiles"] = self._compiles() - c_start
         self.metrics["config_hash"] = self.cfg.config_hash()
         self.metrics["run_key"] = self.run_key
         return PipelineResult(sigs, edges, clusters, self.metrics)

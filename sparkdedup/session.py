@@ -18,6 +18,19 @@ import pyspark
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+# Janino-generated classes cached per JVM. Spark's default of 100 is below
+# one pipeline run's working set, and each run visits its classes in the
+# same order, so the LRU cache evicted each class before its next use and
+# every warm run recompiled nearly all of them (~1 s of a 5-7 s run on
+# 4 cores).
+# Distinct classes a cold JVM compiles (CodegenMetrics): one
+# DedupPipeline.run 124 (repo_scan) / 169 (boilerplate_skew), the 39
+# catalog queries at sf0.01 536, all of these in one JVM (bench.py's
+# shape) ~710. 2000 is ~3x that, room for plan growth. The conf is
+# static, read once per JVM when it first generates code: a JVM whose
+# first session another builder made keeps 100.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def build_session(
     app_name: str = "sparkdedup",
@@ -74,6 +87,11 @@ def build_session(
         # local mode: the driver JVM hosts all executor threads' shuffle
         # and Arrow buffers — size it like the whole cluster, not a driver
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed by source text, and AQE numbers codegen stages
+        # in planning order, which varies between runs: a stage id in the
+        # class name made the same code miss (explain output keeps the id)
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     b = b.config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     b = b.config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", str(1 << 30))

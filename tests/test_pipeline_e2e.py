@@ -152,6 +152,60 @@ def test_stage_seconds_decompose_the_run(pipeline_result):
     assert "cc_seconds" not in m and m["cc_iterations"] >= 1
 
 
+def _clear_codegen_cache(spark):
+    """Empty Spark's JVM-wide codegen cache (a private field, reached by
+    reflection), so the next run compiles its whole working set whatever
+    ran before it in this session."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).loadingCache().invalidateAll()
+
+
+def test_warm_run_reuses_generated_classes(spark, small_corpus,
+                                           tmp_path_factory):
+    """A second run in the same session finds its generated classes in
+    Spark's codegen cache: it compiles at most a tenth of what a cold
+    run compiles (with the default cache of 100 entries, ~97% of the
+    classes recompile), and every stage reports its own count."""
+    files = spark.createDataFrame(small_corpus.files)
+    _clear_codegen_cache(spark)
+    runs = [DedupPipeline(spark, CFG, workdir=str(
+        tmp_path_factory.mktemp("dedup_codegen"))).run(files).metrics
+        for _ in range(2)]
+    for m in runs:
+        assert set(m["stages"]) == {"signatures", "edges", "clusters"}
+        assert all(s["codegen_compiles"] >= 0 for s in m["stages"].values())
+        assert sum(s["codegen_compiles"] for s in m["stages"].values()) \
+            <= m["codegen_compiles"]
+    cold, warm = (m["codegen_compiles"] for m in runs)
+    assert cold >= 50, cold
+    assert warm <= 0.1 * cold, (cold, warm)
+
+
+def test_stage_describes_its_jobs(spark):
+    """Jobs a stage runs carry the description sparkdedup:<stage>; the
+    caller's job group stays, and its description comes back after."""
+    sc = spark.sparkContext
+    seen = {}
+
+    def build():
+        seen["description"] = sc.getLocalProperty("spark.job.description")
+        seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
+        return spark.range(3), {}
+
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        DedupPipeline(spark, CFG)._stage("probe", build)
+        assert seen == {"description": "sparkdedup:probe",
+                        "group": "caller-group"}
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_resume_from_checkpoint_identical(spark, small_corpus, pipeline_result):
     """Rerun with the same workdir: all stages resume, outputs identical."""
     files = spark.createDataFrame(small_corpus.files)
