@@ -1,4 +1,4 @@
-.PHONY: test bench dist scaling clean loc kernel
+.PHONY: test bench dist scaling clean loc kernel pytask
 
 # Tier-1: the whole suite, one Spark core per CPU, shuffle spill in a
 # scratch dir, no .pytest_cache left in the tree
@@ -18,6 +18,12 @@ loc:
 SEED ?= 1
 kernel:
 	python tools/kernel_digest.py --seed $(SEED)
+
+# fixed cost of a Python task: median of 10 warm trivial 4-task
+# mapInArrow jobs, and each worker's zip directory reads per task (0 when
+# the worker set-up in sparkdedup/zipcache.py holds)
+pytask:
+	python tools/pytask_probe.py
 
 scaling:
 	python tools/scaling_bench.py

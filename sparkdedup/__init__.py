@@ -8,7 +8,10 @@ reference's bound semantics (theta/jaccard_similarity.go), iterative
 connected components, and suffix/substring containment — all Spark-first.
 """
 
+from sparkdedup import zipcache
 from sparkdedup.config import DedupConfig
+
+zipcache.install()  # a no-op outside a pyspark worker
 
 __all__ = ["DedupConfig"]
 __version__ = "0.1.0"

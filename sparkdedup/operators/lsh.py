@@ -1,20 +1,47 @@
 """LSH banding -> candidate pairs, with mega-bucket skew handling.
 
-Spark-first design: banding is a posexplode, bucketing is a groupBy, pair
-generation is a self-equi-join on (band, band_hash) — all Catalyst-planned
-shuffles. The skew device the optimizer CANNOT provide (SURVEY.md §4):
-boilerplate mega-buckets blow up O(|bucket|^2) pairs, so buckets above
-`bucket_cap` switch to windowed neighbor pairing over a simhash ordering
-(row_number + bounded-offset self-join) which generates O(|bucket| * w)
-pairs and never collects a bucket to one node.
+Banding is a posexplode; a bucket is a run of equal (band, band_hash). A
+bucket of 2 to `bucket_cap` members pairs all its members. Boilerplate
+mega-buckets would blow up to O(|bucket|^2) pairs (SURVEY.md §4), so a
+bucket above the cap pairs each member with its `neighbor_window`
+successors in (simhash, file_id) order (near-duplicates sort adjacently:
+close simhashes share high bits): O(|bucket| * w) pairs.
+
+candidate_pairs computes both in one lazy plan, with no bucket-size
+table, probe or checkpoint. One range exchange on (band, band_hash,
+simhash, file_id) lays the total order out over partitions; a kernel walks
+each sorted partition's runs. A run inside a partition is a whole bucket
+and emits its pairs there. The first and last run of a partition may
+continue in the neighbouring partitions, so they leave as fragments for
+one hash exchange on (band, band_hash), where each bucket's fragments are
+stitched in partition order (range partition ids increase with the key).
+No task ever holds more than one range partition, and a bucket's stitch
+rows are bounded by the partitions it spans x max(cap, 2w): the windowed
+pairs of a fragment's interior are emitted where it lies.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from sparkdedup.config import DedupConfig
+from sparkdedup.functions.segments import ranges, seg_ids, within
+
+# phase-1 rows: a pair (src, dst; band null) or a fragment member (band,
+# band_hash, range partition pid, position in the fragment, fragment
+# length, file_id in src; dst null)
+_TAGGED = pa.schema([
+    ("band", pa.int32()), ("band_hash", pa.int64()), ("pid", pa.int32()),
+    ("pos", pa.int64()), ("flen", pa.int64()), ("src", pa.int64()),
+    ("dst", pa.int64())])
 
 
 def band_table(signatures: DataFrame) -> DataFrame:
@@ -25,13 +52,117 @@ def band_table(signatures: DataFrame) -> DataFrame:
     )
 
 
+def _runs(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, sizes) of the runs of equal keys in sorted arrays."""
+    n = len(keys[0])
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    starts = np.flatnonzero(new)
+    return starts, np.diff(np.append(starts, n))
+
+
+def _pair_index(later: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(i, j): every row i with each of the later[i] rows after it."""
+    i = np.repeat(np.arange(len(later)), later)
+    return i, ranges(np.arange(1, len(later) + 1), later)
+
+
+def _pair_batch(fid: np.ndarray, i: np.ndarray,
+                j: np.ndarray) -> pa.RecordBatch:
+    """(src, dst) = (smaller, larger) file id of each pair, self pairs
+    dropped."""
+    a, b = fid[i], fid[j]
+    keep = a != b
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.minimum(a, b)[keep]), pa.array(np.maximum(a, b)[keep])],
+        names=["src", "dst"])
+
+
+def _walk_runs(batches, cap: int, w: int):
+    """Phase 1 over one range partition sorted by (band, band_hash,
+    simhash, file_id): an inner run is a whole bucket and emits its pairs
+    (all pairs up to `cap` members, else each member with its w
+    successors); the first and last run leave as fragment rows, all
+    members of a fragment of at most `cap`, else its first and last w
+    members, the fragment's own window pairs emitted here."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    band, bh, fid = (t.column(c).to_numpy()
+                     for c in ("band", "band_hash", "file_id"))
+    _, sizes = _runs(band, bh)
+    run, pos = seg_ids(sizes), within(sizes)
+    size = sizes[run]
+    edge = np.zeros(len(sizes), dtype=bool)
+    edge[[0, -1]] = True
+    frag = edge[run]
+    rest = size - 1 - pos
+    later = np.where(size > cap, np.minimum(rest, w),
+                     np.where(frag, 0, rest))
+    pairs = _pair_batch(fid, *_pair_index(later))
+    if n := pairs.num_rows:
+        yield pa.RecordBatch.from_arrays(
+            [pa.nulls(n, t) for t in _TAGGED.types[:5]]
+            + pairs.columns, schema=_TAGGED)
+    keep = frag & ((size <= cap) | (pos < w) | (pos >= size - w))
+    m = int(keep.sum())
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(band[keep]), pa.array(bh[keep]),
+         pa.array(np.full(m, TaskContext.get().partitionId(), np.int32)),
+         pa.array(pos[keep]), pa.array(size[keep]), pa.array(fid[keep]),
+         pa.nulls(m, pa.int64())], schema=_TAGGED)
+
+
+def _stitch(batches, cap: int, w: int):
+    """Phase 2: pair rows pass through; each bucket's fragments, in
+    partition-id order, give every carried member its rank in the bucket
+    (earlier fragments' lengths + position). A bucket of at most `cap`
+    members (all carried) emits all pairs, a larger one the pairs of
+    carried members at most w ranks apart: the pairs across fragment
+    seams."""
+    frags = []
+    for b in batches:
+        is_pair = pc.is_valid(b.column("dst"))
+        pairs = b.filter(is_pair).select(["src", "dst"])
+        if pairs.num_rows:
+            yield pairs
+        if pairs.num_rows < b.num_rows:
+            frags.append(b.filter(pc.invert(is_pair)))
+    if not frags:
+        return
+    t = pa.Table.from_batches(frags)
+    band, bh, pid, pos, flen, fid = (t.column(c).to_numpy() for c in (
+        "band", "band_hash", "pid", "pos", "flen", "src"))
+    order = np.lexsort((pos, pid, bh, band))
+    band, bh, pid, pos, flen, fid = (
+        x[order] for x in (band, bh, pid, pos, flen, fid))
+    bstarts, bsizes = _runs(band, bh)
+    fstarts, fsizes = _runs(band, bh, pid)
+    flens = flen[fstarts]
+    first = np.searchsorted(fstarts, bstarts)  # each bucket's 1st fragment
+    fbucket = seg_ids(np.diff(np.append(first, len(fstarts))))
+    before = np.cumsum(flens) - flens
+    offset = before - before[first][fbucket]
+    rank = offset[seg_ids(fsizes)] + pos
+    big = (np.add.reduceat(flens, first) > cap)[seg_ids(bsizes)]
+    rest = np.repeat(bstarts + bsizes, bsizes) - 1 - np.arange(len(fid))
+    i, j = _pair_index(np.where(big, np.minimum(rest, w), rest))
+    ok = ~big[i] | (rank[j] - rank[i] <= w)
+    yield _pair_batch(fid, i[ok], j[ok])
+
+
 def grouped_rank_scalable(df: DataFrame, group_cols: list[str],
                           order_cols: list[str], num_partitions: int,
                           rank_col: str = "rn") -> DataFrame:
     """row_number() over (PARTITION BY group ORDER BY order) WITHOUT ever
     gathering a group into one task — the scale form for groups that can
-    exceed a partition (a 10^7-row boilerplate mega-bucket at 100 TB would
-    otherwise ship whole into the single task that sorts it).
+    exceed a partition. Its one caller is the stratified-sample query
+    (queries.q_stratified_sample_docs: a per-language rank over the whole
+    corpus); candidate_pairs stitches its bucket ranks in its own kernels
+    instead, without this function's checkpoint, side table and Window.
 
     Three bounded steps reconstruct the exact global rank:
       1. range-repartition on (group, order) — each output partition holds
@@ -81,88 +212,28 @@ def grouped_rank_scalable(df: DataFrame, group_cols: list[str],
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """All LSH candidate pairs (src < dst), mega-buckets capped.
 
-    Returns (src, dst) distinct.
+    Returns (src, dst) distinct, as a lazy plan: calling it runs no job.
+    The range exchange samples its input in a job of its own and then
+    reads it again, so `signatures` should be materialized (cached or
+    checkpointed); otherwise whatever computes it runs twice.
     """
-    # pin the SKINNY band table once: without this the signature kernel +
-    # posexplode re-runs for every consumer — the has_big probe's sizes
-    # aggregate, BOTH sides of the pair self-join (different projections,
-    # so no exchange reuse), and the mega-bucket branch — i.e. up to 4
-    # full kernel passes per invocation (measured 3.7s fused candidates
-    # at sf1.0, ~2.5s of it repeated kernel work). The checkpoint holds
-    # only (file_id, simhash, band, band_hash) longs, ~32MB at sf1.0.
-    # localCheckpoint, NOT cache: a .cache() here leaked one CacheManager
-    # entry per invocation (never unpersisted — r6 verdict nit #1).
-    # eager=False defers only the final stage: under AQE the call itself
-    # runs the upstream query stages (3 jobs in the pipeline, the
-    # caller's cache fill among them), and the first job that reads the
-    # checkpoint computes and pins its partitions.
-    bands = band_table(signatures).localCheckpoint(eager=False)
+    stitch = partial(_stitch, cap=cfg.bucket_cap, w=cfg.neighbor_window)
+    # fragment rows (dst null) hash on their bucket, pair rows on dst
+    return (tagged_runs(signatures, cfg)
+            .repartition("band", "band_hash", "dst")
+            .mapInArrow(stitch, "src long, dst long")
+            .distinct())
 
-    # one row per occupied bucket; pinned so the bands join + big-branch
-    # filter reuse the aggregate instead of recomputing the band shuffle
-    # (which this call runs at once, 1 job, as above).
-    sizes = (bands.groupBy("band", "band_hash")
-             .agg(F.count("*").alias("bsz")).localCheckpoint(eager=False))
-    bands = bands.join(sizes.hint("shuffle_hash"), ["band", "band_hash"])
 
-    small = bands.filter((F.col("bsz") <= cfg.bucket_cap) & (F.col("bsz") > 1))
-    a = small.select("band", "band_hash",
-                     F.col("file_id").alias("src"))
-    b = small.select("band", "band_hash",
-                     F.col("file_id").alias("dst"))
-    # shuffled-hash, not sort-merge: band tables are opaque kernel output
-    # (no stats -> Catalyst defaults to SMJ, paying two full sorts of the
-    # O(num_bands*N) table); per-partition hash builds are bounded by the
-    # bucket cap + AQE skew split
-    small_pairs = (
-        a.join(b.hint("shuffle_hash"), ["band", "band_hash"])
-         .filter(F.col("src") < F.col("dst"))
-         .select("src", "dst")
-    )
-
-    # mega-buckets: order members by simhash (near-duplicates sort adjacently
-    # because close simhashes share high bits), pair each member with its w
-    # successors via an equi-join on (bucket, rank+delta) — no collect_list,
-    # no quadratic blowup. The rank itself is computed by the stitched
-    # range-partition form (grouped_rank_scalable): a plain
-    # Window.partitionBy(band, band_hash) would gather an entire mega-bucket
-    # into the one task that sorts it — exactly the skew this branch exists
-    # to avoid — so no per-task gather here ever exceeds a range partition.
-    #
-    # Adaptive skip: when NO bucket exceeds the cap (the common case once
-    # exact-sha pre-clustering has removed identical files), the whole
-    # branch — including repartitionByRange's boundary-sampling job and
-    # the localCheckpoint materialization inside grouped_rank_scalable —
-    # is pure overhead (~1-2s of fixed job cost per invocation here;
-    # the same class of waste at cluster scale). One limit(1) probe over
-    # the already-aggregated bucket-size table decides; `sizes` is one
-    # row per occupied bucket and pinned above, so every later branch
-    # reads the aggregate back instead of recomputing the band shuffle.
-    has_big = bool(sizes.filter(F.col("bsz") > cfg.bucket_cap)
-                   .limit(1).count())
-    if not has_big:
-        return small_pairs.distinct()
-
-    big = bands.filter(F.col("bsz") > cfg.bucket_cap)
-    nparts = int(signatures.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
-    ranked = grouped_rank_scalable(
-        big, ["band", "band_hash"], ["simhash", "file_id"], nparts)
-    offsets = F.explode(F.sequence(F.lit(1), F.lit(cfg.neighbor_window)))
-    probe = ranked.withColumn("delta", offsets).withColumn(
-        "rn2", F.col("rn") + F.col("delta"))
-    big_pairs = (
-        probe.alias("l")
-        .join(ranked.alias("r"),
-              (F.col("l.band") == F.col("r.band"))
-              & (F.col("l.band_hash") == F.col("r.band_hash"))
-              & (F.col("l.rn2") == F.col("r.rn")))
-        .select(F.least("l.file_id", "r.file_id").alias("src"),
-                F.greatest("l.file_id", "r.file_id").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-
-    return small_pairs.unionByName(big_pairs).distinct()
+def tagged_runs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Phase 1 of candidate_pairs: the range exchange and the run walk
+    (_walk_runs), rows as in _TAGGED."""
+    keys = ["band", "band_hash", "simhash", "file_id"]
+    walk = partial(_walk_runs, cap=cfg.bucket_cap, w=cfg.neighbor_window)
+    return (band_table(signatures)
+            .repartitionByRange(*keys).sortWithinPartitions(*keys)
+            .select("band", "band_hash", "file_id")
+            .mapInArrow(walk, from_arrow_schema(_TAGGED)))
 
 
 def incremental_candidate_pairs(corpus_sigs: DataFrame,

@@ -555,7 +555,9 @@ def q_minhash_lsh_docs(spark, sf_dir):
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     docs = _read(spark, sf_dir, "documents")
-    sigs = signature_stage(_fan_out(_docs_as_files(docs), spark), cfg)
+    # pinned: candidate_pairs' range exchange reads its input twice
+    sigs = signature_stage(_fan_out(_docs_as_files(docs), spark),
+                           cfg).localCheckpoint(eager=False)
     return _verify_doc_pairs(spark, sf_dir, docs,
                              candidate_pairs(sigs, cfg), 0.5)
 

@@ -234,3 +234,119 @@ def test_winnowed_gram_index_matches_per_doc_reference(spark, probe_only):
     got = [(r["doc_id"], r["gh"]) for r in winnowed_gram_index(
         docs, "doc_id", "text", anch, w, probe_only=probe_only).collect()]
     assert expected and sorted(got) == sorted(expected)
+
+
+def _reference_pairs(rows, cap, w):
+    """The documented candidate semantics in plain Python: a bucket is
+    every (band, band_hash); up to `cap` members pair exhaustively, more
+    pair each member with its w successors in (simhash, file_id) order;
+    src < dst, self pairs dropped."""
+    import itertools
+
+    buckets = {}
+    for fid, sim, bands in rows:
+        for band, h in enumerate(bands):
+            buckets.setdefault((band, h), []).append((sim, fid))
+    out = set()
+    for members in buckets.values():
+        ids = [fid for _, fid in sorted(members)]
+        if len(ids) <= cap:
+            cand = itertools.combinations(ids, 2)
+        else:
+            cand = ((ids[i], ids[i + d]) for i in range(len(ids))
+                    for d in range(1, w + 1) if i + d < len(ids))
+        out |= {(min(a, b), max(a, b)) for a, b in cand if a != b}
+    return out
+
+
+def _random_sigs(rng, cap):
+    """Few bands over a handful of shared hashes (buckets of every size,
+    many straddling range partitions), simhash ties everywhere, and one
+    bucket of exactly cap + 1 members."""
+    n = int(rng.integers(60, 400))
+    nb = int(rng.integers(1, 4))
+    shared = rng.integers(0, 4, size=(n, nb))
+    unique = rng.integers(10, 2**40, size=(n, nb))
+    bands = np.where(rng.random((n, nb)) < 0.7, shared, unique)
+    bands[:, 0] = np.where(np.arange(n) < cap + 1, -5, bands[:, 0])
+    return [(int(i * 7 + 3), int(rng.integers(0, 3)),
+             [int(x) for x in bands[i]]) for i in range(n)]
+
+
+@pytest.fixture
+def shuffle_conf(spark):
+    """Sets session confs for one test and restores them after."""
+    saved = {}
+
+    def set_conf(key, value):
+        saved.setdefault(key, spark.conf.get(key))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("coalesce", ["true", "false"])
+@pytest.mark.parametrize("parts", [1, 3, 16])
+def test_candidate_pairs_match_reference(spark, shuffle_conf, parts,
+                                         coalesce):
+    """candidate_pairs equals the reference semantics whatever the range
+    partitioning cuts: random caps 2-40 and windows 1-6, buckets that
+    straddle partitions, heavy simhash ties, AQE coalescing on and off."""
+    shuffle_conf("spark.sql.shuffle.partitions", str(parts))
+    shuffle_conf("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+    rng = np.random.default_rng(parts * 2 + (coalesce == "true"))
+    for _ in range(3):
+        cap, w = int(rng.integers(2, 41)), int(rng.integers(1, 7))
+        rows = _random_sigs(rng, cap)
+        sigs = spark.createDataFrame(
+            rows, "file_id long, simhash long, bands array<long>")
+        got = {(r.src, r.dst) for r in candidate_pairs(
+            sigs, DedupConfig(bucket_cap=cap, neighbor_window=w)).collect()}
+        assert got == _reference_pairs(rows, cap, w), (cap, w, len(rows))
+
+
+def test_candidate_pairs_runs_no_job(spark):
+    """candidate_pairs only builds a plan: the range exchange samples its
+    boundaries when the plan runs, not when it is made."""
+    sigs = _fake_sigs(spark, 50, shared_band_hash=42)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    candidate_pairs(sigs, DedupConfig(bucket_cap=4, neighbor_window=2))
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_mega_bucket_fragments_bounded(spark, shuffle_conf):
+    """One 10,000-member bucket over 16 range partitions: every partition
+    holds a fragment, no fragment carries more than max(cap, 2w) rows to
+    the stitch exchange, and the stitched pairs are exactly the window
+    chain."""
+    from sparkdedup.operators.lsh import tagged_runs
+
+    shuffle_conf("spark.sql.shuffle.partitions", "16")
+    shuffle_conf("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    n, cfg = 10_000, DedupConfig(bucket_cap=30, neighbor_window=4)
+    rng = np.random.default_rng(3)
+    rows = [(i, int(rng.integers(0, 50)), [42]) for i in range(n)]
+    sigs = spark.createDataFrame(
+        rows, "file_id long, simhash long, bands array<long>").cache()
+    frags = (tagged_runs(sigs, cfg).filter(F.col("dst").isNull())
+             .groupBy("pid").count().collect())
+    assert len(frags) == 16
+    bound = max(cfg.bucket_cap, 2 * cfg.neighbor_window)
+    assert max(r["count"] for r in frags) <= bound
+    w = cfg.neighbor_window
+    assert candidate_pairs(sigs, cfg).count() == n * w - w * (w + 1) // 2
+    sigs.unpersist()
+
+
+def test_candidate_pairs_plan_one_range_exchange(spark):
+    """Plan guard: one range exchange, and no Window, cartesian product
+    or nested-loop join anywhere in the candidate plan."""
+    sigs = _fake_sigs(spark, 64, shared_band_hash=42)
+    plan = candidate_pairs(sigs, DedupConfig())._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("rangepartitioning") == 1, plan
+    for op in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert op not in plan, plan

@@ -108,3 +108,104 @@ def test_local_file_system_sets_modes_without_chmod(spark, tmp_path):
         fs.setPermission(hadoop_fs.Path(str(path)),
                          hadoop_fs.permission.FsPermission(f"{mode:o}"))
         assert stat.S_IMODE(path.stat().st_mode) == mode
+
+
+def _counting_reads(monkeypatch):
+    """Wrap zipimport._read_directory; returns the archives it reads."""
+    import zipimport
+
+    reads = []
+    eager = zipimport._read_directory
+
+    def counted(archive):
+        reads.append(archive)
+        return eager(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    return reads
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, body in modules.items():
+            z.writestr(f"{name}.py", body)
+
+
+def test_worker_zip_cache_rereads_only_changed_archives(tmp_path,
+                                                         monkeypatch):
+    """In a worker, importlib.invalidate_caches() re-reads a zip on sys.path
+    only when it changed: an unchanged zip is not read, and a module added
+    to a rewritten zip imports after the call."""
+    import importlib
+    import sys
+    import types
+    import zipimport
+
+    from sparkdedup import zipcache
+
+    # undo the install at teardown; pose as a pyspark worker meanwhile
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    monkeypatch.setitem(sys.modules, "pyspark.worker",
+                        types.ModuleType("pyspark.worker"))
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"zc_first": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("zc_first", "zc_second"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    import zc_first  # noqa: F401
+
+    lazy = sys.version_info < (3, 12)  # later CPythons re-read lazily
+    assert zipcache.install() == lazy
+    assert zipcache.install() == lazy  # idempotent
+    reads = _counting_reads(monkeypatch)
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    if lazy:
+        assert archive not in reads
+
+    _write_zip(archive, {"zc_first": "X = 1\n", "zc_second": "Y = 2\n"})
+    importlib.invalidate_caches()
+    import zc_second
+    assert zc_second.Y == 2
+
+
+def test_driver_keeps_eager_invalidate_caches():
+    """Outside a pyspark worker the stdlib zipimporter stays as it is."""
+    import zipimport
+
+    from sparkdedup import zipcache
+
+    assert not zipcache.install()
+    assert not getattr(zipimport.zipimporter.invalidate_caches,
+                       "_sparkdedup_lazy", False)
+
+
+def test_worker_tasks_do_not_reread_zips(spark):
+    """A warm Python worker's per-task importlib.invalidate_caches() reads
+    no zip directory (an eager zipimporter re-reads pyspark.zip and the
+    spark-core jar, 12 or more reads, at the start of every task)."""
+    def count_reads(batches):
+        import importlib
+        import zipimport
+
+        import pyarrow as pa
+
+        import sparkdedup  # noqa: F401  (installs the worker set-up)
+
+        reads = []
+        eager = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or eager(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = eager
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)]})
+
+    df = spark.range(0, 16, numPartitions=4)
+    df.mapInArrow(count_reads, "reads long").collect()
+    second = [r.reads for r in
+              df.mapInArrow(count_reads, "reads long").collect()]
+    assert len(second) == 4 and set(second) == {0}, second
