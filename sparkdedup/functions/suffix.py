@@ -3,8 +3,11 @@ containment pass: longest common substring between candidate pairs.
 
 Role parity: the reference has no suffix structures — this implements the
 north-star "suffix-array pass for exact substring containment" beyond
-whole-file containment (which instr() already covers exactly). Used inside
-applyInPandas per candidate pair (sparkdedup/operators/containment.py).
+whole-file containment (which instr() already covers exactly). No pipeline
+stage or catalog query calls it: the pipeline's containment pass joins
+winnowed anchors (sparkdedup/operators/containment.py) and
+substr_containment_docs uses instr(); tests/test_suffix.py checks it
+against brute force.
 
 Algorithm: Manber-Myers prefix doubling with numpy lexsort — O(n log n)
 passes, fully vectorized; Kasai's algorithm for LCP (linear, python loop in

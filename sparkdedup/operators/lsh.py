@@ -28,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -152,61 +152,6 @@ def _stitch(batches, cap: int, w: int):
     i, j = _pair_index(np.where(big, np.minimum(rest, w), rest))
     ok = ~big[i] | (rank[j] - rank[i] <= w)
     yield _pair_batch(fid, i[ok], j[ok])
-
-
-def grouped_rank_scalable(df: DataFrame, group_cols: list[str],
-                          order_cols: list[str], num_partitions: int,
-                          rank_col: str = "rn") -> DataFrame:
-    """row_number() over (PARTITION BY group ORDER BY order) WITHOUT ever
-    gathering a group into one task — the scale form for groups that can
-    exceed a partition. Its one caller is the stratified-sample query
-    (queries.q_stratified_sample_docs: a per-language rank over the whole
-    corpus); candidate_pairs stitches its bucket ranks in its own kernels
-    instead, without this function's checkpoint, side table and Window.
-
-    Three bounded steps reconstruct the exact global rank:
-      1. range-repartition on (group, order) — each output partition holds
-         a contiguous slice of the total order, sized by the partitioner,
-         never by the group;
-      2. local row_number within (partition_id, group) — every window
-         gather is bounded by the range-partition size;
-      3. per-(partition, group) counts (a tiny side table: one row per
-         group-slice) prefix-summed over partition_id and broadcast back:
-         global rank = local rank + offset of same-group rows in lower
-         partitions.
-    Because range partitions are contiguous in the sort key, the stitched
-    rank equals the single-window row_number exactly (order_cols + the
-    caller's key must form a total order within each group, as row_number
-    determinism already requires).
-
-    The counts branch and the join branch BOTH read `_pid`, so they must
-    see the SAME physical partitioning. Spark's exchange reuse usually
-    guarantees that, but RangePartitioner samples its boundaries with a
-    lineage-dependent seed — if the exchange were ever recomputed per
-    branch (reuse disabled, AQE replan, upstream plan change), `_pid`
-    could disagree between branches and ranks would silently corrupt. So
-    the range-partitioned frame is materialized once via localCheckpoint
-    BEFORE branching: both branches then scan the same pinned RDD (plan
-    shows `Scan ExistingRDD`, zero range exchanges downstream — plan-
-    guarded in test_lsh_caps.py). Trade: a lost executor must recompute
-    from the checkpoint blocks rather than lineage — acceptable for a
-    bounded intermediate, same trade components.py already makes."""
-    keys = group_cols + order_cols
-    d = (df.repartitionByRange(num_partitions, *[F.col(c) for c in keys])
-           .withColumn("_pid", F.spark_partition_id())
-           .localCheckpoint(eager=False))
-    wloc = (Window.partitionBy("_pid", *group_cols)
-            .orderBy(*[F.col(c) for c in order_cols]))
-    d = d.withColumn("_lrn", F.row_number().over(wloc))
-    cnt = d.groupBy("_pid", *group_cols).agg(F.count("*").alias("_c"))
-    woff = (Window.partitionBy(*group_cols).orderBy("_pid")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    off = cnt.withColumn(
-        "_off", F.coalesce(F.sum("_c").over(woff), F.lit(0))).drop("_c")
-    return (d.join(F.broadcast(off), ["_pid"] + group_cols)
-             .withColumn(rank_col, (F.col("_lrn") + F.col("_off"))
-                         .cast("int"))
-             .drop("_pid", "_lrn", "_off"))
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:

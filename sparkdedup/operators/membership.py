@@ -9,7 +9,7 @@ Bloom filter re-expressed Spark-first (reference filters/bloom_filter.go):
     filter only needs self-consistency, not cross-library bit parity)
   - the bitmap is a DataFrame of (word_idx, bits) longs built by
     aggregation (BIT_OR of shifted bits) — i.e. the build IS a groupBy,
-    the union of two filters IS a bit_or merge, membership IS a join.
+    membership IS a join.
 
 Count-Min (reference count/count_min_sketch.go:45-205): d x w counter
 matrix as a (row, col, cnt) DataFrame; update = groupBy count, estimate =
@@ -59,50 +59,6 @@ def bloom_build(df: DataFrame, col: str, n_items: int, fpp: float = 0.01,
         F.bit_or("bit").alias("bits")).withColumn(
         "m", F.lit(m)).withColumn("k", F.lit(k)).withColumn(
         "seed", F.lit(seed))
-
-
-def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two compatible filters (reference filters/bloom_filter.go:523-536)."""
-    return (a.unionByName(b).groupBy("word_idx", "m", "k", "seed")
-            .agg(F.bit_or("bits").alias("bits")))
-
-
-def bloom_intersect(a: DataFrame, b: DataFrame) -> DataFrame:
-    """AND-merge two compatible filters (reference filters/bloom_filter.go:537-547).
-
-    Absent word rows are implicit zeros, so the intersection is an inner
-    join on word_idx with bitwise AND — words present in only one filter
-    vanish (AND with 0)."""
-    bb = b.select("word_idx", F.col("bits").alias("bits_b"))
-    return (a.join(bb, "word_idx")
-            .select("word_idx",
-                    F.col("bits").bitwiseAND(F.col("bits_b")).alias("bits"),
-                    "m", "k", "seed")
-            .filter(F.col("bits") != 0))
-
-
-def bloom_invert(a: DataFrame) -> DataFrame:
-    """NOT of the bitmap (reference filters/bloom_filter.go:548-558).
-
-    Requires materializing implicit-zero words: generate all ceil(m/64)
-    word indexes (sequence explode — no driver loop) and left-join the
-    sparse bitmap. The last word's slack bits beyond m are masked off,
-    matching the reference's trailing-word mask."""
-    meta = a.select("m", "k", "seed").first()
-    m, k, seed = meta["m"], meta["k"], meta["seed"]
-    n_words = (m + 63) // 64
-    last_bits = m - 64 * (n_words - 1)
-    last_mask = -1 if last_bits == 64 else (1 << last_bits) - 1
-    spark = a.sparkSession
-    words = spark.range(n_words).select(F.col("id").alias("word_idx"))
-    joined = words.join(a.select("word_idx", "bits"), "word_idx", "left")
-    inv = F.coalesce(F.col("bits"), F.lit(0)).bitwiseXOR(F.lit(-1).cast("long"))
-    masked = F.when(F.col("word_idx") == n_words - 1,
-                    inv.bitwiseAND(F.lit(last_mask).cast("long"))).otherwise(inv)
-    return (joined.select("word_idx", masked.alias("bits"))
-            .filter(F.col("bits") != 0)
-            .withColumn("m", F.lit(m)).withColumn("k", F.lit(k))
-            .withColumn("seed", F.lit(seed)))
 
 
 def bloom_might_contain(bloom: DataFrame, probes: DataFrame,

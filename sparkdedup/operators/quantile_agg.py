@@ -359,13 +359,6 @@ def kll_agg_quantiles(sketches: DataFrame, qs: list[float],
     return _read_rows(sketches, group_cols, ["q", "value"], read)
 
 
-def req_agg_quantiles(sketches: DataFrame, qs: list[float],
-                      group_cols: list[str] | None = None,
-                      round_to: int = 4) -> DataFrame:
-    """(group, q, value) — quantile estimates from req_agg output."""
-    return kll_agg_quantiles(sketches, qs, group_cols, round_to)
-
-
 def kll_agg_cdf(sketches: DataFrame, split_points: list[float],
                 group_cols: list[str] | None = None,
                 round_to: int = 6,

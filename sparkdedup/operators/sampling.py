@@ -52,61 +52,58 @@ def reservoir_sample(df: DataFrame, k: int, group_cols: list[str] | None = None,
             .filter(F.col("_rk") <= k).drop("_rk"))
 
 
-def reservoir_sample_scaled(df: DataFrame, k: int,
-                            group_cols: list[str] | None = None,
-                            seed: int = 9001, boost: int = 8) -> DataFrame:
-    """reservoir_sample for groups too big to sort in one task.
+def grouped_rank_scalable(df: DataFrame, group_cols: list[str],
+                          order_cols: list[str], num_partitions: int,
+                          rank_col: str = "rn") -> DataFrame:
+    """row_number() over (PARTITION BY group ORDER BY order) WITHOUT ever
+    gathering a group into one task — the scale form for groups that can
+    exceed a partition. Its one caller is the stratified-sample query
+    (queries.q_stratified_sample_docs: a per-language rank over the whole
+    corpus).
 
-    The naive formulation window-sorts EVERY row of a group inside a
-    single task (Window.partitionBy(group) is a per-group gather) — a
-    scale killer when one group holds billions of rows. This variant
-    returns the IDENTICAL sample (same xxhash64 key, same k smallest)
-    with the full-group sort replaced by:
+    Three bounded steps reconstruct the exact global rank:
+      1. range-repartition on (group, order) — each output partition holds
+         a contiguous slice of the total order, sized by the partitioner,
+         never by the group;
+      2. local row_number within (partition_id, group) — every window
+         gather is bounded by the range-partition size;
+      3. per-(partition, group) counts (a tiny side table: one row per
+         group-slice) prefix-summed over partition_id and broadcast back:
+         global rank = local rank + offset of same-group rows in lower
+         partitions.
+    Because range partitions are contiguous in the sort key, the stitched
+    rank equals the single-window row_number exactly (order_cols + the
+    caller's key must form a total order within each group, as row_number
+    determinism already requires).
 
-      1. per-group counts (map-side-combinable agg, one scan);
-      2. a key-threshold prefilter: keys are uniform over int64, so the
-         k-th smallest sits near INT64_MIN + (k/n)*2^64; keeping keys
-         below the (boost*k/n) quantile passes ~boost*k rows per group
-         through the window (the only sorted set);
-      3. an exactness check: any group with fewer than k survivors (a
-         ~e^-k tail event, or a skew/miscount artifact) falls back to
-         its full row set, so the output is provably identical to the
-         naive window for every group.
-
-    Two extra cheap aggregates buy an O(n) -> O(boost*k) reduction of the
-    per-group sorted volume."""
-    key = F.xxhash64(*[F.col(c) for c in df.columns], F.lit(seed))
-    gcols = group_cols or ["_g"]
-    d = df.withColumn("_key", key)
-    if not group_cols:
-        d = d.withColumn("_g", F.lit(1))
-    counts = d.groupBy(*gcols).agg(F.count("*").alias("_n"))
-    d = d.join(counts, gcols)  # AQE broadcasts when the group table is small
-    # threshold in key space: INT64_MIN + frac * 2^64, clamped to "keep all"
-    frac = F.least(F.lit(1.0), F.lit(float(boost) * k) / F.col("_n"))
-    thresh = F.when(frac >= 1.0, F.lit(2**63 - 1).cast("long")).otherwise(
-        (F.lit(-(2.0**63)) + frac * F.lit(2.0**64)).cast("long"))
-    d = d.withColumn("_th", thresh)
-    surv = d.filter(F.col("_key") <= F.col("_th"))
-    # exactness fallback: groups where the prefilter kept < k rows (tiny
-    # by construction) get their full row set back. `under` is derived
-    # from the FULL group list (counts left-joined with survivor counts),
-    # not from the survivors alone: a group whose prefilter kept ZERO rows
-    # (P ~ e^-(boost*k) per large group — rare but real across many
-    # groups) would otherwise vanish from the survivor-side aggregation
-    # and be silently dropped instead of falling back.
-    sc = surv.groupBy(*gcols).agg(F.count("*").alias("_sn"))
-    under = (counts.join(sc, gcols, "left")
-             .filter(F.coalesce(F.col("_sn"), F.lit(0)) < k)
-             .select(*gcols))
-    extra = d.join(F.broadcast(under), gcols, "semi").filter(
-        F.col("_key") > F.col("_th"))
-    surv = surv.unionByName(extra)
-    w = Window.partitionBy(*gcols).orderBy("_key")
-    out = (surv.withColumn("_rk", F.row_number().over(w))
-               .filter(F.col("_rk") <= k))
-    drop = ["_rk", "_key", "_n", "_th"] + ([] if group_cols else ["_g"])
-    return out.drop(*drop)
+    The counts branch and the join branch BOTH read `_pid`, so they must
+    see the SAME physical partitioning. Spark's exchange reuse usually
+    guarantees that, but RangePartitioner samples its boundaries with a
+    lineage-dependent seed — if the exchange were ever recomputed per
+    branch (reuse disabled, AQE replan, upstream plan change), `_pid`
+    could disagree between branches and ranks would silently corrupt. So
+    the range-partitioned frame is materialized once via localCheckpoint
+    BEFORE branching: both branches then scan the same pinned RDD (plan
+    shows `Scan ExistingRDD`, zero range exchanges downstream — plan-
+    guarded in test_sampling_stateful.py). Trade: a lost executor must
+    recompute from the checkpoint blocks rather than lineage — acceptable
+    for a bounded intermediate, same trade components.py already makes."""
+    keys = group_cols + order_cols
+    d = (df.repartitionByRange(num_partitions, *[F.col(c) for c in keys])
+           .withColumn("_pid", F.spark_partition_id())
+           .localCheckpoint(eager=False))
+    wloc = (Window.partitionBy("_pid", *group_cols)
+            .orderBy(*[F.col(c) for c in order_cols]))
+    d = d.withColumn("_lrn", F.row_number().over(wloc))
+    cnt = d.groupBy("_pid", *group_cols).agg(F.count("*").alias("_c"))
+    woff = (Window.partitionBy(*group_cols).orderBy("_pid")
+            .rowsBetween(Window.unboundedPreceding, -1))
+    off = cnt.withColumn(
+        "_off", F.coalesce(F.sum("_c").over(woff), F.lit(0))).drop("_c")
+    return (d.join(F.broadcast(off), ["_pid"] + group_cols)
+             .withColumn(rank_col, (F.col("_lrn") + F.col("_off"))
+                         .cast("int"))
+             .drop("_pid", "_lrn", "_off"))
 
 
 def threshold_sample(df: DataFrame, k: int, weight_col: str,
@@ -207,8 +204,9 @@ def threshold_sample(df: DataFrame, k: int, weight_col: str,
 def _np_threshold(w, rank, k, offset):
     """Offline threshold sample of ONE group in numpy — the same
     arithmetic as threshold_sample (tau scan over weight-desc order,
-    heavies exact, systematic light draw in `rank` order). Returns
-    (positions kept, adjusted weights)."""
+    heavies exact, systematic light draw in `rank` order), kept as the
+    reference the tests and tools/characterize.py check it against.
+    Returns (positions kept, adjusted weights)."""
     import numpy as np
 
     n = len(w)
@@ -241,85 +239,6 @@ def _np_threshold(w, rank, k, offset):
     keep = np.concatenate([heavy, kept_light])
     adj = np.concatenate([w[heavy], np.full(len(kept_light), tau)])
     return keep, adj
-
-
-def varopt_sample_scaled(df: DataFrame, k: int, weight_col: str,
-                         group_cols: list[str] | None = None,
-                         seed: int = 9001,
-                         offset: float = 0.3819660112501051,
-                         adj_weight_col: str = "adj_weight") -> DataFrame:
-    """Two-phase distributed VarOpt — the scale path for groups too big
-    to window-sort in one task (threshold_sample gathers each group).
-
-    Mirrors the reference's mergeable-sketch design
-    (sampling/varopt_items_union.go): phase 1 runs an offline VarOpt over
-    each (Arrow batch, group) slice inside mapInPandas — bounded k rows
-    of state per slice, no shuffle, weights become HT adj-weights; phase
-    2 merges each group's <= k-per-batch partials with one more
-    threshold pass over the ADJUSTED weights (applyInPandas; input is
-    k * n_batches rows per group, not n). Unbiasedness composes by the
-    tower rule — each phase's HT estimator is conditionally unbiased —
-    and the HT total identity (sum adj_weight == population total) holds
-    EXACTLY through both phases. Per-row uniform ranks are xxhash64-
-    derived JVM-side; the draw is deterministic for a fixed partitioning
-    but batch boundaries move with the layout, so the single-pass window
-    form (varopt_sample) remains the oracle-replayable path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    gcols = list(group_cols or [])
-    u = (F.pmod(F.xxhash64(*[F.col(c) for c in df.columns], F.lit(seed)),
-                F.lit(1 << 53)) + 1) / F.lit(float(1 << 53))
-    d = df.withColumn("_u", u)
-    mid_schema = StructType(list(d.schema.fields)
-                            + [StructField("_pw", DoubleType())])
-
-    def _partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            w = pdf[weight_col].to_numpy(dtype=np.float64)
-            rank = pdf["_u"].to_numpy(dtype=np.float64)
-            if gcols:
-                codes, _ = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[gcols]) if len(gcols) > 1
-                    else pdf[gcols[0]])
-                order = np.argsort(codes, kind="stable")
-                bounds = np.flatnonzero(
-                    np.r_[True, codes[order][1:] != codes[order][:-1]])
-                segs = np.split(order, bounds[1:])
-            else:
-                segs = [np.arange(len(pdf))]
-            outs = []
-            for seg in segs:
-                keep, adj = _np_threshold(w[seg], rank[seg], k, offset)
-                part = pdf.iloc[seg[keep]].copy()
-                part["_pw"] = adj
-                outs.append(part)
-            yield pd.concat(outs, ignore_index=True)
-
-    partial = d.mapInPandas(_partial, schema=mid_schema)
-
-    out_schema = StructType(list(df.schema.fields)
-                            + [StructField(adj_weight_col, DoubleType())])
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        w = pdf["_pw"].to_numpy(dtype=np.float64)
-        # re-salt the rank so the merge draw is independent of phase 1's
-        rank = np.mod(pdf["_u"].to_numpy(dtype=np.float64)
-                      * 2654435761.0, 1.0)
-        keep, adj = _np_threshold(w, rank, k, offset)
-        out = pdf.iloc[keep].drop(columns=["_u", "_pw"]).copy()
-        out[adj_weight_col] = adj
-        return out
-
-    if gcols:
-        merged = partial.groupBy(*gcols).applyInPandas(_merge, out_schema)
-    else:
-        merged = partial.groupBy(F.lit(1).alias("_g")).applyInPandas(
-            lambda key, pdf: _merge(pdf), out_schema)
-    return merged
 
 
 def varopt_sample(df: DataFrame, k: int, weight_col: str,

@@ -112,8 +112,7 @@ def _anchors_and_probes(
 def file_ids_batch(repos, paths, commits) -> np.ndarray:
     """Deterministic file ids: murmur3-128 h1 (seed 42) of
     repo\\0path\\0commit, reinterpreted as int64. The one definition
-    of the file-id key; the fixtures' truth tables and the catalog's
-    docs-as-files id map use it too."""
+    of the file-id key; the fixtures' truth tables use it too."""
     keys = [f"{r}\x00{p}\x00{c}".encode("utf-8")
             for r, p, c in zip(repos, paths, commits)]
     h1, _ = murmur3_128_bytes(keys, 42)

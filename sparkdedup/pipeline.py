@@ -293,8 +293,7 @@ class DedupPipeline:
 
         # exact-sha pre-cluster: representative per sha = min file_id;
         # exact edges rep -> member
-        reps = sigs.groupBy("sha").agg(F.min("file_id").alias("rep"),
-                                       F.count("*").alias("copies"))
+        reps = sigs.groupBy("sha").agg(F.min("file_id").alias("rep"))
         exact_edges = (
             sigs.join(reps, "sha")
             .filter(F.col("file_id") != F.col("rep"))

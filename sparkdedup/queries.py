@@ -228,35 +228,6 @@ def _word_gram_inv(spark, sf_dir,
             .mapInPandas(gram_kernel, schema="doc_id long, gh long"))
 
 
-def _doc_idmap(docs: DataFrame) -> DataFrame:
-    """(file_id, orig_id) for the docs-as-files mapping WITHOUT running
-    the signature kernel: file_id is file_ids_batch over
-    (repo, path, commit) = ('docs', str(doc_id), '0') — the key
-    _docs_as_files feeds signature_stage — independent of content. The
-    LSH queries join this map back onto candidate pairs TWICE (src and
-    dst); deriving it from the signatures frame re-ran the whole
-    tokenize+shingle+KMV kernel per join branch. This kernel reads one
-    long column. Equality with signature_stage's file_id is pinned in
-    tests/test_queries.py."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkdedup.operators.signatures import file_ids_batch
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame({
-                "file_id": file_ids_batch(
-                    ["docs"] * len(ids), map(str, ids), ["0"] * len(ids)),
-                "orig_id": ids})
-
-    return docs.select("doc_id").mapInPandas(
-        kern, schema="file_id long, orig_id long")
-
-
 def _jaccard_from_counts(inter: DataFrame, sizes: DataFrame,
                         tau: float) -> DataFrame:
     """(src, dst, jaccard) pairs with jaccard >= tau, from the pair
@@ -501,8 +472,8 @@ WHERE a.doc_id <> b.doc_id
 
 def _docs_as_files(docs: DataFrame) -> DataFrame:
     """The documents table in the files schema signature_stage reads:
-    repo 'docs', path str(doc_id), commit '0' — the key _doc_idmap
-    hashes back to doc_id."""
+    repo 'docs', path str(doc_id), commit '0'. _doc_signatures casts the
+    path back to doc_id."""
     return docs.select(
         F.lit("docs").alias("repo"),
         F.col("doc_id").cast("string").alias("path"),
@@ -510,25 +481,24 @@ def _docs_as_files(docs: DataFrame) -> DataFrame:
         F.col("lang"), F.col("text").alias("content"))
 
 
-def _verify_doc_pairs(spark, sf_dir, docs: DataFrame, cands: DataFrame,
+def _doc_signatures(files: DataFrame, cfg) -> DataFrame:
+    """signature_stage over _docs_as_files rows, keyed by doc id: file_id
+    is the path cast back to doc_id, so LSH candidate pairs come out as
+    (src < dst) doc ids."""
+    from sparkdedup.operators.signatures import signature_stage
+
+    return signature_stage(files, cfg).withColumn(
+        "file_id", F.col("path").cast("long"))
+
+
+def _verify_doc_pairs(spark, sf_dir, cands: DataFrame,
                       tau: float) -> DataFrame:
-    """Exact word-3-gram Jaccard verify of LSH candidate pairs over
-    _docs_as_files file ids: remap (src, dst) to doc ids, orient and
-    dedup each pair, then verify at tau on candidate members only."""
-    idmap = _doc_idmap(docs)
-    src_map = idmap.select(F.col("file_id").alias("src"),
-                           F.col("orig_id").alias("src_doc"))
-    dst_map = idmap.select(F.col("file_id").alias("dst"),
-                           F.col("orig_id").alias("dst_doc"))
+    """Exact word-3-gram Jaccard verify of distinct (src < dst) doc-id
+    candidate pairs at tau, on candidate members only."""
     # the verify stage scans the candidate table three times (src semi,
     # dst semi, intersection join); pin the tiny pair set once so the
     # signature+banding subtree is computed exactly once per query
-    cand_docs = (
-        cands.join(src_map, "src").join(dst_map, "dst")
-        .select(F.least("src_doc", "dst_doc").alias("src"),
-                F.greatest("src_doc", "dst_doc").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False))
+    cand_docs = cands.localCheckpoint(eager=False)
     # gram-verify only candidate-pair members: the kernel tokenizes a few
     # percent of the corpus instead of all of it (identical output — the
     # verify step never reads any other doc's grams)
@@ -551,15 +521,13 @@ def q_minhash_lsh_docs(spark, sf_dir):
     tests/test_pipeline_e2e.py)."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.lsh import candidate_pairs
-    from sparkdedup.operators.signatures import signature_stage
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     docs = _read(spark, sf_dir, "documents")
     # pinned: candidate_pairs' range exchange reads its input twice
-    sigs = signature_stage(_fan_out(_docs_as_files(docs), spark),
+    sigs = _doc_signatures(_fan_out(_docs_as_files(docs), spark),
                            cfg).localCheckpoint(eager=False)
-    return _verify_doc_pairs(spark, sf_dir, docs,
-                             candidate_pairs(sigs, cfg), 0.5)
+    return _verify_doc_pairs(spark, sf_dir, candidate_pairs(sigs, cfg), 0.5)
 
 
 SQL_MINHASH_LSH_DOCS = """
@@ -607,7 +575,6 @@ def q_incremental_neardup_docs(spark, sf_dir):
     join with no corpus-side shuffle, is guarded in test_plans.py."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.lsh import incremental_candidate_pairs
-    from sparkdedup.operators.signatures import signature_stage
 
     cfg = DedupConfig(jaccard_threshold=0.5)
     docs = _read(spark, sf_dir, "documents")
@@ -618,12 +585,12 @@ def q_incremental_neardup_docs(spark, sf_dir):
     # cluster scale), and only the small delta is re-scanned for its
     # broadcast band table (a filter-split of one shared signatures frame
     # would re-run the full kernel over ALL docs once per consumer)
-    delta_sigs = signature_stage(_fan_out(files.filter(is_delta), spark),
+    delta_sigs = _doc_signatures(_fan_out(files.filter(is_delta), spark),
                                  cfg)
-    corpus_sigs = signature_stage(_fan_out(files.filter(~is_delta), spark),
+    corpus_sigs = _doc_signatures(_fan_out(files.filter(~is_delta), spark),
                                   cfg)
     cands = incremental_candidate_pairs(corpus_sigs, delta_sigs)
-    return _verify_doc_pairs(spark, sf_dir, docs, cands, 0.5)
+    return _verify_doc_pairs(spark, sf_dir, cands, 0.5)
 
 
 SQL_INCREMENTAL_NEARDUP_DOCS = """
@@ -1113,7 +1080,7 @@ def q_stratified_sample_docs(spark, sf_dir):
     aggregate (rows = |langs|), broadcast back. 0.25 is a dyadic
     fraction, so n * 0.25 is exact in IEEE and ceil() agrees across
     engines for every n."""
-    from sparkdedup.operators.lsh import grouped_rank_scalable
+    from sparkdedup.operators.sampling import grouped_rank_scalable
 
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang",

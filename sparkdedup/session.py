@@ -31,27 +31,23 @@ from pyspark.sql import SparkSession
 # first session another builder made keeps 100.
 CODEGEN_CACHE_ENTRIES = 2000
 
+# Arrow batch caps: the row cap only binds for skinny rows; the real
+# governor is the 512KB byte cap, which keeps batches cache-resident for
+# fat document kernels (a 64-row cap approximated this by rows and taxed
+# every skinny-row sketch agg with ~9,400 Arrow batches per sf0.1
+# lineitem scan). Measured sweep (warm medians, sf0.1, local[32]): 64-row
+# vs 512KB-cap = tdigest 7.2->0.9s, req 8.5->1.2s, kll 2.6->1.4s, and the
+# fat kernels improve too (minhash_lsh 6.1->3.5s, signature stage
+# 2.2->1.1s); 1MB/2MB caps regress minhash_lsh monotonically (4.8/5.5s),
+# so 512KB is the cache-residency sweet spot.
+ARROW_BATCH_ROWS = 65536
+ARROW_BATCH_BYTES = 524288
+
 
 def build_session(
     app_name: str = "sparkdedup",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 65536,      # row cap for SKINNY rows; the real
-    arrow_batch_bytes: int = 524288,    # governor is the 512KB byte cap:
-                                  # batches stay cache-resident for fat
-                                  # document kernels (the r1-r4 64-row
-                                  # setting approximated this by rows and
-                                  # taxed every skinny-row sketch agg with
-                                  # ~9,400 Arrow batches per sf0.1 lineitem
-                                  # scan — r4 verdict weak #2). Measured
-                                  # sweep (warm medians, sf0.1, local[32]):
-                                  # 64-row vs 512KB-cap = tdigest 7.2->0.9s,
-                                  # req 8.5->1.2s, kll 2.6->1.4s, AND the
-                                  # fat kernels improve too (minhash_lsh
-                                  # 6.1->3.5s, signature stage 2.2->1.1s);
-                                  # 1MB/2MB caps regress minhash_lsh
-                                  # monotonically (4.8/5.5s) — 512KB is the
-                                  # cache-residency sweet spot.
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = os.cpu_count() or 4
@@ -79,8 +75,8 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(arrow_batch_bytes))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))

@@ -39,69 +39,6 @@ def test_small_buckets_exhaustive(spark):
     assert len(pairs) == 45  # all 10-choose-2 within the shared bucket
 
 
-def test_grouped_rank_scalable_matches_single_window(spark):
-    """The stitched range-partition rank must equal the plain grouped
-    row_number exactly — including groups that straddle many range
-    partitions and groups with heavy simhash ties."""
-    from pyspark.sql import Window
-
-    from sparkdedup.operators.lsh import grouped_rank_scalable
-
-    rng = np.random.default_rng(11)
-    rows = [(int(g), int(rng.integers(0, 5)), int(i))
-            for g in range(4) for i in range(300)]
-    df = spark.createDataFrame(rows, "g long, simhash long, file_id long")
-    got = grouped_rank_scalable(df, ["g"], ["simhash", "file_id"],
-                                num_partitions=16).toPandas()
-    w = Window.partitionBy("g").orderBy("simhash", "file_id")
-    want = df.withColumn("rn", F.row_number().over(w).cast("int")).toPandas()
-    key = ["g", "simhash", "file_id"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert (got[key + ["rn"]].values == want[key + ["rn"]].values).all()
-
-
-def test_mega_bucket_no_bucket_wide_window(spark):
-    """Plan guard (r3 verdict weak #2): the mega-bucket branch must not
-    contain a Window partitioned ONLY by (band, band_hash) — that spec
-    gathers a whole mega-bucket into the single task that sorts it. Every
-    row_number window in the plan must carry the range-partition id."""
-    import re
-
-    cfg = DedupConfig(bucket_cap=16, neighbor_window=3)
-    sigs = _fake_sigs(spark, 64, shared_band_hash=42)
-    plan = candidate_pairs(sigs, cfg)._jdf.queryExecution().executedPlan() \
-        .toString()
-    for spec in re.findall(r"row_number\(\).*?windowspecdefinition\(([^)]*)\)",
-                           plan):
-        parts = spec.split(",")[:-2]  # drop the two ordering frame args
-        cols = [p.strip().split("#")[0] for p in parts
-                if "#" in p and " " not in p.strip().split("#")[0]]
-        assert "_pid" in cols, f"bucket-wide window spec found: {spec}"
-
-
-def test_grouped_rank_branches_read_materialized_rdd(spark):
-    """Plan guard (r4 advice): the counts branch and the join branch both
-    read `_pid`, so they must see ONE physical range partitioning. The
-    operator materializes the range-partitioned frame (localCheckpoint)
-    before branching — the final plan must therefore scan the pinned RDD
-    and contain NO live rangepartitioning exchange that could be
-    recomputed per-branch with different sampled boundaries."""
-    from sparkdedup.operators.lsh import grouped_rank_scalable
-
-    rng = np.random.default_rng(13)
-    rows = [(int(g), int(rng.integers(0, 5)), int(i))
-            for g in range(3) for i in range(50)]
-    df = spark.createDataFrame(rows, "g long, simhash long, file_id long")
-    out = grouped_rank_scalable(df, ["g"], ["simhash", "file_id"],
-                                num_partitions=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
-    assert "rangepartitioning" not in plan.lower(), (
-        "live range exchange in the stitched-rank plan — branch pids may "
-        f"diverge:\n{plan}")
-
-
 def test_neighbor_window_orders_by_simhash(spark):
     """Members with identical simhash must still pair (adjacent ranks)."""
     cfg = DedupConfig(bucket_cap=4, neighbor_window=1)

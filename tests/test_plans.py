@@ -172,25 +172,6 @@ def test_reservoir_union_orders_plan_all_jvm(spark):
     assert "Window" in plan
 
 
-def test_varopt_scaled_plan_shape(spark):
-    """Two-phase VarOpt: partial kernel on the scan side (MapInPandas
-    BEFORE the group exchange), merge kernel after (FlatMapGroupsIn*);
-    no window over the full input."""
-    from pyspark.sql import functions as F
-
-    from sparkdedup.operators.sampling import varopt_sample_scaled
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    df = varopt_sample_scaled(o, k=20, weight_col="o_totalprice",
-                              group_cols=["o_orderpriority"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsIn" in plan or "ApplyInPandas" in plan
-    mp = plan.index("MapInPandas")
-    fg = max(plan.find("FlatMapGroupsInPandas"), plan.find("ApplyInPandas"))
-    assert fg < mp  # plans print top-down: the merge sits ABOVE the partial
-
-
 def test_incremental_band_join_broadcasts_delta(spark):
     """Incremental dedup's defining plan property: the band join
     broadcasts the DELTA band table (BuildRight) so the corpus side —

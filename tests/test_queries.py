@@ -86,10 +86,9 @@ def test_hll_accuracy_vs_exact(spark):
 
 def test_bloom_filter_operator(spark):
     """DataFrame-native bloom (reference filters/): no false negatives,
-    bounded false-positive rate, mergeable via bit_or union."""
+    bounded false-positive rate."""
     from sparkdedup.operators.membership import (bloom_build,
-                                                 bloom_might_contain,
-                                                 bloom_union)
+                                                 bloom_might_contain)
 
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     keys = df.select("o_custkey").distinct()
@@ -103,40 +102,6 @@ def test_bloom_filter_operator(spark):
         "id", "o_custkey")
     neg = bloom_might_contain(bloom, probes, "o_custkey").toPandas()
     assert neg["might_contain"].mean() < 0.05
-    # union with itself is idempotent
-    merged = bloom_union(bloom, bloom)
-    assert merged.count() == bloom.count()
-
-
-def test_bloom_intersect_invert(spark):
-    """Bloom set algebra (reference filters/bloom_filter.go:537-558):
-    intersect = bitwise AND (superset of true intersection, still no false
-    negatives for common members); invert = bitwise NOT with trailing-word
-    mask (invert(invert(x)) == x)."""
-    from sparkdedup.operators.membership import (bloom_build, bloom_intersect,
-                                                 bloom_invert,
-                                                 bloom_might_contain)
-
-    a_keys = spark.range(0, 600).withColumnRenamed("id", "k")
-    b_keys = spark.range(400, 1000).withColumnRenamed("id", "k")
-    a = bloom_build(a_keys, "k", 600, fpp=0.01).cache()
-    b = bloom_build(b_keys, "k", 600, fpp=0.01).cache()
-    inter = bloom_intersect(a, b).cache()
-    # no false negatives on the true intersection [400, 600)
-    common = spark.range(400, 600).withColumnRenamed("id", "k")
-    res = bloom_might_contain(inter, common, "k").toPandas()
-    assert res["might_contain"].all()
-    # definitely-absent keys stay absent (bitwise AND can only clear bits)
-    far = spark.range(50_000, 51_000).withColumnRenamed("id", "k")
-    neg_a = bloom_might_contain(a, far, "k").toPandas().set_index("k")
-    neg_i = bloom_might_contain(inter, far, "k").toPandas().set_index("k")
-    assert (neg_i["might_contain"] <= neg_a.loc[neg_i.index,
-                                                "might_contain"]).all()
-    # double inversion restores the exact bitmap
-    twice = bloom_invert(bloom_invert(a))
-    orig = {(r["word_idx"]): r["bits"] for r in a.collect()}
-    back = {(r["word_idx"]): r["bits"] for r in twice.collect()}
-    assert orig == back
 
 
 def test_cosine_pairs_blocked_matches_brute(spark):
@@ -237,26 +202,21 @@ def test_kmv_distinct_agg_array_of_longs(spark):
     assert (rel < 0.1).all(), m
 
 
-def test_doc_idmap_matches_signature_file_id(spark):
-    """_doc_idmap's skinny kernel must produce the SAME file_id the full
-    signature kernel assigns — it exists to replace sigs-derived idmaps
-    in the LSH queries, so divergence would silently drop every
-    candidate pair at the remap join."""
-    from pyspark.sql import functions as F
-
+def test_doc_candidate_pairs_are_doc_ids(spark):
+    """The catalog's LSH queries key signatures by doc id (the path
+    _docs_as_files writes, cast back), so candidate pairs come out as
+    distinct (src < dst) doc ids with no remap: identical texts always
+    share every band."""
     from sparkdedup.config import DedupConfig
-    from sparkdedup.operators.signatures import signature_stage
-    from sparkdedup.queries import _doc_idmap
+    from sparkdedup.operators.lsh import candidate_pairs
+    from sparkdedup.queries import _doc_signatures, _docs_as_files
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
-    files = docs.select(
-        F.lit("docs").alias("repo"),
-        F.col("doc_id").cast("string").alias("path"),
-        F.lit("0").alias("commit"),
-        F.col("lang"), F.col("text").alias("content"))
-    sig_map = {r["path"]: r["file_id"]
-               for r in signature_stage(files, DedupConfig())
-               .select("path", "file_id").collect()}
-    id_map = {str(r["orig_id"]): r["file_id"]
-              for r in _doc_idmap(docs).collect()}
-    assert sig_map == id_map and len(sig_map) == 50
+    words = [" ".join(f"w{i}_{j}" for j in range(40)) for i in range(3)]
+    docs = spark.createDataFrame(
+        [(10, "py", words[0]), (3, "py", words[1]), (7, "py", words[0]),
+         (42, "py", words[1]), (5, "py", words[2])],
+        "doc_id long, lang string, text string")
+    sigs = _doc_signatures(_docs_as_files(docs), DedupConfig()).cache()
+    pairs = {(r["src"], r["dst"])
+             for r in candidate_pairs(sigs, DedupConfig()).collect()}
+    assert pairs == {(3, 42), (7, 10)}

@@ -5,9 +5,8 @@ accuracy envelope, merge invariance, and the Spark two-phase operator."""
 import numpy as np
 import pytest
 
-from sparkdedup.operators.quantile_agg import (_ReqChain, req_agg,
-                                               req_agg_quantiles,
-                                               weighted_quantile)
+from sparkdedup.operators.quantile_agg import (_ReqChain, kll_agg_quantiles,
+                                               req_agg, weighted_quantile)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -97,7 +96,7 @@ def test_spark_operator_exact_invariants(spark):
         wsum = int((np.int64(1) << np.asarray(r["levels"])).sum())
         assert wsum == int(r["n"])
     # tail quantile through the full two-phase pipeline
-    qs = req_agg_quantiles(sk, [0.999], ["l_returnflag"]).toPandas()
+    qs = kll_agg_quantiles(sk, [0.999], ["l_returnflag"]).toPandas()
     exact = (li.groupBy("l_returnflag")
              .agg(F.percentile("l_extendedprice", F.lit(0.999)).alias("p"))
              ).toPandas()

@@ -305,63 +305,8 @@ def test_threshold_matches_mirror_property(spark):
 
 
 # ---------------------------------------------------------------------------
-# scale paths
+# mergeability
 # ---------------------------------------------------------------------------
-
-def test_reservoir_scaled_identical_to_naive(spark):
-    """reservoir_sample_scaled (count + key-threshold prefilter + window
-    over ~boost*k survivors + underfull-group fallback) must return the
-    EXACT same sample as the naive full-group window."""
-    from sparkdedup.operators.sampling import (reservoir_sample,
-                                               reservoir_sample_scaled)
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    for k, seed in [(7, 9001), (3, 42), (25, 7)]:
-        a = reservoir_sample(ev, k=k, group_cols=["event_type"],
-                             seed=seed).toPandas()
-        b = reservoir_sample_scaled(ev, k=k, group_cols=["event_type"],
-                                    seed=seed).toPandas()
-        ka = sorted(map(tuple, a[["event_type", "event_id"]].values))
-        kb = sorted(map(tuple, b[["event_type", "event_id"]].values))
-        assert ka == kb
-    # ungrouped + k larger than some groups (exercises the fallback /
-    # keep-all threshold)
-    a = reservoir_sample(ev, k=11, seed=5).toPandas()
-    b = reservoir_sample_scaled(ev, k=11, seed=5).toPandas()
-    assert sorted(a.event_id) == sorted(b.event_id)
-    # tiny boost forces the prefilter to underfill -> fallback must kick in
-    c = reservoir_sample_scaled(ev, k=50, group_cols=["event_type"],
-                                seed=5, boost=1).toPandas()
-    d = reservoir_sample(ev, k=50, group_cols=["event_type"],
-                         seed=5).toPandas()
-    assert sorted(c.event_id) == sorted(d.event_id)
-
-
-def test_varopt_scaled_ht_identity(spark):
-    """Two-phase VarOpt (per-batch partial -> per-group merge): exact k
-    per group, planted heavies survive both phases with their own weight,
-    and the HT total identity holds exactly through the composition."""
-    from sparkdedup.operators.sampling import varopt_sample_scaled
-
-    rng = np.random.default_rng(7)
-    w = np.concatenate([rng.uniform(1, 2, 1990),
-                        [5000., 4000, 3000, 2000, 1000,
-                         900, 800, 700, 600, 500]])
-    rows = [(int(i), float(x), "g" if i % 2 else "h")
-            for i, x in enumerate(w)]
-    df = (spark.createDataFrame(rows, "id long, w double, grp string")
-          .repartition(8))
-    s = varopt_sample_scaled(df, k=25, weight_col="w",
-                             group_cols=["grp"]).toPandas()
-    assert s.groupby("grp").size().to_dict() == {"g": 25, "h": 25}
-    true = {"g": sum(x for i, x in enumerate(w) if i % 2),
-            "h": sum(x for i, x in enumerate(w) if not i % 2)}
-    for g, part in s.groupby("grp"):
-        assert part.adj_weight.sum() == pytest.approx(true[g], rel=1e-9)
-    kept_heavy = s[(s.adj_weight == s.w) & (s.w >= 500)].w.tolist()
-    assert sorted(kept_heavy, reverse=True) == [
-        5000., 4000, 3000, 2000, 1000, 900, 800, 700, 600, 500]
-
 
 def test_varopt_two_phase_unbiased_numpy():
     """Unbiasedness composes through the two-phase split (tower rule):
