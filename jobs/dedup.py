@@ -9,7 +9,7 @@ Reads files(repo, path, commit, lang, content) — Iceberg when a catalog is
 on the classpath (spark.read.format("iceberg")), parquet otherwise — and
 writes signatures/edges/clusters parquet + metrics under
 <workdir>/<run_key>/ (config hash + --no-containment +
---signature-buckets). Rerunning with the same options resumes from the
+--signature-buckets + the signature and edge schemas). Rerunning with the same options resumes from the
 last completed stage.
 """
 

@@ -38,9 +38,3 @@ def simhash_segmented(
     packed = np.packbits(result_bits, axis=1).view(">u8").ravel().astype(U64)
     out[uniq] = packed
     return out
-
-
-def hamming_distance(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Per-element Hamming distance between two uint64 arrays."""
-    x = a.astype(U64, copy=False) ^ b.astype(U64, copy=False)
-    return np.unpackbits(x.view(np.uint8)).reshape(-1, 64).sum(axis=1)

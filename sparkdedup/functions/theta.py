@@ -254,8 +254,3 @@ def pairwise_kmv_jaccard(
     ident = (inter == ca) & (inter == cb) & (theta_a == theta_b) & ~both_empty
     lb[ident] = est[ident] = ub[ident] = 1.0
     return lb, est, ub, inter
-
-
-def pairwise_minhash_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> np.ndarray:
-    """Fixed-perm MinHash agreement estimate: mean(sig_a == sig_b, axis=1)."""
-    return (sig_a == sig_b).mean(axis=1)

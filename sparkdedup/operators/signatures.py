@@ -9,9 +9,11 @@ calls and `sort_unique`'s per-document sort. The stage computes, per file:
   kmv       - k=128 minimum values of 5-gram shingle hashes (sorted,
               theta semantics: reference theta/hashtable.go:104-116)
   kmv_theta / kmv_count
-  minh      - 128-perm MinHash signature
-  simhash   - 64-bit SimHash
-  bands     - 16 LSH band hashes (murmur3 over each 8-row slice of minh)
+  simhash   - 64-bit SimHash (orders LSH buckets)
+  bands     - 16 LSH band hashes: murmur3 over each 8-row slice of the
+              128-perm MinHash signature, which exists only to feed them
+              and is not stored (verification reads kmv)
+  anchors / probes - winnowed containment anchors and probes
 
 Distribution model: this is the "update" half of the reference's
 update/union split (theta/union.go design seam) — each Arrow batch is an
@@ -42,7 +44,7 @@ SIGNATURE_SCHEMA = (
     "file_id long, repo string, path string, commit string, lang string, "
     "sha string, n_tokens int, n_shingles int, "
     "kmv array<long>, kmv_theta long, kmv_count int, "
-    "minh array<long>, simhash long, bands array<long>, "
+    "simhash long, bands array<long>, "
     "anchors array<long>, probes array<long>"
 )
 
@@ -175,7 +177,6 @@ def compute_signatures_pdf(pdf: pd.DataFrame, cfg: DedupConfig) -> pd.DataFrame:
         "kmv": cells(kmv.view(np.int64), kmv_count),
         "kmv_theta": theta,
         "kmv_count": kmv_count.astype(np.int32),
-        "minh": list(minh.astype(np.int64)),
         "simhash": sim.astype(np.int64),
         "bands": list(bands),
         "anchors": cells(anchors, anchor_counts),

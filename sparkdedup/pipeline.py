@@ -14,8 +14,9 @@ back from parquet also truncates lineage between stages. The stages are
 signatures, edges and clusters. With signature_buckets = B > 1 each
 signature bucket, pmod(xxhash64(repo, path, commit), B), is a stage of
 its own (signatures/bucket=<b>/), so a killed run resumes mid-signatures.
-run_key hashes the config and the pipeline options that change a
-stage's output (enable_containment, signature_buckets).
+run_key hashes the config, the pipeline options that change a stage's
+output (enable_containment, signature_buckets) and the signature and
+edge schemas.
 
 One clock rule: a stage's seconds run from the start of its build to its
 commit. Sub-steps timed inside a build (edges.containment_candidates_s,
@@ -46,8 +47,8 @@ from sparkdedup.operators.components import (connected_components,
 from sparkdedup.operators.containment import (anchor_containment_candidates,
                                               verify_containment)
 from sparkdedup.operators.lsh import candidate_pairs
-from sparkdedup.operators.signatures import signature_stage
-from sparkdedup.operators.verify import verify_candidates
+from sparkdedup.operators.signatures import SIGNATURE_SCHEMA, signature_stage
+from sparkdedup.operators.verify import EDGE_SCHEMA, verify_candidates
 
 
 def _parquet_rows(path: Path) -> int:
@@ -92,11 +93,13 @@ class DedupPipeline:
     @property
     def run_key(self) -> str:
         """Names this run's checkpoint directory: the config hash plus
-        every pipeline option that changes a stage's output, so a rerun
-        with a different option recomputes instead of resuming."""
+        every pipeline option that changes a stage's output, and the
+        signature and edge schemas, so a rerun with a different option or
+        by code writing other columns recomputes instead of resuming."""
         blob = json.dumps({"config": self.cfg.config_hash(),
                            "enable_containment": self.enable_containment,
-                           "signature_buckets": self.signature_buckets},
+                           "signature_buckets": self.signature_buckets,
+                           "schemas": [SIGNATURE_SCHEMA, EDGE_SCHEMA]},
                           sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
@@ -200,9 +203,6 @@ class DedupPipeline:
             "source", F.lit("lsh"))
         exact_e = exact_edges.select(
             "src", "dst", F.lit(1.0).alias("jaccard"),
-            F.lit(1.0).alias("jaccard_lb"), F.lit(1.0).alias("jaccard_ub"),
-            F.lit(1.0).alias("minhash_jaccard"),
-            F.lit(0).cast("int").alias("hamming"),
             F.lit("sha").alias("source"))
         edges = near.unionByName(exact_e)
         if not self.enable_containment:
@@ -229,12 +229,7 @@ class DedupPipeline:
             .select("file_id", "content"))
         cont = verify_containment(cont_cand, fid_content, cfg)
         cont_e = cont.select(
-            "src", "dst",
-            F.lit(None).cast("double").alias("jaccard"),
-            F.lit(None).cast("double").alias("jaccard_lb"),
-            F.lit(None).cast("double").alias("jaccard_ub"),
-            F.lit(None).cast("double").alias("minhash_jaccard"),
-            F.lit(None).cast("int").alias("hamming"),
+            "src", "dst", F.lit(None).cast("double").alias("jaccard"),
             F.lit("containment").alias("source"))
         return (edges.unionByName(cont_e),
                 {"containment_candidates_s": cont_s})

@@ -36,10 +36,10 @@ def test_degenerate_contents_kernel():
     for i in (0, 1, 6):
         assert out.loc[i, "n_shingles"] == 0
         assert out.loc[i, "kmv_count"] == 0
-    # everything else has at least one shingle and a full minhash vector
+    # everything else has at least one shingle and a full set of bands
     for i in (2, 3, 4, 5):
         assert out.loc[i, "n_shingles"] >= 1
-        assert len(out.loc[i, "minh"]) == CFG.num_perms
+        assert len(out.loc[i, "bands"]) == CFG.num_bands
     # null content normalizes to "" -> same sha as the empty doc
     assert out["sha"].nunique() == 6
 

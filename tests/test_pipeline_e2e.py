@@ -52,6 +52,8 @@ def _edge_sets(edges: pd.DataFrame):
 
 
 def test_edges_match_oracle_exactly(pipeline_result, oracle):
+    assert list(pipeline_result["edges"].columns) == [
+        "src", "dst", "jaccard", "source"]
     lsh, sha, cont = _edge_sets(pipeline_result["edges"])
     assert lsh == oracle.lsh_edges
     assert sha == oracle.sha_edges
@@ -240,7 +242,7 @@ def test_signature_stage_batch_invariance(spark, small_corpus):
     s8 = s8.sort_values("file_id").reset_index(drop=True)
     for col in ["sha", "n_tokens", "n_shingles", "kmv_theta", "kmv_count", "simhash"]:
         assert (s1[col] == s8[col]).all(), col
-    for col in ["kmv", "minh", "bands", "anchors", "probes"]:
+    for col in ["kmv", "bands", "anchors", "probes"]:
         for x, y in zip(s1[col], s8[col]):
             assert np.array_equal(np.asarray(x), np.asarray(y)), col
 
@@ -278,7 +280,7 @@ def test_signature_kernel_matches_oracle_per_doc(window):
         "commit": "c0", "lang": "python", "content": texts})
     got = compute_signatures_pdf(pdf, cfg)
     want = _file_signatures(pdf, cfg)
-    assert len(got.columns) == 16
+    assert len(got.columns) == 15
     for col in ["repo", "path", "commit", "lang"]:
         assert list(got[col]) == list(pdf[col]), col
     want["kmv_count"] = want["kmv"].map(len)
@@ -287,7 +289,7 @@ def test_signature_kernel_matches_oracle_per_doc(window):
                 "kmv_count", "simhash"]:  # compared as 64-bit words
         assert [int(x) % 2**64 for x in got[col]] == \
             [int(x) % 2**64 for x in want[col]], col
-    for col in ["kmv", "minh", "bands", "anchors", "probes"]:
+    for col in ["kmv", "bands", "anchors", "probes"]:
         for i, (x, y) in enumerate(zip(got[col], want[col])):
             assert np.array_equal(np.asarray(x).view(np.int64),
                                   np.asarray(y).astype(np.uint64)

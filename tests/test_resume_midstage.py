@@ -135,3 +135,31 @@ def test_bucket_count_change_recomputes_signatures(spark, small_corpus,
     got = res.clusters.toPandas().sort_values(
         "file_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(got, ref_out)
+
+
+def test_schema_change_recomputes(spark, small_corpus, tmp_path,
+                                  monkeypatch):
+    """Stage outputs written under another signature or edge schema (an
+    older release's columns) are not resumed: run_key hashes both
+    schemas, so the rerun recomputes every stage."""
+    import sparkdedup.pipeline as pl
+
+    files = spark.createDataFrame(small_corpus.files.head(40))
+    wd = str(tmp_path / "wd")
+    first = DedupPipeline(spark, CFG, workdir=wd)
+    first.run(files)
+    key = first.run_key
+
+    monkeypatch.setattr(pl, "SIGNATURE_SCHEMA",
+                        pl.SIGNATURE_SCHEMA + ", minh array<long>")
+    pipe = DedupPipeline(spark, CFG, workdir=wd)
+    sig_key = pipe.run_key
+    assert sig_key != key
+    res = pipe.run(files)
+    assert not any("resumed" in res.metrics["stages"][s]
+                   for s in ("signatures", "edges", "clusters"))
+
+    monkeypatch.undo()
+    monkeypatch.setattr(pl, "EDGE_SCHEMA", pl.EDGE_SCHEMA + ", hamming int")
+    assert DedupPipeline(spark, CFG, workdir=wd).run_key not in (
+        key, sig_key)

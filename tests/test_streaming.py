@@ -92,7 +92,7 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
     assert len(b) == len(s) == 50
     assert (b["sha"] == s["sha"]).all()
     assert (b["simhash"] == s["simhash"]).all()
-    for x, y in zip(b["minh"], s["minh"]):
+    for x, y in zip(b["bands"], s["bands"]):
         assert list(x) == list(y)
 
 

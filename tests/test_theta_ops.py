@@ -18,7 +18,6 @@ from sparkdedup.functions.theta import (
     kmv_intersect,
     kmv_union,
     pairwise_kmv_jaccard,
-    pairwise_minhash_jaccard,
     screen_hashes,
 )
 
@@ -121,9 +120,3 @@ def test_pairwise_matches_single():
         assert lb[i] == pytest.approx(slb, abs=1e-12)
         assert est[i] == pytest.approx(sest, abs=1e-12)
         assert ub[i] == pytest.approx(sub, abs=1e-12)
-
-
-def test_pairwise_minhash_jaccard():
-    a = np.array([[1, 2, 3, 4]], np.uint64)
-    b = np.array([[1, 2, 9, 4]], np.uint64)
-    assert pairwise_minhash_jaccard(a, b)[0] == 0.75

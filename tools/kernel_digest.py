@@ -5,7 +5,10 @@ into Arrow-sized batches (perfbench/replay.py::arrow_sized_batches) and
 prints:
 
   sig    digest of compute_signatures_pdf over all batches, rows sorted
-         by file_id, all 16 columns
+         by file_id, all 15 columns
+  <col>  the same digest over each signature column alone, one line per
+         column, so two trees whose column sets differ can still show
+         that every shared column hashes the same
   gram   digest of word_gram_hashes_batch (n=3) over the same batches
   best   best-of-5 seconds of compute_signatures_pdf over all batches
 
@@ -68,8 +71,8 @@ def main() -> None:
         table = getattr(workloads, name)(args.seed).table
         batches = list(arrow_sized_batches(table))
         sigs = pd.concat([compute_signatures_pdf(b, cfg) for b in batches])
-        sig = frame_digest(sigs.sort_values("file_id", kind="stable")
-                           .reset_index(drop=True))
+        sigs = sigs.sort_values("file_id", kind="stable").reset_index(drop=True)
+        sig = frame_digest(sigs)
         g = hashlib.sha256()
         row0 = 0
         for b in batches:
@@ -86,6 +89,8 @@ def main() -> None:
         print(f"{name:<17} rows={len(table):<5} batches={len(batches):<3} "
               f"sig={sig} gram={g.hexdigest()[:16]} best={best:.3f}s",
               flush=True)
+        for col in sigs.columns:
+            print(f"  {col:<15} {frame_digest(sigs[[col]])}", flush=True)
 
 
 if __name__ == "__main__":
