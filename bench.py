@@ -208,7 +208,8 @@ def main() -> int:
 
     probe_before = _bracket_probe()
     t0 = time.time()
-    pipe = DedupPipeline(spark, DedupConfig(), workdir=None,
+    workdir = tempfile.mkdtemp(prefix="sparkdedup_bench_pipeline_")
+    pipe = DedupPipeline(spark, DedupConfig(), workdir=workdir,
                          num_partitions=cpus)
     res = pipe.run(files)
     n_clusters = res.clusters.count()
@@ -243,6 +244,7 @@ def main() -> int:
                         for n, v in samples.items()}
 
     shutil.rmtree(stage_dir, ignore_errors=True)
+    shutil.rmtree(workdir, ignore_errors=True)
 
     # r5 verdict ask #3: epoch-normalize IN-FILE so cross-round per-query
     # comparisons need no manual acquittal. Normalized = warm /

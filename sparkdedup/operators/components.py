@@ -36,16 +36,6 @@ from sparkdedup.config import DedupConfig
 _ROUND_SCHEMA = "c long, p long, closed boolean, unchanged boolean"
 
 
-def local_checkpoint_rdd(df: DataFrame):
-    """The JVM RDD behind a bare localCheckpoint frame, else None (a
-    parquet scan, or a plan with operators above the checkpoint)."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() != "LogicalRDD":
-        return None
-    rdd = plan.rdd()
-    return rdd if rdd.isLocallyCheckpointed() else None
-
-
 def release_local_checkpoint(df: DataFrame) -> None:
     """Release a superseded localCheckpoint's storage blocks NOW.
 
@@ -54,10 +44,12 @@ def release_local_checkpoint(df: DataFrame) -> None:
     superseded rounds explicitly or a long session accumulates one block
     set per iteration per run. Only call once nothing will read the
     DataFrame again: a localCheckpoint has no lineage to recompute from.
-    A frame that is not checkpoint-backed is left alone."""
-    rdd = local_checkpoint_rdd(df)
-    if rdd is not None:
-        rdd.unpersist(False)
+    A frame that is not a bare checkpoint (a parquet scan, or a plan with
+    operators above the checkpoint) is left alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isLocallyCheckpointed()):
+        plan.rdd().unpersist(False)
 
 
 def _union_find_round(batches):

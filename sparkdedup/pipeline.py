@@ -8,9 +8,10 @@ Stage graph (SURVEY.md §3.4):
 Stage protocol, decided in one place (`DedupPipeline._stage`): stage
 <name> writes parquet under
   <workdir>/<run_key>/<name>/   committed by Spark's own _SUCCESS
-and a sidecar <workdir>/<run_key>/_metrics/<name>.json. A rerun reads
-back every stage whose _SUCCESS exists (resume mid-pipeline); reading
-back from parquet also truncates lineage between stages. The stages are
+and a sidecar <workdir>/<run_key>/_metrics/<name>.json, and the run goes
+on from the parquet read back, so lineage stops at every stage. A rerun
+reads back every stage whose _SUCCESS exists (resume mid-pipeline). A
+workdir is required: a stage is only ever stored this way. The stages are
 signatures, edges and clusters. With signature_buckets = B > 1 each
 signature bucket, pmod(xxhash64(repo, path, commit), B), is a stage of
 its own (signatures/bucket=<b>/), so a killed run resumes mid-signatures.
@@ -19,7 +20,7 @@ output (enable_containment, signature_buckets) and the signature and
 edge schemas.
 
 One clock rule: a stage's seconds run from the start of its build to its
-commit. Sub-steps timed inside a build (edges.containment_candidates_s,
+read-back. Sub-steps timed inside a build (edges.containment_candidates_s,
 clusters.cc_seconds) are part of their stage's seconds. Over the same span
 a stage counts its codegen_compiles (Janino classes compiled, i.e. codegen
 cache misses; near 0 on a warm session) and tags its Spark jobs with the
@@ -27,7 +28,9 @@ description sparkdedup:<name>.
 
 Exact duplicates are collapsed BEFORE LSH (groupBy sha, keep min file_id):
 this removes the largest skew source (identical files all landing in the
-same buckets) and shrinks every downstream shuffle.
+same buckets) and shrinks every downstream shuffle. One cached frame holds
+every signature with its sha representative; its rep rows feed LSH and
+its other rows are the exact edges.
 """
 
 from __future__ import annotations
@@ -42,8 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdedup.config import DedupConfig
-from sparkdedup.operators.components import (connected_components,
-                                              local_checkpoint_rdd)
+from sparkdedup.operators.components import connected_components
 from sparkdedup.operators.containment import (anchor_containment_candidates,
                                               verify_containment)
 from sparkdedup.operators.lsh import candidate_pairs
@@ -73,13 +75,13 @@ class PipelineResult:
 
 class DedupPipeline:
     def __init__(self, spark: SparkSession, cfg: DedupConfig,
-                 workdir: str | None = None,
+                 workdir: str,
                  num_partitions: int | None = None,
                  enable_containment: bool = True,
                  signature_buckets: int = 1):
         self.spark = spark
         self.cfg = cfg
-        self.workdir = Path(workdir) if workdir else None
+        self.workdir = Path(workdir)
         self.num_partitions = num_partitions
         self.enable_containment = enable_containment
         # >1: the signature stage runs as B independently-committed bucket
@@ -103,35 +105,18 @@ class DedupPipeline:
                           sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
-    def _stage_dir(self, stage: str) -> Path | None:
-        if self.workdir is None:
-            return None
+    def _stage_dir(self, stage: str) -> Path:
         return self.workdir / self.run_key / stage
-
-    def _is_done(self, stage: str) -> bool:
-        d = self._stage_dir(stage)
-        return d is not None and (d / "_SUCCESS").exists()
 
     def _write_metrics(self, stage: str, payload: dict) -> None:
         """Record a stage's metrics; a stage computed by this run (not
         resumed) also gets its sidecar _metrics/<stage>.json."""
         self.metrics["stages"][stage] = payload
-        if self.workdir is None or payload.get("resumed"):
+        if payload.get("resumed"):
             return
         path = self._stage_dir("_metrics") / f"{stage}.json"
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_text(json.dumps(payload, indent=2))
-
-    def _checkpoint(self, df: DataFrame, stage: str) -> tuple[DataFrame, int]:
-        """Write stage output to parquet and read it back (lineage cut +
-        resume point); without a workdir, localCheckpoint instead.
-        Returns the read-back frame and its row count."""
-        d = self._stage_dir(stage)
-        if d is None:
-            out = df.localCheckpoint()
-            return out, out.count()
-        df.write.mode("overwrite").parquet(str(d))
-        return self.spark.read.parquet(str(d)), _parquet_rows(d)
 
     def _compiles(self) -> int:
         """Classes Janino has compiled in this JVM so far: one per
@@ -141,38 +126,41 @@ class DedupPipeline:
 
     def _stage(self, name: str, build) -> DataFrame:
         """Resume stage `name` if its _SUCCESS exists; otherwise run
-        build() -> (frame, sub-step numbers), checkpoint the frame and
-        record its rows, the seconds and the codegen compiles from the
-        start of the build to the commit, and the sub-step numbers. Its
-        Spark jobs are described as sparkdedup:<name>; the caller's job
+        build() -> (frame, sub-step numbers), write the frame as parquet
+        to the stage dir and read it back. Records the rows (from the
+        parquet footers, no scan job), the seconds and the codegen
+        compiles from the start of the build to the read-back, and the
+        sub-step numbers. Its Spark jobs, the read-back's schema job
+        included, are described as sparkdedup:<name>; the caller's job
         group stays (a setJobGroup attribution still holds) and its
         description comes back after."""
-        if self._is_done(name):
+        d = self._stage_dir(name)
+        if (d / "_SUCCESS").exists():
             self._write_metrics(name, {"resumed": True})
-            return self.spark.read.parquet(str(self._stage_dir(name)))
+            return self.spark.read.parquet(str(d))
         t0, c0 = time.time(), self._compiles()
         sc = self.spark.sparkContext
         caller = sc.getLocalProperty("spark.job.description")
         sc.setLocalProperty("spark.job.description", f"sparkdedup:{name}")
         try:
             df, sub = build()
-            out, rows = self._checkpoint(df, name)
+            df.write.mode("overwrite").parquet(str(d))
+            out = self.spark.read.parquet(str(d))
         finally:
             sc.setLocalProperty("spark.job.description", caller)
         self._write_metrics(name, {
-            "rows": rows, "seconds": round(time.time() - t0, 3),
+            "rows": _parquet_rows(d), "seconds": round(time.time() - t0, 3),
             "codegen_compiles": self._compiles() - c0, **sub})
         return out
 
     # -- stages --------------------------------------------------------------
 
     def _signatures(self, files: DataFrame) -> DataFrame:
-        """The signatures stage, or with a workdir and B > 1 buckets, B
-        bucket stages read back as one frame. The signatures entry then
-        totals rows, seconds and compiles over the buckets this run
-        computed."""
+        """The signatures stage, or with B > 1 buckets, B bucket stages
+        read back as one frame. The signatures entry then totals rows,
+        seconds and compiles over the buckets this run computed."""
         cfg, B = self.cfg, self.signature_buckets
-        if self.workdir is None or B == 1:
+        if B == 1:
             return self._stage("signatures", lambda: (
                 signature_stage(files, cfg, self.num_partitions), {}))
         bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(B))
@@ -267,18 +255,13 @@ class DedupPipeline:
             ids.add(it.next()._1())
         return ids
 
-    def _sweep_persisted(self, before: set[int],
-                         keep: list[DataFrame]) -> None:
-        """Release every RDD this run persisted except the live stage
-        outputs (r6 verdict ask #4). Safe at end of run(): every stage
-        output has been materialized to parquet or its own checkpoint, so
-        intermediates (CC rounds, containment candidates, LSH bucket
-        sizes) are unreachable by any future plan."""
-        # a parquet-backed stage output has no persisted RDD to keep
-        keep_ids = {rdd.id() for rdd in map(local_checkpoint_rdd, keep)
-                    if rdd is not None}
+    def _sweep_persisted(self, before: set[int]) -> None:
+        """Release every RDD this run persisted. Safe at the end of run():
+        every stage output is read back from parquet, so the
+        intermediates (the last CC round, the containment candidates)
+        are unreachable by any future plan."""
         sc = self.spark.sparkContext._jsc.sc()
-        for rid in self._persistent_ids() - before - keep_ids:
+        for rid in self._persistent_ids() - before:
             sc.unpersistRDD(rid, False)
 
     def run(self, files: DataFrame) -> PipelineResult:
@@ -286,28 +269,26 @@ class DedupPipeline:
         persisted_before = self._persistent_ids()
         sigs = self._signatures(files)
 
-        # exact-sha pre-cluster: representative per sha = min file_id;
-        # exact edges rep -> member
-        reps = sigs.groupBy("sha").agg(F.min("file_id").alias("rep"))
-        exact_edges = (
-            sigs.join(reps, "sha")
-            .filter(F.col("file_id") != F.col("rep"))
-            .select(F.col("rep").alias("src"), F.col("file_id").alias("dst"))
-        )
-        # rep_sigs feeds four consumers (banding, both verify sides, the
-        # containment index) and the banding range exchange reads it twice
-        # (boundary sample, then shuffle): cache it so the sha groupBy +
-        # semi-join run once; unpersisted once the edges stage (its last
-        # consumer) has committed — r6 verdict nit #1.
-        rep_sigs = sigs.join(
-            reps.select(F.col("rep").alias("file_id")), "file_id",
-            "left_semi").cache()
+        # exact-sha pre-cluster: every signature with its sha's
+        # representative (min file_id). Its rep rows feed four consumers
+        # (banding, both verify sides, the containment index), and the
+        # banding range exchange reads them twice (boundary sample, then
+        # shuffle); its other rows are the exact edges rep -> member.
+        # Cached so the sha aggregation and join run once; unpersisted
+        # once the edges stage, its last consumer, has committed.
+        with_rep = sigs.join(
+            sigs.groupBy("sha").agg(F.min("file_id").alias("rep")),
+            "sha").cache()
+        is_rep = F.col("file_id") == F.col("rep")
+        rep_sigs = with_rep.filter(is_rep).select(*sigs.columns)
+        exact_edges = with_rep.filter(~is_rep).select(
+            F.col("rep").alias("src"), F.col("file_id").alias("dst"))
         edges = self._stage("edges", lambda: self._edges(
             files, sigs, rep_sigs, exact_edges))
-        rep_sigs.unpersist()
+        with_rep.unpersist()
         clusters = self._stage("clusters", lambda: self._clusters(sigs, edges))
 
-        self._sweep_persisted(persisted_before, [sigs, edges, clusters])
+        self._sweep_persisted(persisted_before)
         self.metrics["total_seconds"] = round(time.time() - t_start, 3)
         self.metrics["codegen_compiles"] = self._compiles() - c_start
         self.metrics["config_hash"] = self.cfg.config_hash()

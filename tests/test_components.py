@@ -12,7 +12,6 @@ import pytest
 
 from sparkdedup.config import DedupConfig
 from sparkdedup.operators.components import (cc_round, connected_components,
-                                              local_checkpoint_rdd,
                                               release_local_checkpoint)
 
 COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -105,11 +104,13 @@ def test_round_plan_one_shuffle(spark):
 
 
 def test_release_only_touches_checkpoints(spark):
-    plain = spark.range(4)
-    assert local_checkpoint_rdd(plain) is None
+    plain = spark.range(4).cache()
+    plain.count()
     release_local_checkpoint(plain)  # no-op, does not raise
+    assert plain.storageLevel.useMemory
+    plain.unpersist()
     ckpt = spark.range(4).localCheckpoint()
-    rdd = local_checkpoint_rdd(ckpt)
-    assert rdd is not None and rdd.getStorageLevel().useMemory()
+    rdd = ckpt._jdf.queryExecution().analyzed().rdd()
+    assert rdd.isLocallyCheckpointed() and rdd.getStorageLevel().useMemory()
     release_local_checkpoint(ckpt)
     assert not rdd.getStorageLevel().useMemory()

@@ -10,10 +10,10 @@ from sparkdedup.pipeline import DedupPipeline
 
 
 @pytest.mark.parametrize("tau", [0.5, 0.85])
-def test_pipeline_matches_oracle_at_tau(spark, small_corpus, tau):
+def test_pipeline_matches_oracle_at_tau(spark, small_corpus, tau, tmp_path):
     cfg = DedupConfig(jaccard_threshold=tau)
     files = spark.createDataFrame(small_corpus.files.head(120))
-    res = DedupPipeline(spark, cfg, workdir=None,
+    res = DedupPipeline(spark, cfg, workdir=str(tmp_path),
                         enable_containment=False).run(files)
     edges = res.edges.toPandas()
     p_lsh = set(zip(edges[edges.source == "lsh"].src,
@@ -28,12 +28,12 @@ def test_config_hash_keys_checkpoints(tmp_path, spark, small_corpus):
     assert a.config_hash() != b.config_hash()
 
 
-def test_pipeline_matches_oracle_alt_banding(spark, small_corpus):
+def test_pipeline_matches_oracle_alt_banding(spark, small_corpus, tmp_path):
     """Different banding geometry (32 bands x 4 rows) — parity must hold
     at any valid config, not just the default."""
     cfg = DedupConfig(num_bands=32, rows_per_band=4, jaccard_threshold=0.6)
     files = spark.createDataFrame(small_corpus.files.head(100))
-    res = DedupPipeline(spark, cfg, workdir=None,
+    res = DedupPipeline(spark, cfg, workdir=str(tmp_path),
                         enable_containment=False).run(files)
     edges = res.edges.toPandas()
     p_lsh = set(zip(edges[edges.source == "lsh"].src,

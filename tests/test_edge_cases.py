@@ -44,14 +44,14 @@ def test_degenerate_contents_kernel():
     assert out["sha"].nunique() == 6
 
 
-def test_degenerate_pipeline(spark):
+def test_degenerate_pipeline(spark, tmp_path):
     from sparkdedup.pipeline import DedupPipeline
 
     files = spark.createDataFrame(_pdf([
         "", "", "x", "x", "real content words here " * 30,
         "real content words here " * 30, "日本語 テスト " * 40, None,
     ]))
-    res = DedupPipeline(spark, CFG, workdir=None).run(files)
+    res = DedupPipeline(spark, CFG, workdir=str(tmp_path)).run(files)
     clusters = res.clusters.toPandas()
     assert len(clusters) == 8
     cl = clusters.set_index("file_id")["cluster_id"]

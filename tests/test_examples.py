@@ -49,7 +49,7 @@ def test_theta_example_flow():
     assert est == pytest.approx(1 / 3, rel=0.10)
 
 
-def test_dedup_example_flow(spark):
+def test_dedup_example_flow(spark, tmp_path):
     """Five-line end-to-end dedup: the repo's README usage."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.pipeline import DedupPipeline
@@ -59,7 +59,7 @@ def test_dedup_example_flow(spark):
           f"def f{i % 3}(): return " + (f"word{i % 3}_" + "%d " % (i % 3)) * 50)
          for i in range(12)],
         "repo string, path string, commit string, lang string, content string")
-    res = DedupPipeline(spark, DedupConfig(), workdir=None).run(files)
+    res = DedupPipeline(spark, DedupConfig(), workdir=str(tmp_path)).run(files)
     clusters = res.clusters.toPandas()
     # 12 files with 3 distinct contents -> 3 clusters
     assert clusters.cluster_id.nunique() == 3

@@ -186,7 +186,7 @@ def test_warm_run_reuses_generated_classes(spark, small_corpus,
     assert warm <= 0.1 * cold, (cold, warm)
 
 
-def test_stage_describes_its_jobs(spark):
+def test_stage_describes_its_jobs(spark, tmp_path):
     """Jobs a stage runs carry the description sparkdedup:<stage>; the
     caller's job group stays, and its description comes back after."""
     sc = spark.sparkContext
@@ -199,7 +199,7 @@ def test_stage_describes_its_jobs(spark):
 
     sc.setJobGroup("caller-group", "caller")
     try:
-        DedupPipeline(spark, CFG)._stage("probe", build)
+        DedupPipeline(spark, CFG, workdir=str(tmp_path))._stage("probe", build)
         assert seen == {"description": "sparkdedup:probe",
                         "group": "caller-group"}
         assert sc.getLocalProperty("spark.job.description") == "caller"
@@ -221,10 +221,11 @@ def test_resume_from_checkpoint_identical(spark, small_corpus, pipeline_result):
     pd.testing.assert_frame_equal(c1, c2)
 
 
-def test_determinism_two_runs(spark, small_corpus, pipeline_result):
+def test_determinism_two_runs(spark, small_corpus, pipeline_result,
+                              tmp_path):
     """A fresh run (no checkpoints) reproduces identical clusters."""
     files = spark.createDataFrame(small_corpus.files)
-    pipe = DedupPipeline(spark, CFG, workdir=None)
+    pipe = DedupPipeline(spark, CFG, workdir=str(tmp_path))
     res2 = pipe.run(files)
     c1 = pipeline_result["clusters"].sort_values("file_id").reset_index(drop=True)
     c2 = res2.clusters.toPandas().sort_values("file_id").reset_index(drop=True)
@@ -298,7 +299,8 @@ def test_signature_kernel_matches_oracle_per_doc(window):
         assert list(got["probes"].map(len)) == [0, 0, 0, 0, 0, 1, 4, 0, 1]
 
 
-def test_cluster_representatives_from_materialized_table(spark, pipeline_result):
+def test_cluster_representatives_from_materialized_table(
+        spark, pipeline_result, tmp_path):
     """Production rep-selection path: reads the MATERIALIZED clusters
     table (no closure recomputation) and picks argmax(n_tokens) per
     cluster with min-file_id tie-break, exactly one rep per cluster."""
@@ -307,7 +309,7 @@ def test_cluster_representatives_from_materialized_table(spark, pipeline_result)
     sigs = spark.createDataFrame(
         pipeline_result["signatures"][["file_id", "n_tokens"]])
     clusters = spark.createDataFrame(pipeline_result["clusters"])
-    pipe = DedupPipeline(spark, CFG)
+    pipe = DedupPipeline(spark, CFG, workdir=str(tmp_path))
     reps = pipe.representatives(
         PipelineResult(signatures=sigs, edges=None, clusters=clusters)
     ).toPandas()
@@ -328,16 +330,22 @@ def test_cluster_representatives_from_materialized_table(spark, pipeline_result)
 
 
 def test_run_leaves_no_cached_rdds(spark, small_corpus, tmp_path_factory):
-    """r6 verdict ask #4: a pipeline run must not leak persisted storage.
-    With a workdir every stage output is parquet-backed, so after run()
-    (which releases superseded CC rounds inline and sweeps its remaining
-    intermediates) the session's persistent-RDD map must be EMPTY —
-    no GC required."""
-    workdir = tmp_path_factory.mktemp("dedup_leak")
+    """A pipeline run must not leak persisted storage: every stage output
+    is read back from parquet, and run() releases superseded CC rounds
+    inline and sweeps its remaining intermediates, so after each of two
+    runs in one session (into two workdirs) the session's persistent-RDD
+    map is the one from before the first run: run() releases its own
+    storage, without help from the garbage collector."""
+    import gc
+
     files = spark.createDataFrame(small_corpus.files)
-    pipe = DedupPipeline(spark, CFG, workdir=str(workdir))
-    before = pipe._persistent_ids()  # other tests share this session
-    res = pipe.run(files)
-    res.clusters.count()
-    leaked = pipe._persistent_ids() - before
-    assert not leaked, f"persisted RDDs leaked by pipeline run: {leaked}"
+    pipes = [DedupPipeline(spark, CFG, workdir=str(
+        tmp_path_factory.mktemp("dedup_leak"))) for _ in range(2)]
+    # Spark holds the map's RDDs weakly: drop earlier tests' unreachable
+    # ones first, so a collection during the runs cannot shrink the map
+    gc.collect()
+    spark._jvm.System.gc()
+    before = pipes[0]._persistent_ids()  # other tests share this session
+    for i, pipe in enumerate(pipes):
+        pipe.run(files).clusters.count()
+        assert pipe._persistent_ids() == before, f"run {i}"

@@ -66,7 +66,9 @@ def test_substr_short_side_bounded(spark):
 
 
 def test_verify_joins_are_hash_joins(spark):
-    """Pair-signature joins must be hash/sort-merge equi-joins."""
+    """Pair-signature joins are shuffled hash joins: the shuffle_hash
+    hints fix the strategy at any size (SCALE.md stage 4), so neither a
+    sort-merge nor a broadcast plan may replace them."""
     from sparkdedup.config import DedupConfig
     from sparkdedup.operators.lsh import candidate_pairs
     from sparkdedup.operators.signatures import signature_stage
@@ -79,8 +81,8 @@ def test_verify_joins_are_hash_joins(spark):
     edges = verify_candidates(candidate_pairs(sigs, DedupConfig()), sigs,
                               DedupConfig())
     plan = edges._jdf.queryExecution().executedPlan().toString()
-    assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            or "BroadcastHashJoin" in plan)
+    assert plan.count("ShuffledHashJoin") == 2, plan
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
     assert "CartesianProduct" not in plan
 
 

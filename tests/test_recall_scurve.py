@@ -64,12 +64,13 @@ def _expected_recall(j: float, tau: float, bands: int, rows: int,
 
 
 @pytest.fixture(scope="module")
-def band_run(spark):
+def band_run(spark, tmp_path_factory):
     files = generate_threshold_band_corpus(n_pairs=120, n_distractors=80,
                                            seed=1234)
     jt = _true_jaccards(files)
     plain = files[["repo", "path", "commit", "lang", "content"]]
-    res = DedupPipeline(spark, CFG, workdir=None).run(
+    res = DedupPipeline(spark, CFG, workdir=str(
+        tmp_path_factory.mktemp("band_run"))).run(
         spark.createDataFrame(plain))
     clusters = res.clusters.toPandas()
     oracle = run_oracle(plain, CFG)
